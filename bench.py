@@ -64,17 +64,20 @@ def fit_blob(
     (0.05 s / 0.5 CPU-s quantization is far inside the documented noise
     bands), then shed entries — CPU twins of the FASTEST queries first,
     because the driver's round-over-round comparison (PERF) runs on the
-    WALL map, down to a floor that keeps the slowest quarter's cpu
-    visible for the trend story; only then drop whole wall entries,
-    fastest first — the slow ones are the story. (r14: the r13 behavior
-    of dropping wall+cpu pairs together surfaced only ~31-34 of 215
-    wall entries — query NAMES dominate entry cost, so aligned maps
+    WALL map, down to a floor of ``n // 14`` cpu twins (the biggest CPU
+    burners) kept visible for the trend story; only then drop whole wall
+    entries, fastest first — the slow ones are the story. (r14: the r13
+    behavior of dropping wall+cpu pairs together surfaced only ~31-34 of
+    215 wall entries — query NAMES dominate entry cost, so aligned maps
     halve wall coverage; full per-query pairs live untruncated in
-    BENCH_DETAIL.json.) Totals (`value`, `cpu_value`), counts, and the
+    BENCH_DETAIL.json.) Any change, rounding included, sets `detail` to
+    that file; `cpu_omitted` / `queries_omitted` count the missing cpu /
+    wall entries. Totals (`value`, `cpu_value`), counts, and the
     detail-file hash are never touched.
     """
     line = json.dumps(result, separators=(",", ":"))
     if len(line) > budget:
+        result["detail"] = "BENCH_DETAIL.json"
         result["queries"] = {k: round(v, 2) for k, v in timings.items()}
         line = json.dumps(result, separators=(",", ":"))
     if len(line) > budget:
@@ -94,16 +97,15 @@ def fit_blob(
         cpu = result.get("queries_cpu")
         if cpu and len(cpu) > cpu_floor:
             # shed the fastest query's cpu twin, keep its wall entry
-            fastest = min(cpu, key=cpu.get)
-            del cpu[fastest]
-            result["cpu_omitted"] = len(timings) - len(cpu)
+            del cpu[min(cpu, key=cpu.get)]
         else:
             fastest = min(result["queries"], key=result["queries"].get)
             del result["queries"][fastest]
             if cpu:
                 cpu.pop(fastest, None)
             result["queries_omitted"] = len(timings) - len(result["queries"])
-        result["detail"] = "BENCH_DETAIL.json"
+        if cpu is not None and len(cpu) < len(timings):
+            result["cpu_omitted"] = len(timings) - len(cpu)
         line = json.dumps(result, separators=(",", ":"))
     return line
 

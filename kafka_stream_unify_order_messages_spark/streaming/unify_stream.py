@@ -1,7 +1,11 @@
 """Streaming order-event unification: the reference's stateful core as a
 Structured Streaming ``applyInPandasWithState`` operator.
 
-Parity targets (file:line into /root/reference):
+The buffer state machine lives once, in ``step`` (data arrival) and
+``close`` (expiry). All four streaming topologies run it: this module's
+processing- and event-time state functions and unify_tws.py's two
+processors, which only load and store state and arm their engine's timeout
+or timer. Parity targets (file:line into the reference app):
 - 5 s processing-time buffer per order, started on first event
   (OrderProjectionTopology.java:29, OrderProjectionTransformer.java:60-68)
 - stale-flush-on-arrival: an event hitting an already-expired buffer flushes
@@ -120,7 +124,96 @@ def _decode_state(value: tuple) -> tuple[int, dict[str, dict[str, Any]]]:
 
 
 def _load_state(state: GroupState) -> tuple[int, dict[str, dict[str, Any]]]:
-    return _decode_state(state.get)
+    return _decode_state(state.get) if state.exists else (0, {})
+
+
+def close(order_id: str, events: dict[str, dict[str, Any]]) -> list[tuple]:
+    """Close a buffer through the completeness gate: a buffer holding every
+    required type becomes one (order_id, n_events, payload) emission, an
+    incomplete one is dropped silently
+    (OrderProjectionTransformer.java:110-116).
+    """
+    if all(t in events for t in REQUIRED):
+        return [(order_id, len(events), _payload_json(order_id, events))]
+    return []
+
+
+def step(
+    order_id: str,
+    deadline: int,
+    events: dict[str, dict[str, Any]],
+    pdfs: Iterator[pd.DataFrame],
+    now: int,
+    buffer_ms: int,
+    event_time: bool = False,
+) -> tuple[int, dict[str, dict[str, Any]], list[tuple]]:
+    """The buffer state machine every streaming topology runs: one data
+    arrival for one order. ``now`` is the wall clock (processing time) or
+    the watermark (event time). Returns ``(deadline, events, emissions)``;
+    empty ``events`` means no buffer is open. The callers only load and
+    store state and arm their engine's timeout or timer at ``deadline``.
+    """
+    emissions: list[tuple] = []
+    # stale-flush-on-arrival: an expired-or-corrupt buffer is flushed
+    # BEFORE the new events are considered
+    if not events or deadline <= 0 or now >= deadline:
+        emissions = close(order_id, events)
+        deadline, events = 0, {}
+    for pdf in pdfs:
+        for row in pdf.itertuples(index=False):
+            ev = row._asdict()
+            etype = ev.get("type")
+            if etype not in REQUIRED:
+                continue  # unknown type: ignored (addEvent parity)
+            if event_time:
+                ev_ms = ev.get("event_ms")
+                if pd.isna(ev_ms):
+                    continue  # ts_col failed to parse upstream
+            if not events:
+                # new buffer: first event's arrival (or event) time plus
+                # the window; later events never extend it
+                deadline = (int(ev_ms) if event_time else now) + buffer_ms
+            if etype not in events:
+                events[etype] = ev  # first-wins duplicate suppression
+    return deadline, events, emissions
+
+
+def _frames(emissions: list[tuple]) -> Iterator[pd.DataFrame]:
+    if emissions:
+        yield pd.DataFrame(emissions, columns=UNIFY_OUTPUT_SCHEMA.names)
+
+
+def _make_fn(buffer_ms: int, event_time: bool, now_ms=None):
+    def fn(
+        key: tuple[str],
+        pdfs: Iterator[pd.DataFrame],
+        state: GroupState,
+    ) -> Iterator[pd.DataFrame]:
+        order_id = key[0]
+        if state.hasTimedOut:
+            # punctuator path: deadline passed with no new data
+            emissions = close(order_id, _load_state(state)[1])
+            state.remove()
+        else:
+            now = state.getCurrentWatermarkMs() if event_time else now_ms()
+            deadline, events = _load_state(state)
+            deadline, events, emissions = step(
+                order_id, deadline, events, pdfs, now, buffer_ms, event_time
+            )
+            if events:
+                state.update(_state_tuple(deadline, events))
+                if event_time:
+                    # a late first event seeds a deadline behind the
+                    # watermark, which GroupState refuses: clamp, so the
+                    # next watermark advance expires the buffer
+                    state.setTimeoutTimestamp(max(deadline, now))
+                else:
+                    state.setTimeoutDuration(max(deadline - now, 1))
+            elif state.exists:
+                state.remove()
+        yield from _frames(emissions)
+
+    return fn
 
 
 def make_unify_fn(buffer_ms: int = 5000, clock=None):
@@ -128,63 +221,8 @@ def make_unify_fn(buffer_ms: int = 5000, clock=None):
     deterministic tests; defaults to wall clock like the reference
     (context.currentSystemTimeMs, OrderProjectionTransformer.java:43).
     """
-    now_ms = clock or (lambda: int(time.time() * 1000))
-
-    def fn(
-        key: tuple[str],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        order_id = key[0]
-        emissions: list[tuple[str, int, str]] = []
-
-        def emit_if_complete(events: dict[str, dict[str, Any]]) -> None:
-            # completeness gate: silently drop incomplete buffers
-            if all(t in events for t in REQUIRED):
-                emissions.append(
-                    (order_id, len(events), _payload_json(order_id, events))
-                )
-
-        if state.hasTimedOut:
-            # punctuator path: deadline passed with no new data
-            _, events = _load_state(state)
-            emit_if_complete(events)
-            state.remove()
-        else:
-            now = now_ms()
-            if state.exists:
-                deadline, events = _load_state(state)
-                # stale-flush-on-arrival: expired-or-corrupt buffer is
-                # flushed BEFORE the new event is considered
-                if not events or deadline <= 0 or now >= deadline:
-                    emit_if_complete(events)
-                    deadline, events = 0, {}
-            else:
-                deadline, events = 0, {}
-
-            for pdf in pdfs:
-                for row in pdf.itertuples(index=False):
-                    ev = row._asdict()
-                    if ev.get("type") not in REQUIRED:
-                        continue  # unknown type: ignored (addEvent parity)
-                    if not events:
-                        deadline = now + buffer_ms  # new buffer, new deadline
-                    if ev["type"] in events:
-                        continue  # first-wins duplicate suppression
-                    events[ev["type"]] = ev
-
-            if events:
-                state.update(_state_tuple(deadline, events))
-                state.setTimeoutDuration(max(deadline - now, 1))
-            elif state.exists:
-                state.remove()
-
-        if emissions:
-            yield pd.DataFrame(
-                emissions, columns=["order_id", "n_events", "payload"]
-            )
-
-    return fn
+    wall_clock = lambda: int(time.time() * 1000)  # noqa: E731
+    return _make_fn(buffer_ms, False, clock or wall_clock)
 
 
 def make_unify_fn_event_time(buffer_ms: int = 5000):
@@ -194,64 +232,10 @@ def make_unify_fn_event_time(buffer_ms: int = 5000):
     same projections — the deterministic-reprocessing mode the reference
     (wall-clock punctuation, OrderProjectionTransformer.java:35,43) cannot
     offer. Requires ``withWatermark`` on the event-time column and rows
-    carrying ``event_ms`` (epoch millis).
+    carrying ``event_ms`` (epoch millis); rows with a null ``event_ms``
+    are skipped.
     """
-
-    def fn(
-        key: tuple[str],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        order_id = key[0]
-        emissions: list[tuple[str, int, str]] = []
-
-        def emit_if_complete(events: dict[str, dict[str, Any]]) -> None:
-            if all(t in events for t in REQUIRED):
-                emissions.append(
-                    (order_id, len(events), _payload_json(order_id, events))
-                )
-
-        if state.hasTimedOut:
-            _, events = _load_state(state)
-            emit_if_complete(events)
-            state.remove()
-        else:
-            if state.exists:
-                deadline, events = _load_state(state)
-            else:
-                deadline, events = 0, {}
-            watermark = state.getCurrentWatermarkMs()
-            # watermark passed the deadline before this event arrived:
-            # the old buffer is stale — flush it, then seed a fresh one
-            if events and watermark >= deadline > 0:
-                emit_if_complete(events)
-                deadline, events = 0, {}
-
-            for pdf in pdfs:
-                for row in pdf.itertuples(index=False):
-                    ev = row._asdict()
-                    ev_ms = ev.pop("event_ms", None)
-                    ev.pop("_event_time", None)
-                    if ev.get("type") not in REQUIRED:
-                        continue
-                    if not events:
-                        deadline = int(ev_ms) + buffer_ms
-                    if ev["type"] in events:
-                        continue
-                    events[ev["type"]] = ev
-
-            if events:
-                state.update(_state_tuple(deadline, events))
-                state.setTimeoutTimestamp(deadline)
-            elif state.exists:
-                state.remove()
-
-        if emissions:
-            yield pd.DataFrame(
-                emissions, columns=["order_id", "n_events", "payload"]
-            )
-
-    return fn
+    return _make_fn(buffer_ms, True)
 
 
 def unify_stream_event_time(

@@ -2,18 +2,11 @@
 (``transformWithStateInPandas``, Spark 4): the reference's punctuator as
 explicit per-key timers.
 
-Same semantics as ``unify_stream`` (see unify_stream.py for the full
-parity list into /root/reference):
+Same semantics as ``unify_stream``: both processors run the shared
+buffer state machine ``unify_stream.step`` / ``close`` and add only the
+v2 bookkeeping around it (ValueState, timers).
 
-- 5 s processing-time buffer started on first event
-  (OrderProjectionTopology.java:29, OrderProjectionTransformer.java:60-68)
-- stale-flush-on-arrival (OrderProjectionTransformer.java:45-58)
-- first-wins per type (OrderProjection.java:55-58)
-- emit only at expiry; incomplete buffers dropped silently
-  (OrderProjectionTransformer.java:90-124)
-- output ordered created -> placed -> cancelled (OrderProjection.java:74-84)
-
-Why a second implementation: the v1 ``applyInPandasWithState`` timeout is
+Why a second topology: the v1 ``applyInPandasWithState`` timeout is
 a single implicit per-key deadline; TWS timers are explicit and
 addressable — ``registerTimer(deadline)`` IS the reference's
 ``context.schedule`` + per-buffer deadline, and ``deleteTimer`` lets the
@@ -55,7 +48,6 @@ deterministically in tests/test_unify_tws.py without any runner.
 from __future__ import annotations
 
 from collections.abc import Iterator
-from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -75,17 +67,20 @@ from kafka_stream_unify_order_messages_spark.schemas import (
     PENDING_ORDER_STATE_SCHEMA,
 )
 from kafka_stream_unify_order_messages_spark.streaming.unify_stream import (
-    REQUIRED,
     UNIFY_OUTPUT_SCHEMA,
     _decode_state,
-    _payload_json,
+    _frames,
     _state_tuple,
+    close,
+    step,
 )
 
 
 class OrderUnifyProcessor(StatefulProcessor):
     """Per-order buffering processor. One ValueState row (same schema as
     the v1 operator) + one timer per live buffer."""
+
+    event_time = False
 
     def __init__(self, buffer_ms: int = 5000):
         self.buffer_ms = buffer_ms
@@ -97,16 +92,6 @@ class OrderUnifyProcessor(StatefulProcessor):
     def close(self) -> None:
         pass
 
-    # -- emission ----------------------------------------------------------
-
-    def _emit_if_complete(
-        self, order_id: str, events: dict[str, dict[str, Any]]
-    ) -> list[tuple[str, int, str]]:
-        # completeness gate: silently drop incomplete buffers
-        if all(t in events for t in REQUIRED):
-            return [(order_id, len(events), _payload_json(order_id, events))]
-        return []
-
     # -- data arrival ------------------------------------------------------
 
     def handleInputRows(
@@ -115,48 +100,30 @@ class OrderUnifyProcessor(StatefulProcessor):
         rows: Iterator[pd.DataFrame],
         timerValues: TimerValues,
     ) -> Iterator[pd.DataFrame]:
-        order_id = key[0]
-        now = timerValues.getCurrentProcessingTimeInMs()
-        emissions: list[tuple[str, int, str]] = []
-
-        if self.state.exists():
-            deadline, events = _decode_state(self.state.get())
-            # stale-flush-on-arrival: an expired-or-corrupt buffer is
-            # flushed BEFORE the new event is considered, and its timer is
-            # CANCELLED — otherwise the superseded deadline would fire
-            # later and expire the fresh buffer early. (The v1 operator
-            # cannot cancel; this is the TWS-native expression of
-            # OrderProjectionTransformer.java:45-58.)
-            if not events or deadline <= 0 or now >= deadline:
-                emissions.extend(self._emit_if_complete(order_id, events))
-                if deadline > 0:
-                    self.handle.deleteTimer(deadline)
-                deadline, events = 0, {}
+        if self.event_time:
+            now = timerValues.getCurrentWatermarkInMs()
         else:
-            deadline, events = 0, {}
-
-        for pdf in rows:
-            for row in pdf.itertuples(index=False):
-                ev = row._asdict()
-                if ev.get("type") not in REQUIRED:
-                    continue  # unknown type: ignored (addEvent parity)
-                if not events:
-                    # new buffer: deadline = first event arrival + window
-                    deadline = now + self.buffer_ms
-                    self.handle.registerTimer(deadline)
-                if ev["type"] in events:
-                    continue  # first-wins duplicate suppression
-                events[ev["type"]] = ev
-
+            now = timerValues.getCurrentProcessingTimeInMs()
+        old, events = (
+            _decode_state(self.state.get()) if self.state.exists() else (0, {})
+        )
+        deadline, events, emissions = step(
+            key[0], old, events, rows, now, self.buffer_ms, self.event_time
+        )
+        # a new deadline means a new buffer: CANCEL the superseded timer,
+        # or it would fire later and expire the fresh buffer early (the v1
+        # operator cannot cancel). A timer at a past event time (late first
+        # event) fires on the next micro-batch.
+        if deadline != old:
+            if old > 0:
+                self.handle.deleteTimer(old)
+            if events:
+                self.handle.registerTimer(deadline)
         if events:
             self.state.update(_state_tuple(deadline, events))
         elif self.state.exists():
             self.state.clear()
-
-        if emissions:
-            yield pd.DataFrame(
-                emissions, columns=["order_id", "n_events", "payload"]
-            )
+        yield from _frames(emissions)
 
     # -- timer expiry (the punctuator path) --------------------------------
 
@@ -166,7 +133,6 @@ class OrderUnifyProcessor(StatefulProcessor):
         timerValues: TimerValues,
         expiredTimerInfo: ExpiredTimerInfo,
     ) -> Iterator[pd.DataFrame]:
-        order_id = key[0]
         if not self.state.exists():
             return
         deadline, events = _decode_state(self.state.get())
@@ -175,12 +141,8 @@ class OrderUnifyProcessor(StatefulProcessor):
         # it (defensive guard; deleteTimer makes this near-unreachable)
         if deadline > expiredTimerInfo.getExpiryTimeInMs():
             return
-        emissions = self._emit_if_complete(order_id, events)
         self.state.clear()
-        if emissions:
-            yield pd.DataFrame(
-                emissions, columns=["order_id", "n_events", "payload"]
-            )
+        yield from _frames(close(key[0], events))
 
 
 class OrderUnifyEventProcessor(OrderUnifyProcessor):
@@ -194,62 +156,7 @@ class OrderUnifyEventProcessor(OrderUnifyProcessor):
     TWS-native improvement that the stale-flush path CANCELS the
     superseded timer instead of guarding at expiry."""
 
-    def handleInputRows(
-        self,
-        key: tuple,
-        rows: Iterator[pd.DataFrame],
-        timerValues: TimerValues,
-    ) -> Iterator[pd.DataFrame]:
-        order_id = key[0]
-        wm = timerValues.getCurrentWatermarkInMs()
-        emissions: list[tuple[str, int, str]] = []
-
-        if self.state.exists():
-            deadline, events = _decode_state(self.state.get())
-            # watermark passed the deadline before this event arrived:
-            # the old buffer is stale — flush it (emit-if-complete),
-            # cancel its timer, seed fresh
-            if not events or deadline <= 0 or wm >= deadline:
-                emissions.extend(self._emit_if_complete(order_id, events))
-                if deadline > 0:
-                    self.handle.deleteTimer(deadline)
-                deadline, events = 0, {}
-        else:
-            deadline, events = 0, {}
-
-        for pdf in rows:
-            for row in pdf.itertuples(index=False):
-                ev = row._asdict()
-                ev_ms = ev.pop("event_ms", None)
-                ev.pop("_event_time", None)
-                if ev.get("type") not in REQUIRED:
-                    continue  # unknown type: ignored (addEvent parity)
-                if ev_ms is None:
-                    # ts_col failed to_timestamp parsing upstream: whether
-                    # a null-event-time row reaches the processor at all is
-                    # engine-version-dependent (the watermark filter
-                    # normally drops it) — skip rather than crash on
-                    # int(None) if one ever does
-                    continue
-                if not events:
-                    # new buffer: deadline = first event's EVENT time +
-                    # window; a timer at a past event-time (late first
-                    # event) fires on the next micro-batch
-                    deadline = int(ev_ms) + self.buffer_ms
-                    self.handle.registerTimer(deadline)
-                if ev["type"] in events:
-                    continue  # first-wins duplicate suppression
-                events[ev["type"]] = ev
-
-        if events:
-            self.state.update(_state_tuple(deadline, events))
-        elif self.state.exists():
-            self.state.clear()
-
-        if emissions:
-            yield pd.DataFrame(
-                emissions, columns=["order_id", "n_events", "payload"]
-            )
+    event_time = True
 
 
 def unify_stream_tws_event_time(

@@ -97,3 +97,30 @@ def test_blob_without_cpu_twin_still_truncates():
     assert "queries_cpu" not in parsed and "cpu_value" not in parsed
     assert parsed["value"] == round(sum(timings.values()), 3)
     assert parsed["queries_omitted"] == len(timings) - len(parsed["queries"])
+
+
+def test_cpu_omitted_counts_twins_popped_with_their_wall_entry():
+    # cpu order opposite to wall order: the cpu floor keeps the twins of
+    # the FASTEST walls, so the wall drops pop them too; the count must
+    # follow every pop, not only the cpu-shedding ones
+    result, timings = _mk(300)
+    names = list(timings)
+    result["queries_cpu"] = {
+        k: round(timings[names[-1 - i]] * 2, 2) for i, k in enumerate(names)
+    }
+    parsed = json.loads(fit_blob(result, timings))
+    assert set(parsed["queries_cpu"]) <= set(parsed["queries"])
+    assert parsed["cpu_omitted"] == len(timings) - len(parsed["queries_cpu"])
+
+
+def test_rounding_alone_still_points_at_the_detail_file():
+    # values long enough that only 2dp rounding is needed to fit: nothing
+    # is dropped, but the blob no longer holds the exact values
+    result, timings = _mk(40, cpu=False)
+    result["queries"] = timings = {k: v + 1 / 3 for k, v in timings.items()}
+    line = fit_blob(result, timings, budget=1500)
+    parsed = json.loads(line)
+    assert len(line) <= 1500
+    assert len(parsed["queries"]) == 40
+    assert "queries_omitted" not in parsed
+    assert parsed["detail"] == "BENCH_DETAIL.json"

@@ -165,6 +165,10 @@ class TestThrottledGc:
         g.collect()
         assert seen == [2, 2]
 
+    @pytest.mark.skipif(
+        not Path("/proc/self/statm").exists(),
+        reason="RSS is read from /proc/self/statm (Linux only)",
+    )
     def test_rss_bytes_reads_proc(self):
         rss = pyspark_fastdaemon._rss_bytes()
         assert rss > 1 << 20  # this test process surely resides in >1 MB

@@ -1,9 +1,13 @@
 """Property-based and generator-golden tests (SURVEY.md §5.4).
 
-1. hypothesis over the streaming state function: ANY interleaving /
-   duplication / batch-splitting of a lifecycle inside the buffer window
-   yields exactly one canonical projection; any proper subset of types
-   yields nothing.
+1. The shared spec of the buffer state machine: hypothesis delivery plans
+   (interleavings, duplicates, unknown types, batch splits, clock or
+   watermark advances) run through all four streaming adapters — v1
+   processing/event time on a real ``GroupState``, TWS processing/event
+   time on a fake handle. Every adapter must emit exactly what an
+   independent model of the reference emits, and arm exactly the model's
+   deadline after every batch; single-window plans must also match the
+   batch twin.
 2. The seeded scenario generator (G1-G5) against an independent pure-
    Python oracle of the unification semantics, through the BATCH operator.
 """
@@ -20,78 +24,242 @@ from kafka_stream_unify_order_messages_spark.sources.generator import (
     generate_order_events,
     order_events_df,
 )
-from kafka_stream_unify_order_messages_spark.streaming import make_unify_fn
-
-from tests.test_unify_stream import COLS, Clock, FakeState
-
-REQUIRED = ("created", "placed", "cancelled")
-
-
-# ---------------------------------------------------------------------------
-# 1. hypothesis on the state function
-# ---------------------------------------------------------------------------
-
-# a lifecycle delivery plan: which types arrive (possibly repeated), in
-# which order; each event also gets a batch-boundary flag
-deliveries = st.lists(
-    st.tuples(
-        st.sampled_from(REQUIRED + ("bogus",)),
-        st.booleans(),  # True -> start a new micro-batch before this event
-    ),
-    min_size=1,
-    max_size=12,
+from kafka_stream_unify_order_messages_spark.streaming import (
+    make_unify_fn,
+    make_unify_fn_event_time,
+)
+from kafka_stream_unify_order_messages_spark.streaming.unify_tws import (
+    OrderUnifyEventProcessor,
+    OrderUnifyProcessor,
 )
 
+from tests.test_unify_stream import COLS, FakeState, armed_timeout, group_state
+from tests.test_unify_tws import (
+    FakeExpiredTimer,
+    FakeHandle,
+    FakeTimerValues,
+    FakeWatermarkTimerValues,
+)
 
-def run_plan(plan):
-    """Feed the delivery plan through the state fn, then fire the timeout.
-    Returns (emissions, first_arrival_details_per_type)."""
-    clock = Clock(50_000)
-    fn = make_unify_fn(buffer_ms=5000, clock=clock)
-    state = FakeState()
+REQUIRED = ("created", "placed", "cancelled")
+BUFFER_MS = 5000
+T0 = 50_000
 
-    batches: list[list[tuple]] = [[]]
-    for i, (etype, new_batch) in enumerate(plan):
-        if new_batch and batches[-1]:
-            batches.append([])
-        batches[-1].append(
-            ("o", etype, f"t{i}", json.dumps({"arrival": i}))
+
+# ---------------------------------------------------------------------------
+# 1. the shared spec: one plan, four adapters, one model
+# ---------------------------------------------------------------------------
+
+# a delivery plan: which types arrive (possibly repeated), in which order,
+# each with the gap before it: 0 keeps it in the current micro-batch, a
+# positive gap starts a new batch that much later on the clock (or
+# watermark); ``tick`` runs an empty batch at that time first, so expired
+# buffers time out instead of being flushed by the arrival
+TYPES = st.sampled_from(REQUIRED + ("bogus",))
+deliveries = st.lists(
+    st.tuples(TYPES, st.sampled_from((0, 100)), st.just(False)),
+    min_size=1,
+    max_size=12,
+)  # inside one buffer window: at most 1.1 s of gaps
+GAPS = st.sampled_from((0, 100, 2_000, 5_000, 6_000))  # 5 s: on the deadline
+windows = st.lists(st.tuples(TYPES, GAPS, st.booleans()), min_size=1, max_size=16)
+
+
+def batches_of(plan):
+    """Plan -> [(time_ms, [(type, arrival index)])]; an empty list is a
+    tick. A final tick far past every deadline drains open buffers."""
+    now, batches = T0, []
+    for i, (etype, gap, tick) in enumerate(plan):
+        if gap or not batches:
+            now += gap
+            if tick:
+                batches.append((now, []))
+            batches.append((now, []))
+        batches[-1][1].append((etype, i))
+    return batches + [(now + 10 * BUFFER_MS, [])]
+
+
+def model(batches):
+    """The reference's semantics, independent of ``step``: emissions as
+    [[(type, arrival)] in priority order], and after each batch the open
+    buffer's deadline (None when no buffer is open)."""
+    emitted, deadlines, buf, deadline = [], [], {}, None
+    for now, rows in batches:
+        if rows and buf and now >= deadline:  # stale-flush-on-arrival
+            emitted.append(buf)
+            buf = {}
+        for etype, i in rows:
+            if etype in REQUIRED:
+                if not buf:
+                    deadline = now + BUFFER_MS
+                buf.setdefault(etype, i)
+        if buf and deadline < now:  # the punctuator
+            emitted.append(buf)
+            buf = {}
+        deadlines.append(deadline if buf else None)
+    complete = [[(t, b[t]) for t in REQUIRED] for b in emitted if len(b) == 3]
+    return complete, deadlines
+
+
+def frame(rows, now, event_time):
+    pdf = pd.DataFrame(
+        [("o", t, f"t{i}", json.dumps({"arrival": i})) for t, i in rows],
+        columns=COLS,
+    )
+    # event-time rows carry their event time; here it is the batch's
+    # watermark, so both time modes see the same deadlines
+    return pdf.assign(event_ms=now, _event_time=now) if event_time else pdf
+
+
+class V1:
+    """v1 ``applyInPandasWithState`` engine loop around one key: a fresh
+    real ``GroupState`` per call; the key times out in a batch without
+    its rows once the armed timeout is behind the batch time/watermark."""
+
+    def __init__(self, event_time):
+        self.event_time = event_time
+        self.fn = (
+            make_unify_fn_event_time(BUFFER_MS)
+            if event_time
+            else make_unify_fn(BUFFER_MS, clock=lambda: self.now)
         )
+        self.value = self.timeout = None
 
-    emissions = []
-    for batch in batches:
-        pdfs = iter([pd.DataFrame(batch, columns=COLS)])
-        emissions += list(fn(("o",), pdfs, state))
-        clock.ms += 100  # well inside the window
+    def _call(self, now, pdfs, timed_out=False):
+        self.now = now
+        state = group_state(self.value, now, timed_out, self.event_time)
+        out = list(self.fn(("o",), pdfs, state))
+        self.value = state.getOption
+        self.timeout = armed_timeout(state)
+        return out
 
-    if state.exists:
-        state.hasTimedOut = True
-        emissions += list(fn(("o",), iter([]), state))
+    def feed(self, now, rows):
+        return self._call(now, iter([frame(rows, now, self.event_time)]))
 
-    firsts = {}
-    for i, (etype, _) in enumerate(plan):
-        if etype in REQUIRED and etype not in firsts:
-            firsts[etype] = i
-    return emissions, firsts
+    def tick(self, now):
+        if self.value is None or self.timeout >= now:
+            return []
+        return self._call(now, iter([]), timed_out=True)
+
+    def armed(self):
+        return (self.value[0], [self.timeout]) if self.value else (None, [])
+
+
+class TWS:
+    """v2 ``transformWithStateInPandas`` engine loop around one key: timers
+    behind the batch time/watermark fire once each, oldest first."""
+
+    def __init__(self, event_time):
+        cls = OrderUnifyEventProcessor if event_time else OrderUnifyProcessor
+        self.proc, self.handle = cls(BUFFER_MS), FakeHandle()
+        self.proc.init(self.handle)
+        self.event_time = event_time
+        self.values = FakeWatermarkTimerValues if event_time else FakeTimerValues
+
+    def feed(self, now, rows):
+        pdfs = iter([frame(rows, now, self.event_time)])
+        return list(self.proc.handleInputRows(("o",), pdfs, self.values(now)))
+
+    def tick(self, now):
+        out = []
+        for t in sorted(t for t in self.handle.timers if t < now):
+            self.handle.timers.remove(t)
+            out += self.proc.handleExpiredTimer(
+                ("o",), self.values(now), FakeExpiredTimer(t)
+            )
+        return out
+
+    def armed(self):
+        state = self.handle.state
+        return (state.get()[0] if state.exists() else None, self.handle.timers)
+
+
+ADAPTERS = {
+    "v1": lambda: V1(False),
+    "v1_event_time": lambda: V1(True),
+    "tws": lambda: TWS(False),
+    "tws_event_time": lambda: TWS(True),
+}
+
+
+def decode(frames):
+    return [
+        [(e["type"], e["order_details"]["arrival"]) for e in p["events"]]
+        for df in frames
+        for p in map(json.loads, df["payload"])
+    ]
+
+
+def check_spec(plan):
+    """Run the plan through every adapter; each must match the model's
+    emissions and arm exactly the model's deadline after every batch."""
+    batches = batches_of(plan)
+    want, deadlines = model(batches)
+    for name, make in ADAPTERS.items():
+        adapter, frames = make(), []
+        for (now, rows), deadline in zip(batches, deadlines):
+            if rows:
+                frames += adapter.feed(now, rows)
+            frames += adapter.tick(now)
+            armed = (deadline, [deadline] if deadline else [])
+            assert adapter.armed() == armed, (name, now)
+        assert decode(frames) == want, name
+    return want
 
 
 @settings(max_examples=60, deadline=None)
 @given(deliveries)
 def test_any_interleaving_yields_canonical_projection_or_nothing(plan):
-    emissions, firsts = run_plan(plan)
-    types_seen = set(firsts)
-
-    if types_seen == set(REQUIRED):
-        assert len(emissions) == 1
-        [payload] = [
-            json.loads(p) for df in emissions for p in df["payload"]
-        ]
-        assert [e["type"] for e in payload["events"]] == list(REQUIRED)
-        # first-wins: each emitted event is the FIRST arrival of its type
-        for e in payload["events"]:
-            assert e["order_details"] == {"arrival": firsts[e["type"]]}
+    """Inside one window: a full type set yields exactly one projection
+    in priority order holding each type's FIRST arrival (first-wins); any
+    proper subset yields nothing (completeness gate)."""
+    want = check_spec(plan)
+    firsts = {}
+    for i, (etype, _, _) in enumerate(plan):
+        if etype in REQUIRED:
+            firsts.setdefault(etype, i)
+    if len(firsts) == 3:
+        assert want == [[(t, firsts[t]) for t in REQUIRED]]
     else:
-        assert emissions == []  # proper subset: dropped silently
+        assert want == []
+
+
+@settings(max_examples=150, deadline=None)
+@given(windows)
+def test_tws_processor_matches_v1_semantics(plan):
+    """Across windows: timeouts, stale-flush-on-arrival, deadlines that
+    later events never extend, superseded TWS timers cancelled — the
+    same emissions and armed deadline from all four adapters."""
+    check_spec(plan)
+
+
+@settings(max_examples=4, deadline=None)
+@given(st.lists(deliveries, min_size=1, max_size=25))
+def test_single_window_plans_match_batch_twin(spark, plans):
+    """The batch twin (operators/unify.py) over the same events, one order
+    per plan, emits what the streaming adapters emit."""
+    rows, want = [], {}
+    for k, plan in enumerate(plans):
+        for got in check_spec(plan):
+            want[f"o{k}"] = got
+        rows += [
+            (f"o{k}", etype, i, json.dumps({"arrival": i}))
+            for i, (etype, _, _) in enumerate(plan)
+        ]
+    df = spark.createDataFrame(
+        rows, "order_id string, type string, arrival int, order_details string"
+    )
+    out = unify_events(
+        df, arrival_cols=["arrival"], payload_cols=["type", "order_details"]
+    )
+    got = {
+        r["order_id"]: [
+            (e["type"], json.loads(e["order_details"])["arrival"])
+            for e in r["events"]
+        ]
+        for r in out.collect()
+    }
+    assert got == want
 
 
 # ---------------------------------------------------------------------------
@@ -152,73 +320,6 @@ def test_generator_validation_parity():
         generate_order_events(1, missing_probability=0.5, duplicate_probability=0.5)
     with pytest.raises(ValueError):
         generate_order_events(1, missing_probability=1.5)
-
-
-# ---------------------------------------------------------------------------
-# 3. the SAME interleaving property over the v2 (TWS) processor — both
-# stateful implementations must satisfy identical semantics
-# ---------------------------------------------------------------------------
-
-
-def run_plan_tws(plan):
-    from tests.test_unify_tws import (
-        FakeExpiredTimer,
-        FakeHandle,
-        FakeTimerValues,
-    )
-    from kafka_stream_unify_order_messages_spark.streaming.unify_tws import (
-        OrderUnifyProcessor,
-    )
-
-    proc = OrderUnifyProcessor(buffer_ms=5000)
-    handle = FakeHandle()
-    proc.init(handle)
-    now = 50_000
-
-    batches: list[list[tuple]] = [[]]
-    for i, (etype, new_batch) in enumerate(plan):
-        if new_batch and batches[-1]:
-            batches.append([])
-        batches[-1].append(("o", etype, f"t{i}", json.dumps({"arrival": i})))
-
-    emissions = []
-    for batch in batches:
-        pdfs = iter([pd.DataFrame(batch, columns=COLS)])
-        emissions += list(
-            proc.handleInputRows(("o",), pdfs, FakeTimerValues(now))
-        )
-        now += 100  # well inside the window
-
-    for deadline in list(handle.timers):
-        emissions += list(
-            proc.handleExpiredTimer(
-                ("o",), FakeTimerValues(deadline), FakeExpiredTimer(deadline)
-            )
-        )
-
-    firsts = {}
-    for i, (etype, _) in enumerate(plan):
-        if etype in REQUIRED and etype not in firsts:
-            firsts[etype] = i
-    return emissions, firsts
-
-
-@settings(max_examples=60, deadline=None)
-@given(deliveries)
-def test_tws_processor_matches_v1_semantics(plan):
-    emissions, firsts = run_plan_tws(plan)
-    types_seen = set(firsts)
-
-    if types_seen == set(REQUIRED):
-        assert len(emissions) == 1
-        [payload] = [
-            json.loads(p) for df in emissions for p in df["payload"]
-        ]
-        assert [e["type"] for e in payload["events"]] == list(REQUIRED)
-        for e in payload["events"]:
-            assert e["order_details"] == {"arrival": firsts[e["type"]]}
-    else:
-        assert emissions == []
 
 
 # ---------------------------------------------------------------------------

@@ -6,7 +6,9 @@ Two layers:
 1. Function-level tests drive ``make_unify_fn`` directly with a fake
    ``GroupState`` and an injected clock — fully deterministic, covering the
    tricky wall-clock paths (stale-flush-on-arrival,
-   OrderProjectionTransformer.java:45-58) that are racy end-to-end.
+   OrderProjectionTransformer.java:45-58) that are racy end-to-end. The
+   shared spec in test_properties.py runs the same semantics through all
+   four streaming adapters.
 2. End-to-end tests run file source -> applyInPandasWithState -> memory sink.
    With ProcessingTimeTimeout, Spark schedules micro-batches continuously
    (shouldRunAnotherBatch is always true), so ``processAllAvailable`` never
@@ -25,8 +27,15 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from pyspark.sql import Row
+from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from kafka_stream_unify_order_messages_spark.schemas import (
+    PENDING_ORDER_STATE_SCHEMA,
+)
 from kafka_stream_unify_order_messages_spark.streaming import (
     make_unify_fn,
+    make_unify_fn_event_time,
     unify_stream,
 )
 
@@ -35,6 +44,7 @@ SCHEMA = "order_id string, type string, timestamp string, order_details string"
 BUFFER_MS = 1500
 
 COLS = ["order_id", "type", "timestamp", "order_details"]
+ECOLS = COLS + ["event_ms"]
 
 
 def ev(order_id, etype, seq=0, details=None):
@@ -91,8 +101,36 @@ class Clock:
         return self.ms
 
 
-def run_fn(fn, order_id, rows, state):
-    pdfs = iter([pd.DataFrame(rows, columns=COLS)]) if rows else iter([])
+def group_state(value=None, now_ms=0, timed_out=False, event_time=True):
+    """A real pyspark ``GroupState`` as the engine hands it to one call:
+    state row ``value`` (or none), and ``now_ms`` as the watermark
+    (EventTimeTimeout) or the batch time (ProcessingTimeTimeout). The
+    timeout the call armed is ``armed_timeout(state)``."""
+    return GroupState(
+        optionalValue=Row(*value) if value is not None else None,
+        batchProcessingTimeMs=now_ms,
+        eventTimeWatermarkMs=now_ms if event_time else GroupState.NO_TIMESTAMP,
+        timeoutConf=GroupStateTimeout.EventTimeTimeout
+        if event_time
+        else GroupStateTimeout.ProcessingTimeTimeout,
+        hasTimedOut=timed_out,
+        watermarkPresent=event_time,
+        defined=value is not None,
+        updated=False,
+        removed=False,
+        timeoutTimestamp=GroupState.NO_TIMESTAMP,
+        keyAsUnsafe=b"",
+        valueSchema=PENDING_ORDER_STATE_SCHEMA,
+    )
+
+
+def armed_timeout(state):
+    # what the executor reads back from the Python worker
+    return json.loads(state.json())["timeoutTimestamp"]
+
+
+def run_fn(fn, order_id, rows, state, cols=COLS):
+    pdfs = iter([pd.DataFrame(rows, columns=cols)]) if rows else iter([])
     out = list(fn((order_id,), pdfs, state))
     return pd.concat(out) if out else pd.DataFrame(columns=["order_id", "n_events", "payload"])
 
@@ -220,6 +258,34 @@ def test_fn_empty_buffer_never_stored():
     out = run_fn(fn, "o7", [], state)
     assert out.empty
     assert not state.exists
+
+
+def test_fn_event_time_late_first_event_arms_timeout_at_watermark():
+    # a first event 10 s behind the watermark seeds a deadline (95 000)
+    # the watermark already passed; GroupState refuses a timeout behind
+    # the watermark, so it is armed AT the watermark and the buffer
+    # expires on the next watermark advance
+    fn = make_unify_fn_event_time(buffer_ms=5000)
+    state = group_state(now_ms=100_000)
+    out = run_fn(fn, "o1", [ev("o1", "created", 0) + (90_000,)], state, ECOLS)
+    assert out.empty
+    assert state.get[0] == 95_000
+    assert armed_timeout(state) == 100_000
+
+
+def test_fn_event_time_skips_null_event_time():
+    # a row whose timestamp failed to parse carries a null event_ms:
+    # skipped, never a crash — alone (None) or beside valid rows (NaN)
+    fn = make_unify_fn_event_time(buffer_ms=5000)
+    state = group_state(now_ms=100_000)
+    assert run_fn(fn, "o1", [ev("o1", "created", 0) + (None,)], state, ECOLS).empty
+    assert not state.exists
+    rows = [ev("o1", "created", 0) + (None,), ev("o1", "placed", 1) + (101_000,)]
+    state = group_state(now_ms=100_000)
+    assert run_fn(fn, "o1", rows, state, ECOLS).empty
+    assert state.get[0] == 106_000
+    assert state.get[1] is None  # the null-time created was skipped
+    assert state.get[2][1] == "placed"
 
 
 # ---------------------------------------------------------------------------

@@ -3,7 +3,10 @@ two-layer strategy as test_unify_stream.py —
 
 1. Processor-level tests with fake handle/state/timer objects: fully
    deterministic, covering the wall-clock-racy paths (stale-flush +
-   timer cancellation) that can't be pinned end-to-end.
+   timer cancellation) that can't be pinned end-to-end. The semantics
+   all four topologies share are checked once, for every adapter, by the
+   shared spec in test_properties.py; the tests here pin the TWS side
+   (timers, the stale-timer guard, event-time deadlines).
 2. One end-to-end run (file source -> TWS -> memory sink) under the
    RocksDB state store provider TWS requires, polling the sink with a
    deadline (processing-time mode never quiesces).
@@ -154,55 +157,6 @@ def test_proc_later_events_do_not_extend_deadline_or_add_timers():
     assert handle.timers == [15_000]  # exactly one timer for the buffer
 
 
-def test_proc_expiry_complete_emits_ordered_and_clears():
-    proc, handle = make_proc(buffer_ms=5000)
-    feed(
-        proc,
-        "o1",
-        [ev("o1", "cancelled", 2), ev("o1", "created", 0)],
-        now_ms=10_000,
-    )
-    feed(proc, "o1", [ev("o1", "placed", 1)], now_ms=11_000)
-    out = expire(proc, "o1", 15_000)
-    assert not handle.state.exists()
-    p = payloads(out)["o1"]
-    assert [e["type"] for e in p["events"]] == [
-        "created",
-        "placed",
-        "cancelled",
-    ]
-    assert p["events"][0]["order_details"] == {"seq": 0}
-
-
-def test_proc_expiry_incomplete_drops_silently():
-    proc, handle = make_proc(buffer_ms=5000)
-    feed(proc, "o2", [ev("o2", "created", 0)], now_ms=10_000)
-    out = expire(proc, "o2", 15_000)
-    assert out.empty
-    assert not handle.state.exists()
-
-
-def test_proc_first_wins_across_batches():
-    proc, handle = make_proc(buffer_ms=5000)
-    first = json.dumps({"which": "first"})
-    late = json.dumps({"which": "late"})
-    feed(
-        proc,
-        "o3",
-        [ev("o3", "created", 0, first), ev("o3", "created", 1, late)],
-        now_ms=10_000,
-    )
-    feed(proc, "o3", [ev("o3", "created", 2, late)], now_ms=11_000)
-    feed(
-        proc,
-        "o3",
-        [ev("o3", "placed", 3), ev("o3", "cancelled", 4)],
-        now_ms=12_000,
-    )
-    p = payloads(expire(proc, "o3", 15_000))["o3"]
-    assert p["events"][0]["order_details"] == {"which": "first"}
-
-
 def test_proc_stale_flush_emits_old_buffer_and_cancels_its_timer():
     # the TWS-native edge: the superseded buffer's timer must be DELETED,
     # or it fires at 15 000 and expires the fresh buffer 5 s early
@@ -231,17 +185,6 @@ def test_proc_stale_flush_emits_old_buffer_and_cancels_its_timer():
     assert json.loads(handle.state.get()[1][3]) == {"late": True}
 
 
-def test_proc_stale_flush_incomplete_old_buffer_drops():
-    proc, handle = make_proc(buffer_ms=5000)
-    feed(proc, "o5", [ev("o5", "created", 0)], now_ms=10_000)
-    out = feed(proc, "o5", [ev("o5", "placed", 1)], now_ms=20_000)
-    assert out.empty  # incomplete old buffer dropped silently
-    assert handle.state.get()[0] == 25_000
-    created = handle.state.get()[1]
-    assert created is None or created[1] is None  # no created in new buffer
-    assert handle.state.get()[2][1] == "placed"
-
-
 def test_proc_stale_timer_guard_keeps_fresh_buffer():
     # defensive: an expiry older than the live buffer's deadline is a
     # superseded timer — it must not emit or clear the fresh buffer
@@ -251,13 +194,6 @@ def test_proc_stale_timer_guard_keeps_fresh_buffer():
     assert out.empty
     assert handle.state.exists()
     assert handle.state.get()[0] == 25_000
-
-
-def test_proc_unknown_types_ignored():
-    proc, handle = make_proc(buffer_ms=5000)
-    feed(proc, "o7", [ev("o7", "bogus", 0)], now_ms=10_000)
-    assert not handle.state.exists()
-    assert handle.timers == []  # unknown type alone never starts a buffer
 
 
 # ---------------------------------------------------------------------------
