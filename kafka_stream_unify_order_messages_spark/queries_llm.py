@@ -13,7 +13,10 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from kafka_stream_unify_order_messages_spark.registry import query
-from kafka_stream_unify_order_messages_spark.sources.files import load_table
+from kafka_stream_unify_order_messages_spark.sources.files import (
+    cached,
+    load_table,
+)
 from kafka_stream_unify_order_messages_spark.functions import text as T
 from kafka_stream_unify_order_messages_spark.operators import dedup as D
 from kafka_stream_unify_order_messages_spark.operators import multimodal as M
@@ -2711,11 +2714,7 @@ GROUP BY doc_id
 # (session, dataset) — the counts build (two corpus passes) runs once and
 # downstream consumers read the cached (id, n_bigrams, avg_nll, ppl)
 # rows, which is exactly how a production pipeline shares a trained
-# filter model across queries. Keyed by session id so a dead session's
-# frame is never handed to a live one.
-_LM_SCORES_MEMO: dict = {}
-
-
+# filter model across queries.
 def _lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark import StorageLevel
 
@@ -2723,13 +2722,12 @@ def _lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         bigram_lm_scores,
     )
 
-    key = (id(spark), sf_dir)
-    if key not in _LM_SCORES_MEMO:
-        docs = _load(spark, sf_dir, "documents")
-        _LM_SCORES_MEMO[key] = bigram_lm_scores(
-            docs, "doc_id", "text", alpha=0.5
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-    return _LM_SCORES_MEMO[key]
+    return cached(
+        spark, [f"{sf_dir}/documents.parquet"], ("lm_scores", 0.5),
+        lambda: bigram_lm_scores(
+            _load(spark, sf_dir, "documents"), "doc_id", "text", alpha=0.5
+        ).persist(StorageLevel.MEMORY_AND_DISK),
+    )
 
 
 @query("lm_perplexity", _LM_PPL_SQL)
@@ -3512,26 +3510,33 @@ def ann_ivf_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
 # re-scans or re-assigns the corpus — the production geometry SCALING.md
 # measured sublinear (`ivf_trained_serve`). Identical semantics to
 # ann_ivf_fixed, hence the shared oracle (same pattern as knn_join_topk /
-# lsh_topk). The index builds at most once per (process, sf_dir) and is
+# lsh_topk). The index builds at most once per (session, sf_dir) and is
 # reused by later calls — that reuse IS the feature under test, not a
 # timing leak.
-_IVF_INDEX_MEMO: set = set()
-
-
-@query("ann_ivf_served", _ivf_fixed_sql())
-def ann_ivf_served(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _served_index(spark: SparkSession, sf_dir: str, kind: str, save, marker):
+    """(embeddings, persisted ``kind`` index path): built once per cache
+    entry, and again if its ``marker`` dir was deleted from outside."""
     import hashlib
     import os
     import tempfile
 
     emb = _load(spark, sf_dir, "embeddings")
     tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    path = os.path.join(tempfile.gettempdir(), f"sg_ivf_index_{tag}")
-    if path not in _IVF_INDEX_MEMO or not os.path.isdir(path + "/cells"):
-        S.save_ivf_index(
-            emb, path, n_centroids=16, centroids=_ivf_fixed_centroids()
-        )
-        _IVF_INDEX_MEMO.add(path)
+    path = os.path.join(tempfile.gettempdir(), f"sg_{kind}_index_{tag}")
+
+    def build() -> str:
+        save(emb, path, n_centroids=16, centroids=_ivf_fixed_centroids())
+        return path
+
+    cached(spark, [f"{sf_dir}/embeddings.parquet"], (kind, path), build)
+    if not os.path.isdir(os.path.join(path, marker)):
+        build()
+    return emb, path
+
+
+@query("ann_ivf_served", _ivf_fixed_sql())
+def ann_ivf_served(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb, path = _served_index(spark, sf_dir, "ivf", S.save_ivf_index, "cells")
     queries = emb.filter(F.col("vec_id") % 20 == 0)
     return S.search_ivf_index(spark, path, queries, k=5, nprobe=4)
 
@@ -3543,18 +3548,9 @@ def ann_ivf_served(spark: SparkSession, sf_dir: str) -> DataFrame:
 # semantics to ann_ivfpq_fixed, hence the shared oracle.
 @query("ann_ivfpq_served", _ivfpq_fixed_sql())
 def ann_ivfpq_served(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-    import os
-    import tempfile
-
-    emb = _load(spark, sf_dir, "embeddings")
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    path = os.path.join(tempfile.gettempdir(), f"sg_ivfpq_index_{tag}")
-    if path not in _IVF_INDEX_MEMO or not os.path.isdir(path + "/codes"):
-        S.save_ivfpq_index(
-            emb, path, n_centroids=16, centroids=_ivf_fixed_centroids()
-        )
-        _IVF_INDEX_MEMO.add(path)
+    emb, path = _served_index(
+        spark, sf_dir, "ivfpq", S.save_ivfpq_index, "codes"
+    )
     queries = emb.filter(F.col("vec_id") % 20 == 0)
     return S.search_ivfpq_index(spark, path, queries, k=5, nprobe=4)
 

@@ -2063,12 +2063,15 @@ def basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # in the same order (guide §2.3/§2.4: shuffle once, pair locally).
     # Pair blowup per order is (items/order)^2 either way; the bound is
     # the basket size, never |parts|^2.
+    # Nulls as in the oracle: a null part never pairs, so collect_set may
+    # drop it; a null order adds support only (a filter would split the scan)
     sets = li.groupBy(F.col("l_orderkey").alias("okey")).agg(
         F.collect_set("l_partkey").alias("ps")
     )
-    n_orders = sets.agg(F.count(F.lit(1)).alias("n"))
+    n_orders = sets.agg(F.count("okey").alias("n"))
+    keyed_ps = F.when(F.col("okey").isNotNull(), F.col("ps"))
     pairs = (
-        sets.select(F.col("ps"), F.explode("ps").alias("part_a"))
+        sets.select(F.col("ps"), F.explode(keyed_ps).alias("part_a"))
         .select(
             "part_a",
             F.explode(

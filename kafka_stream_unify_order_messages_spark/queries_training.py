@@ -13,7 +13,10 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from kafka_stream_unify_order_messages_spark.registry import query
-from kafka_stream_unify_order_messages_spark.sources.files import load_table
+from kafka_stream_unify_order_messages_spark.sources.files import (
+    cached,
+    load_table,
+)
 from kafka_stream_unify_order_messages_spark.operators import curation as C
 from kafka_stream_unify_order_messages_spark.operators import dedup as D
 
@@ -230,16 +233,13 @@ def bpe_top_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return TK.pair_counts(vocab).orderBy(F.desc("cnt"), F.asc("pair")).limit(20)
 
 
-# train once per dataset: the data is immutable, and "train once, apply
-# many" is the real pipeline shape (the memo is merges only — tiny)
-_BPE_MEMO: dict[str, list[tuple[str, str]]] = {}
-
-
+# train once per dataset and session ("train once, apply many" is the real
+# pipeline shape; the cached value is merges only — tiny)
 def _learned_merges(spark: SparkSession, sf_dir: str) -> list[tuple[str, str]]:
-    if sf_dir not in _BPE_MEMO:
-        docs = _load(spark, sf_dir, "documents")
-        _BPE_MEMO[sf_dir], _ = TK.learn_bpe(docs, n_merges=8)
-    return _BPE_MEMO[sf_dir]
+    return cached(
+        spark, [f"{sf_dir}/documents.parquet"], ("bpe_merges", 8),
+        lambda: TK.learn_bpe(_load(spark, sf_dir, "documents"), n_merges=8)[0],
+    )
 
 
 def _bpe_train_ctes(n_merges: int = 8) -> str:
@@ -980,16 +980,11 @@ FROM documents d LEFT JOIN agg a ON d.doc_id = a.doc_id
 """
 
 
-# train once per dataset (same license as _BPE_MEMO: the corpus is
-# immutable and "train once, apply many" is the production shape)
-_UNIGRAM_MEMO: dict[str, dict] = {}
-
-
 def _learned_unigram(spark: SparkSession, sf_dir: str) -> dict:
-    if sf_dir not in _UNIGRAM_MEMO:
-        docs = _load(spark, sf_dir, "documents")
-        _UNIGRAM_MEMO[sf_dir] = TK.learn_unigram(docs)
-    return _UNIGRAM_MEMO[sf_dir]
+    return cached(
+        spark, [f"{sf_dir}/documents.parquet"], ("unigram",),
+        lambda: TK.learn_unigram(_load(spark, sf_dir, "documents")),
+    )
 
 
 @query("unigram_learn_pieces", _unigram_learn_sql())
@@ -1549,27 +1544,23 @@ JOIN (
     return "".join(parts)
 
 
-# train once per (dataset, k, iters) — same license as _BPE_MEMO /
-# _UNIGRAM_MEMO: kmeans_train, ann_ivf_trained, ann_ivf_topk and
-# semantic_dedup all share the exact-trained model instead of re-paying
-# Lloyd's per query
-_KMEANS_MEMO: dict[tuple, list] = {}
-
-
+# train once per (dataset, session, k, iters), as _learned_merges:
+# kmeans_train, ann_ivf_trained, ann_ivf_topk and semantic_dedup all
+# share the exact-trained model instead of re-paying Lloyd's per query
 def _exact_centroid_rows(
     spark: SparkSession, sf_dir: str, k: int = 8, iters: int = 3
 ) -> list:
-    key = (sf_dir, k, iters)
-    if key not in _KMEANS_MEMO:
-        from kafka_stream_unify_order_messages_spark.operators import (
-            similarity as S,
-        )
+    from kafka_stream_unify_order_messages_spark.operators import (
+        similarity as S,
+    )
 
-        emb = _load(spark, sf_dir, "embeddings")
-        _KMEANS_MEMO[key] = S.kmeans_train_exact(
-            emb, "vec_id", "embedding", 64, k, iters
-        ).collect()
-    return _KMEANS_MEMO[key]
+    return cached(
+        spark, [f"{sf_dir}/embeddings.parquet"], ("kmeans_exact", k, iters),
+        lambda: S.kmeans_train_exact(
+            _load(spark, sf_dir, "embeddings"), "vec_id", "embedding", 64,
+            k, iters,
+        ).collect(),
+    )
 
 
 def _exact_centroid_matrix(

@@ -34,10 +34,10 @@ TABLE_NAMES = [
 ]
 
 
-# (id(session), applicationId, path, min_partitions, mtime, confs) ->
-# DataFrame; plan-reuse only — see load_table's docstring
-_TABLE_MEMO: dict[tuple, DataFrame] = {}
-_TABLE_MEMO_CAP = 512  # unbounded growth pins py4j refs from dead sessions
+# cached()'s store: load_table's plans and the artifacts queries build once
+# and share. Bounded, as entries pin py4j refs (and their sessions).
+_CACHE: dict[tuple, object] = {}
+_CACHE_CAP = 512
 
 # Session confs that change what `spark.read.parquet` RESOLVES (not just how
 # a later action plans it): the V1/V2 source split is baked into the relation
@@ -53,9 +53,9 @@ _READ_CONFS = (
 )
 
 
-def clear_table_memo() -> None:
-    """Drop every memoized table plan (for conf-toggling callers/tests)."""
-    _TABLE_MEMO.clear()
+def clear_cache() -> None:
+    """Drop every cached entry (for callers and tests that need a miss)."""
+    _CACHE.clear()
 
 
 def _conf_val(spark: SparkSession, key: str) -> str:
@@ -67,21 +67,45 @@ def _conf_val(spark: SparkSession, key: str) -> str:
         return ""
 
 
-def _table_mtime(path: str) -> float:
-    """Freshness stamp for the memo key: for a .parquet DIRECTORY the dir
-    mtime alone misses an in-place rewrite of a same-named part file, so
-    take the max over the dir and its entries' mtimes."""
+def _tree_mtime(path: str) -> float:
+    """Max mtime over the path and everything under it: an in-place part
+    file rewrite moves no directory's mtime, nested partitions included."""
     try:
         mtime = os.path.getmtime(path)
+        if os.path.isdir(path):
+            with os.scandir(path) as entries:
+                for entry in entries:
+                    mtime = max(mtime, _tree_mtime(entry.path))
     except OSError:
         return -1.0
-    if os.path.isdir(path):
-        for name in os.listdir(path):
-            try:
-                mtime = max(mtime, os.path.getmtime(os.path.join(path, name)))
-            except OSError:
-                continue
     return mtime
+
+
+def cached(spark: SparkSession, inputs: list, params: tuple, build):
+    """The one cache: ``build()``'s value for this session, input paths
+    and ``params`` (naming the artifact and its arguments), built only on
+    a miss. A hit returns the very object, so a persisted frame is never
+    re-armed. The key holds ``applicationId`` (a restarted session misses),
+    ``id(spark)`` (not reusable while a cached frame keeps its session
+    alive), the ``_READ_CONFS`` values and each input's ``_tree_mtime``.
+    At the cap the oldest entry goes, not the whole store."""
+    key = (
+        spark.sparkContext.applicationId,
+        id(spark),
+        tuple(_conf_val(spark, c) for c in _READ_CONFS),
+        tuple((p, _tree_mtime(p)) for p in inputs),
+        params,
+    )
+    if key in _CACHE:
+        return _CACHE[key]
+    for p in inputs:
+        # else a rebuilt plan still matches frames persisted on old files
+        spark.catalog.refreshByPath(p)
+    value = build()
+    if len(_CACHE) >= _CACHE_CAP:
+        del _CACHE[next(iter(_CACHE))]
+    _CACHE[key] = value
+    return value
 
 
 def _nanos_timestamp_columns(path: str) -> list[str]:
@@ -95,10 +119,11 @@ def _nanos_timestamp_columns(path: str) -> list[str]:
 
 
 def _first_parquet_file(path: str) -> str:
-    if os.path.isdir(path):
-        for name in sorted(os.listdir(path)):
+    for root, dirs, names in os.walk(path):
+        dirs.sort()
+        for name in sorted(names):
             if name.endswith(".parquet"):
-                return os.path.join(path, name)
+                return os.path.join(root, name)
     return path
 
 
@@ -158,48 +183,33 @@ def load_table(
     repartition fires ONLY when the scan yields fewer partitions, so on a
     real many-file dataset it is a no-op and costs no shuffle.
 
-    The returned (lazy, immutable) DataFrame is memoized per
-    (session, path, mtime, min_partitions): ``spark.read.parquet`` costs
-    ~90 ms of driver-side relation resolution (file listing + footer
-    schema read) per call, and a bench sweep re-loads the same static
-    tables ~600 times — ~10s of pure planning wall (round-13
-    measurement). The memo reuses the PLAN only; every action against it
+    The returned (lazy, immutable) DataFrame is held by cached() under
+    its shared key (session, read confs, max mtime over everything under
+    the path) plus min_partitions: ``spark.read.parquet`` costs ~90 ms of
+    driver-side relation resolution (file listing + footer schema read)
+    per call, and a bench sweep re-loads the same static tables ~600
+    times (round-13 measurement). Only the PLAN is reused; every action
     still scans parquet (nothing is persisted), so measurements and the
-    no-result-caching contract are untouched. The mtime key (max over a
-    directory's entries) drops the memo when the file/directory is
-    replaced; the applicationId key drops it when the session is
-    restarted (id() alone can be recycled); the read-conf key
-    (_READ_CONFS) drops it when a caller flips a conf that changes what
-    the read resolves (e.g. the V1/V2 parquet source split).
+    no-result-caching contract are untouched. A rewrite anywhere under
+    the path, a restarted session or a flipped read conf (e.g. the V1/V2
+    parquet source split) each miss.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = f"{sf_dir}/{name}.parquet"
-    key = (
-        id(spark),
-        spark.sparkContext.applicationId,
-        path,
-        min_partitions,
-        _table_mtime(path),
-        tuple(_conf_val(spark, c) for c in _READ_CONFS),
-    )
-    hit = _TABLE_MEMO.get(key)
-    if hit is not None:
-        return hit
-    if len(_TABLE_MEMO) >= _TABLE_MEMO_CAP:
-        _TABLE_MEMO.clear()
-    df = spark.read.parquet(path)
-    for col in _nanos_timestamp_columns(path):
-        # `div` = integer division: ns→us truncation without double-precision
-        # loss (epoch-ns ≈ 1.7e18 does not fit in a double mantissa).
-        df = df.withColumn(
-            col,
-            F.timestamp_micros(F.expr(f"`{col}` div 1000")).cast("timestamp_ntz"),
-        )
-    if min_partitions and df.rdd.getNumPartitions() < min_partitions:
-        df = df.repartition(min_partitions)
-    _TABLE_MEMO[key] = df
-    return df
+
+    def build() -> DataFrame:
+        df = spark.read.parquet(path)
+        for col in _nanos_timestamp_columns(path):
+            # `div` = integer division: ns→us truncation without double-
+            # precision loss (epoch-ns ≈ 1.7e18 overflows a double mantissa)
+            us = F.timestamp_micros(F.expr(f"`{col}` div 1000"))
+            df = df.withColumn(col, us.cast("timestamp_ntz"))
+        if min_partitions and df.rdd.getNumPartitions() < min_partitions:
+            df = df.repartition(min_partitions)
+        return df
+
+    return cached(spark, [path], ("load_table", min_partitions), build)
 
 
 def load_tables(

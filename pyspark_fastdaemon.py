@@ -56,13 +56,17 @@ class _ThrottledGc:
     collections (default 16); ``SPARK_GRAFT_GC_RSS_MB`` — worker RSS
     above which every task runs the full collection regardless of the
     cadence (default 1024), the memory-pressure escape hatch so cyclic
-    garbage from large Arrow batches cannot pile up 16 tasks deep.
+    garbage from large Arrow batches cannot pile up 16 tasks deep. The
+    hatch stays open only while the last full collection found garbage:
+    Arrow buffers count toward RSS but gc cannot free them, so a full
+    collection that finds nothing waits for the next cadence one.
     """
 
     FULL_EVERY = 16
 
     def __init__(self) -> None:
         self._since_full = 0
+        self._full_found = True
         try:
             self.FULL_EVERY = max(
                 1, int(_os.environ.get("SPARK_GRAFT_GC_FULL_EVERY", "16"))
@@ -78,9 +82,13 @@ class _ThrottledGc:
 
     def collect(self, *args):  # signature-compatible with gc.collect
         self._since_full += 1
-        if self._since_full >= self.FULL_EVERY or _rss_bytes() > self._rss_limit:
+        if self._since_full >= self.FULL_EVERY or (
+            self._full_found and _rss_bytes() > self._rss_limit
+        ):
             self._since_full = 0
-            return _gc.collect()
+            found = _gc.collect()
+            self._full_found = bool(found)
+            return found
         return _gc.collect(1)
 
     def __getattr__(self, name):

@@ -21,7 +21,7 @@ def main() -> None:
         "Auto-generated (`python scripts/gen_catalog.py > docs/OPERATORS.md`)."
         " One row per registry query: the driver value-checks the first 50"
         " against DuckDB; the rest are equally oracled (see"
-        " `ORACLE_FULL_r05.txt`) unless marked rows-only."
+        " `ORACLE_STRICT_r30.txt`) unless marked rows-only."
     )
     print()
     print("| # | Query | Check | Defined in |")

@@ -15,6 +15,7 @@ from __future__ import annotations
 import io
 import sys
 from pathlib import Path
+from types import SimpleNamespace
 
 import pytest
 
@@ -149,21 +150,49 @@ class TestThrottledGc:
         monkeypatch.setenv("SPARK_GRAFT_GC_FULL_EVERY", "bogus")
         assert pyspark_fastdaemon._ThrottledGc().FULL_EVERY == 16
 
+    @staticmethod
+    def _fake_gc(monkeypatch, seen, found):
+        # records each collection's generation; a full one "finds" the
+        # next value of `found` unreachable objects
+        found = iter(found)
+
+        def collect(gen=2):
+            seen.append(gen)
+            return next(found) if gen == 2 else 0
+
+        monkeypatch.setattr(
+            pyspark_fastdaemon, "_gc", SimpleNamespace(collect=collect)
+        )
+
     def test_rss_escape_hatch(self, monkeypatch):
         # RSS above the limit forces the FULL collection on every task
+        # while those collections keep finding garbage
         g = pyspark_fastdaemon._ThrottledGc()
         seen = []
-        monkeypatch.setattr(
-            pyspark_fastdaemon, "_gc", type(
-                "G", (), {"collect": staticmethod(lambda gen=2: seen.append(gen))}
-            )
-        )
+        self._fake_gc(monkeypatch, seen, [5, 5])
         monkeypatch.setattr(
             pyspark_fastdaemon, "_rss_bytes", lambda: g._rss_limit + 1
         )
         g.collect()
         g.collect()
         assert seen == [2, 2]
+
+    def test_rss_escape_hatch_closes_when_full_gc_finds_nothing(
+        self, monkeypatch
+    ):
+        # RSS held up by memory gc cannot free (Arrow buffers): once a full
+        # collection finds nothing, tasks go back to gen-1 until the next
+        # cadence collection, whose finding re-opens the hatch
+        monkeypatch.setenv("SPARK_GRAFT_GC_FULL_EVERY", "4")
+        g = pyspark_fastdaemon._ThrottledGc()
+        seen = []
+        self._fake_gc(monkeypatch, seen, [0, 3, 0])
+        monkeypatch.setattr(
+            pyspark_fastdaemon, "_rss_bytes", lambda: g._rss_limit + 1
+        )
+        for _ in range(6):
+            g.collect()
+        assert seen == [2, 1, 1, 1, 2, 2]
 
     @pytest.mark.skipif(
         not Path("/proc/self/statm").exists(),

@@ -176,3 +176,38 @@ def test_freshness_forward_view_sees_never_checked_queries(monkeypatch, capsys):
     # real queries are awaiting their first driver check, so assert the
     # tier exists rather than its exact size)
     assert "target: {0: " in out
+
+
+@pytest.mark.parametrize("null_col", ["l_partkey", "l_orderkey"])
+def test_basket_lift_null_keys_match_oracle(spark, tmp_path, null_col):
+    # collect_set drops a null part where the oracle's DISTINCT keeps it,
+    # and groupBy keeps a null order where count(DISTINCT okey) skips it;
+    # neither may change the result
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    okeys = [1, 1, 1, 2, 2, 2, 3, 3, 4, 5, 5, 5]
+    parts = [10, 20, 30, 10, 20, 30, 10, 20, 10, 10, 20, 30]
+    nulls = [2, 5, 8, 9, 10]
+    col = okeys if null_col == "l_orderkey" else parts
+    for i in nulls:
+        col[i] = None
+    pq.write_table(
+        pa.table({"l_orderkey": pa.array(okeys, pa.int64()),
+                  "l_partkey": pa.array(parts, pa.int64())}),
+        str(tmp_path / "lineitem.parquet"),
+    )
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW lineitem AS SELECT * FROM "
+        f"read_parquet('{tmp_path}/lineitem.parquet')"
+    )
+    want = sorted(con.execute(registry.ORACLES["basket_lift"]).fetchall())
+    got = sorted(
+        tuple(r) for r in registry.QUERIES["basket_lift"](
+            spark, str(tmp_path)
+        ).collect()
+    )
+    assert want  # the fixture leaves pairs with support >= 2
+    assert got == want
