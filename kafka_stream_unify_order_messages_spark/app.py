@@ -35,6 +35,9 @@ from kafka_stream_unify_order_messages_spark.streaming import (
     unify_stream_event_time,
     unify_stream_tws,
 )
+from kafka_stream_unify_order_messages_spark.streaming.unify_tws import (
+    unify_stream_tws_event_time,
+)
 
 
 @dataclass
@@ -113,15 +116,18 @@ def unify_topology(raw: DataFrame, cfg: UnifyConfig) -> DataFrame:
         canonicalize_type(F.col("type"), fallback=topic_fallback("topic")),
     ).filter(F.col("order_id").isNotNull() & ~F.col("corrupt"))
     slim = normalized.select("order_id", "type", "timestamp", "order_details")
+    if cfg.use_tws:
+        tws = unify_stream_tws_event_time if cfg.event_time_mode else unify_stream_tws
+        return tws(slim, buffer_ms=cfg.buffer_ms)
     if cfg.event_time_mode:
         return unify_stream_event_time(slim, buffer_ms=cfg.buffer_ms)
-    if cfg.use_tws:
-        return unify_stream_tws(slim, buffer_ms=cfg.buffer_ms)
     return unify_stream(slim, buffer_ms=cfg.buffer_ms)
 
 
 def apply_state_store_config(spark: SparkSession, cfg: UnifyConfig) -> None:
-    if cfg.rocksdb_state:
+    # transformWithState runs only on RocksDB (the HDFS-backed provider
+    # has no multiple column families), so use_tws implies it
+    if cfg.rocksdb_state or cfg.use_tws:
         spark.conf.set(
             "spark.sql.streaming.stateStore.providerClass",
             "org.apache.spark.sql.execution.streaming."

@@ -587,6 +587,16 @@ def protobuf_available() -> bool:
         return False
 
 
+def tws_available() -> bool:
+    """True when a transformWithState query can talk to its state
+    server: the real protobuf runtime is importable, or this shim is
+    (or can be) installed in its place."""
+    try:
+        return protobuf_available() or install()
+    except ImportError:
+        return False
+
+
 def install(force: bool = False) -> bool:
     """Register the shim as the generated protobuf module when the real
     runtime is missing. Returns True when the shim is (already) active.

@@ -1,7 +1,7 @@
 """Streaming near-dup dedup throughput (streaming/dedup_stream.py):
 docs/s through the stateful first-wins MinHash-LSH path, measured
 end-to-end (file source -> scan-local band keys -> stateful shuffle ->
-applyInPandasWithState -> memory sink) at 10k / 100k documents.
+applyInPandasWithState -> memory sink) at 10k / 100k / 1M documents.
 
 Corpus: deterministic synthetic documents (60 words from a 100-word
 vocabulary, word choice = md5(doc_id:pos) — the same determinism
@@ -17,89 +17,123 @@ ingest: per-batch state commits against ever-growing bucket state — the
 profile where the state-store provider matters). Both state-store
 providers per cell. State after a tier: 4 band buckets per UNIQUE
 document (duplicates add none), so the 100k tier commits ~360k bucket
-entries.
+entries. The grid adds, at 100k: **verified** cells (signature compare
+in state), the **event** twin's micro-batch sizing sweep, and the TTL
+(processing-time) and event-time retention studies over a corpus with
+near and far duplicates.
 
-Usage:
+Usage (options in stream_harness.py):
     python scripts/streaming_dedup_throughput.py   # writes STREAMING_DEDUP.md/json
+    python scripts/streaming_dedup_throughput.py --only docs_in=20000,mode=event
 """
 
 from __future__ import annotations
 
-import json
-import shutil
-import sys
-import tempfile
 import time
-from pathlib import Path
-
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import pyspark.sql.functions as F
 
-from kafka_stream_unify_order_messages_spark import get_spark
+from stream_harness import (
+    append_kicker,
+    drain,
+    main,
+    read,
+    run_grouped,
+    running,
+    session,
+    set_state_store,
+    stage,
+    state_rows,
+)
+
 from kafka_stream_unify_order_messages_spark.streaming.dedup_stream import (
     band_decisions_stream,
     band_decisions_stream_event_time,
     near_dup_verdicts,
 )
 
-import os
-
-_ROOT = Path(__file__).resolve().parent.parent
-# env overrides for incremental re-measurement (RAMP_ONLY-style): re-run
-# only the requested tiers/modes and merge with the existing JSON records
-TIERS = [
-    int(t) for t in os.environ.get(
-        "SPARK_DEDUP_TIERS", "10000,100000"
-    ).split(",")
-    if t.strip()  # SPARK_DEDUP_TIERS="" -> TTL-study-only run
-]
-MODES = tuple(os.environ.get("SPARK_DEDUP_MODES", "bulk,sustained").split(","))
-RUN_VERIFIED = os.environ.get("SPARK_DEDUP_VERIFIED", "1") == "1"
 N_FILES = 20
+FILES_PER_TRIGGER = N_FILES // 10  # the sustained profile
 VOCAB = 100
 WORDS_PER_DOC = 60
 SCHEMA = "doc_id long, seq long, text string"
+STORES = ("hdfs", "rocksdb")
+RETENTION_MS = 20_000  # the TTL and event-time retention windows
+# files_per_trigger keys only the event cells; records measured before
+# it existed ran at the sustained profile
+FIELDS = {
+    "docs_in": None, "mode": None, "store": None, "verified": False,
+    "ttl_ms": None, "retention_ms": None,
+    "files_per_trigger": FILES_PER_TRIGGER,
+}
 
 
-def synth_docs(spark, n: int):
-    """(doc_id, seq, text): deterministic corpus; doc i with i % 10 == 9
-    re-sends doc (i - 9)'s text under its own id."""
-    base = F.when(
-        (F.col("id") % 10 == 9) & (F.col("id") >= 9),
-        F.col("id") - 9,
-    ).otherwise(F.col("id"))
-    word = lambda pos: F.concat(  # noqa: E731
-        F.lit("w"),
-        (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat_ws(":", base.cast("string"), pos)), 1, 7
-                ),
-                16,
-                10,
-            ).cast("long")
-            % VOCAB
-        ).cast("string"),
-    )
-    text = F.concat_ws(
-        " ", *[word(F.lit(str(p))) for p in range(WORDS_PER_DOC)]
-    )
+def _cells(n, mode, verified=False, field=None, values=(None,)):
+    """``mode`` cells at ``n`` docs for both stores, one per value of the
+    optional extra ``field``."""
+    return [
+        {"docs_in": n, "mode": mode, "store": store, "verified": verified}
+        | ({field: v} if field else {})
+        for store in STORES
+        for v in values
+    ]
+
+
+GRID = [
+    *_cells(10_000, "bulk"),
+    *_cells(10_000, "sustained"),
+    *_cells(20_000, "event", field="files_per_trigger",
+             values=[FILES_PER_TRIGGER]),
+    *_cells(100_000, "bulk"),
+    # micro-batch sizing sweep: the determinism-cost tuning study
+    *_cells(100_000, "event", field="files_per_trigger",
+             values=[FILES_PER_TRIGGER, 10, 20]),
+    *_cells(100_000, "event_retention", field="retention_ms",
+             values=[None, RETENTION_MS]),
+    *_cells(100_000, "sustained"),
+    *_cells(100_000, "ttl_study", field="ttl_ms",
+             values=[None, RETENTION_MS]),
+    *_cells(1_000_000, "bulk"),
+    *_cells(1_000_000, "sustained"),
+    # signature verification: the cost of carrying the exemplar
+    # signature (num_hashes longs) in bucket state and the
+    # per-collision compare
+    *_cells(100_000, "bulk", verified=True),
+    *_cells(100_000, "sustained", verified=True),
+]
+
+
+def _docs(spark, n: int, base):
+    """(doc_id, seq, text) for ids 0..n-1: the text is 60 words drawn by
+    md5(base:pos), so docs with the same ``base`` are verbatim dups."""
+    words = [
+        F.concat(
+            F.lit("w"),
+            (
+                F.conv(
+                    F.substring(
+                        F.md5(F.concat_ws(":", base.cast("string"), F.lit(str(p)))),
+                        1, 7,
+                    ),
+                    16, 10,
+                ).cast("long")
+                % VOCAB
+            ).cast("string"),
+        )
+        for p in range(WORDS_PER_DOC)
+    ]
     return spark.range(n).select(
         F.col("id").alias("doc_id"),
         F.col("id").alias("seq"),
-        text.alias("text"),
+        F.concat_ws(" ", *words).alias("text"),
     )
 
 
-def _stamp_mtimes_in_path_order(src: str) -> None:
-    """Make FileStreamSource arrival order equal part-file path order:
-    Spark's file source sorts by modification time, which a parallel
-    write scrambles (task completion order); stamp strictly increasing
-    mtimes over the name-sorted part files."""
-    base = time.time() - 10_000
-    for i, p in enumerate(sorted(Path(src).glob("part-*.parquet"))):
-        os.utime(p, (base + i, base + i))
+def synth_docs(spark, n: int):
+    """Deterministic corpus; doc i with i % 10 == 9 re-sends doc
+    (i - 9)'s text under its own id."""
+    near = (F.col("id") % 10 == 9) & (F.col("id") >= 9)
+    return _docs(spark, n, F.when(near, F.col("id") - 9).otherwise(F.col("id")))
 
 
 def synth_docs_mixed(spark, n: int):
@@ -124,497 +158,136 @@ def synth_docs_mixed(spark, n: int):
         .when(near, F.col("id") - 9)
         .otherwise(F.col("id"))
     )
-    word = lambda pos: F.concat(  # noqa: E731
-        F.lit("w"),
-        (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat_ws(":", base.cast("string"), pos)), 1, 7
-                ),
-                16,
-                10,
-            ).cast("long")
-            % VOCAB
-        ).cast("string"),
-    )
-    text = F.concat_ws(
-        " ", *[word(F.lit(str(p))) for p in range(WORDS_PER_DOC)]
-    )
-    return spark.range(n).select(
-        F.col("id").alias("doc_id"),
-        F.col("id").alias("seq"),
-        text.alias("text"),
-    )
+    return _docs(spark, n, base)
 
 
-def run_ttl_tier(
-    spark, n_docs: int, src: str, ttl_ms: int | None,
-    store: str = "hdfs",
-) -> dict:
-    """Sustained-mode run over the mixed near+far corpus, reporting the
-    state-store row count alongside throughput and found-dup rate. With
-    ``ttl_ms`` the query uses ProcessingTimeTimeout, so Spark schedules
-    micro-batches forever — poll the sink for completeness (all 4*n band
-    rows are emitted on arrival regardless of expiry), then let a couple
-    of idle batches run so pending timeouts sweep, then read the state
-    operator's numRowsTotal from the last progress event."""
-    name = f"dtp_ttl_{n_docs}_{ttl_ms or 0}_{store}"
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming."
-        "state.RocksDBStateStoreProvider"
-        if store == "rocksdb"
-        else "org.apache.spark.sql.execution.streaming."
-        "state.HDFSBackedStateStoreProvider",
-    )
-    stream = (
-        spark.readStream.schema(SCHEMA)
-        .option("maxFilesPerTrigger", N_FILES // 10)
-        .parquet(src)
-    )
-    ckpt = tempfile.mkdtemp(prefix=f"ckpt_{name}_")
-    q = (
-        band_decisions_stream(stream, ttl_ms=ttl_ms)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    t0 = time.time()
-    target = 4 * n_docs
-    try:
-        if ttl_ms is None:
-            q.processAllAvailable()
-            elapsed = time.time() - t0
-        else:
-            # ProcessingTimeTimeout: processAllAvailable never returns
-            # (empty batches keep scheduling to fire timers) — poll
-            deadline = t0 + max(600, n_docs / 200)
-            while spark.table(name).count() < target:
-                if time.time() > deadline:
-                    raise TimeoutError(f"{name}: sink incomplete")
-                time.sleep(1.0)
-            elapsed = time.time() - t0
-            # idle grace: let pending timeouts fire and sweep expired
-            # buckets so the final state count reflects retention
-            time.sleep(ttl_ms / 1000 + 5)
-        decisions = spark.table(name)
-        n_rows = decisions.count()
-        assert n_rows == target, (n_rows, target)
-        n_dup = near_dup_verdicts(decisions).filter("is_dup").count()
-        prog = q.lastProgress
-        state_rows = (
-            prog["stateOperators"][0]["numRowsTotal"] if prog else None
-        )
-        peak_state = max(
-            (
-                p["stateOperators"][0]["numRowsTotal"]
-                for p in q.recentProgress
-                if p.get("stateOperators")
-            ),
-            default=state_rows,
-        )
-    finally:
-        q.stop()
-        shutil.rmtree(ckpt, ignore_errors=True)
-        spark.catalog.dropTempView(name)
-    return {
-        "docs_in": n_docs,
-        "ttl_ms": ttl_ms,
-        "elapsed_sec": round(elapsed, 2),
-        "docs_per_sec": round(n_docs / elapsed),
-        "dup_rate": round(n_dup / n_docs, 4),
-        "state_rows_final": state_rows,
-        "state_rows_peak": peak_state,
-    }
+def _source(cell: dict) -> tuple[int, str]:
+    """The corpus a cell reads. bulk/sustained share a hash-partitioned
+    corpus. The event-time and retention legs need ORDERED arrival
+    (range-partitioned by id): event time = seq ms and the 2 s watermark
+    delay only tolerates bounded disorder, so whole files of low seqs
+    arriving after the watermark passed them would be dropped as late;
+    and the retention studies' far-dup gap collapses under scrambled
+    arrival (measured: the recall trade shrank ~3x)."""
+    mode = cell["mode"]
+    if mode in ("bulk", "sustained"):
+        return cell["docs_in"], "hashed"
+    if mode == "event":
+        return cell["docs_in"], "ordered"
+    return cell["docs_in"], "mixed"
 
 
-def run_event_tier(
-    spark, n_docs: int, src: str, store: str,
-    files_per_trigger: int | None = None,
-) -> dict:
-    """Sustained-mode run through the REPLAY-DETERMINISTIC event-time
-    twin (band_decisions_stream_event_time): event time = seq millis, so
-    the corpus spans n_docs ms of event time and the watermark advances
-    with the data; a far-future kicker closes the final delay window.
-    The kicker's own band rows are excluded from the verdict count.
+def _stage_corpus(spark, source: tuple[int, str], path: str) -> str:
+    n, kind = source
+    if kind == "hashed":
+        return stage(synth_docs(spark, n).repartition(N_FILES), path)
+    docs = synth_docs_mixed(spark, n) if kind == "mixed" else synth_docs(spark, n)
+    return stage(docs.repartitionByRange(N_FILES, "doc_id"), path)
 
-    ``files_per_trigger`` (default N_FILES // 10 = the sustained
-    profile) is the micro-batch sizing knob for the determinism-cost
-    study: every doc is touched twice (buffer, then watermark-decide),
-    but a row whose event time is already behind the watermark of a
-    LATER row in the same batch decides in the batch that carries it —
-    larger batches convert timeout-touches into same-batch decides, so
-    the event/sustained gap should shrink as batches grow."""
-    fpt = N_FILES // 10 if files_per_trigger is None else files_per_trigger
-    name = f"dtp_event_{store}_{n_docs}_f{fpt}"
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming."
-        "state.RocksDBStateStoreProvider"
-        if store == "rocksdb"
-        else "org.apache.spark.sql.execution.streaming."
-        "state.HDFSBackedStateStoreProvider",
+
+def run_cell(spark, cell: dict, src: str) -> dict:
+    """One measured run; asserts all 4 band rows of every doc reached the
+    sink.
+
+    - **bulk / sustained** (NoTimeout state): drained by
+      processAllAvailable.
+    - **ttl_study**: with ``ttl_ms`` the query uses ProcessingTimeTimeout,
+      so Spark schedules micro-batches forever — poll the sink for
+      completeness (band rows are emitted on arrival regardless of
+      expiry), then let idle batches sweep pending timeouts before the
+      final state count.
+    - **event / event_retention**: the REPLAY-DETERMINISTIC twin (event
+      time = seq ms; verdicts decided by the watermark). After the real
+      input, a far-future kicker closes the final delay window; its own
+      rows are excluded. ``files_per_trigger`` sizes the event cells'
+      micro-batches: a row already behind the watermark of a LATER row
+      in the same batch decides in the batch that carries it, so larger
+      batches convert timeout-touches into same-batch decides.
+      ``retention_ms`` is the watermark-driven exemplar horizon; the
+      kicker pushes every exemplar past it, so the peak state is sampled
+      before the kicker (the retention plateau) and the final after.
+    """
+    n, mode = cell["docs_in"], cell["mode"]
+    event = mode in ("event", "event_retention")
+    ttl_ms = cell.get("ttl_ms")
+    name = "dtp_" + "_".join(str(v) for v in cell.values())
+    set_state_store(spark, cell["store"])
+    stream = read(
+        spark, src, SCHEMA,
+        None if mode == "bulk"
+        else cell.get("files_per_trigger", FILES_PER_TRIGGER),
     )
-    stream = (
-        spark.readStream.schema(SCHEMA)
-        .option("maxFilesPerTrigger", fpt)
-        .parquet(src)
+    if event:
         # event time must be strictly positive (doc 0's ts==0 would be
         # dropped against the initial 0 watermark — see the kernel's
         # decide-rule comment); a uniform shift preserves seq order
-        .withColumn("seq", F.col("seq") + F.lit(1000))
-    )
-    ckpt = tempfile.mkdtemp(prefix=f"ckpt_{name}_")
-    q = (
-        band_decisions_stream_event_time(stream, watermark_delay="2 seconds")
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    t0 = time.time()
-    kicker_id = 10 * n_docs + 7
-    target = 4 * n_docs
-    try:
-        q.processAllAvailable()  # drain the real input
-        # close the final watermark window
-        spark.createDataFrame(
-            [(kicker_id, n_docs + 10_000_000, "watermark kicker payload")],
-            SCHEMA,
-        ).write.mode("append").parquet(src)
-        deadline = time.time() + max(600, n_docs / 200)
-        while (
-            spark.table(name)
-            .filter(F.col("doc_id") != kicker_id)
-            .count()
-            < target
-        ):
-            if time.time() > deadline:
-                raise TimeoutError(f"{name}: sink incomplete")
-            q.processAllAvailable()
-            time.sleep(0.5)
-        elapsed = time.time() - t0
-        decisions = spark.table(name).filter(F.col("doc_id") != kicker_id)
-        n_dup = near_dup_verdicts(decisions).filter("is_dup").count()
-    finally:
-        q.stop()
-        shutil.rmtree(ckpt, ignore_errors=True)
-        spark.catalog.dropTempView(name)
-    return {
-        "docs_in": n_docs,
-        "mode": "event",
-        "store": store,
-        "verified": False,
-        "files_per_trigger": fpt,
-        "elapsed_sec": round(elapsed, 2),
-        "docs_per_sec": round(n_docs / elapsed),
-        "dup_rate": round(n_dup / n_docs, 4),
-    }
-
-
-def run_event_retention_tier(
-    spark, n_docs: int, src: str, retention_ms: int | None,
-    store: str = "hdfs",
-) -> dict:
-    """The event-time counterpart of ``run_ttl_tier`` (round-10 study):
-    sustained-profile run of the REPLAY-DETERMINISTIC twin over the
-    mixed near+far corpus, with ``retention_ms`` — the watermark-driven
-    EVENT-TIME exemplar horizon — vs the unbounded twin. Event time =
-    seq ms, so the horizon is a window over the event clock, not wall
-    time: an idle box forgets nothing, a replay forgets the same
-    exemplars at the same watermarks.
-
-    State accounting: the far-future watermark kicker that closes the
-    final decision window also pushes every exemplar past its idle
-    horizon, so with retention the FINAL state collapses to the
-    kicker's own pending buckets — the peak (sampled from progress
-    events) is the plateau the window holds during the run; the kicker
-    is appended only after the peak is taken."""
-    name = f"dtp_evret_{n_docs}_{retention_ms or 0}_{store}"
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming."
-        "state.RocksDBStateStoreProvider"
-        if store == "rocksdb"
-        else "org.apache.spark.sql.execution.streaming."
-        "state.HDFSBackedStateStoreProvider",
-    )
-    stream = (
-        spark.readStream.schema(SCHEMA)
-        .option("maxFilesPerTrigger", N_FILES // 10)
-        .parquet(src)
-        .withColumn("seq", F.col("seq") + F.lit(1000))  # ts must be > 0
-    )
-    ckpt = tempfile.mkdtemp(prefix=f"ckpt_{name}_")
-    q = (
-        band_decisions_stream_event_time(
-            stream,
+        frame = band_decisions_stream_event_time(
+            stream.withColumn("seq", F.col("seq") + F.lit(1000)),
             watermark_delay="2 seconds",
-            retention_ms=retention_ms,
+            retention_ms=cell.get("retention_ms"),
         )
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    t0 = time.time()
-    kicker_id = 10 * n_docs + 7
-    target = 4 * n_docs
-    try:
-        q.processAllAvailable()  # drain the real input
-        # peak BEFORE the kicker: the retention plateau (the kicker
-        # would sweep everything and hide it)
-        state_samples = [
-            p["stateOperators"][0]["numRowsTotal"]
-            for p in q.recentProgress
-            if p.get("stateOperators")
-        ]
-        spark.createDataFrame(
-            [(kicker_id, n_docs + 10_000_000, "watermark kicker payload")],
-            SCHEMA,
-        ).write.mode("append").parquet(src)
-        deadline = time.time() + max(600, n_docs / 200)
-        while (
-            spark.table(name).filter(F.col("doc_id") != kicker_id).count()
-            < target
-        ):
-            if time.time() > deadline:
-                raise TimeoutError(f"{name}: sink incomplete")
-            q.processAllAvailable()
-            time.sleep(0.5)
-        elapsed = time.time() - t0
+    else:
+        frame = band_decisions_stream(
+            stream,
+            verify_threshold=0.5 if cell["verified"] else None,
+            ttl_ms=ttl_ms,
+        )
+    kicker_id = 10 * n + 7
+    target = 4 * n
+    timeout_s = max(600, n / 200)
+    with running(frame, name, src=src) as q:
         decisions = spark.table(name).filter(F.col("doc_id") != kicker_id)
-        n_dup = near_dup_verdicts(decisions).filter("is_dup").count()
-        prog = q.lastProgress
-        state_final = (
-            prog["stateOperators"][0]["numRowsTotal"] if prog else None
-        )
-    finally:
-        q.stop()
-        shutil.rmtree(ckpt, ignore_errors=True)
-        spark.catalog.dropTempView(name)
-    return {
-        "docs_in": n_docs,
-        "mode": "event_retention",
-        "store": store,
-        "verified": False,
-        "retention_ms": retention_ms,
-        "elapsed_sec": round(elapsed, 2),
-        "docs_per_sec": round(n_docs / elapsed),
-        "dup_rate": round(n_dup / n_docs, 4),
-        "state_rows_peak": max(state_samples, default=None),
-        "state_rows_final": state_final,
-    }
 
+        def complete() -> bool:
+            return decisions.count() >= target
 
-def run_tier(
-    spark, n_docs: int, src: str, mode: str, store: str,
-    verify: bool = False,
-) -> dict:
-    name = f"dtp_{mode}_{store}_{int(verify)}_{n_docs}"
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming."
-        "state.RocksDBStateStoreProvider"
-        if store == "rocksdb"
-        else "org.apache.spark.sql.execution.streaming."
-        "state.HDFSBackedStateStoreProvider",
-    )
-    reader = spark.readStream.schema(SCHEMA)
-    if mode == "sustained":
-        reader = reader.option("maxFilesPerTrigger", N_FILES // 10)
-    stream = reader.parquet(src)
-    ckpt = tempfile.mkdtemp(prefix=f"ckpt_{name}_")
-    q = (
-        band_decisions_stream(
-            stream, verify_threshold=0.5 if verify else None
+        t0 = time.time()
+        if ttl_ms is None:
+            q.processAllAvailable()
+        elif not drain(q, complete, timeout_s, every_s=1.0):
+            raise TimeoutError(f"{name}: sink incomplete")
+        peak = max(
+            (state_rows(p) or 0 for p in q.recentProgress), default=None
         )
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    t0 = time.time()
-    try:
-        q.processAllAvailable()  # NoTimeout state: drains and settles
+        if event:
+            append_kicker(src, {
+                "doc_id": [kicker_id],
+                "seq": [n + 10_000_000],
+                "text": ["watermark kicker payload"],
+            })
+            if not drain(q, complete, timeout_s, every_s=0.5,
+                         between=q.processAllAvailable):
+                raise TimeoutError(f"{name}: sink incomplete")
         elapsed = time.time() - t0
-        decisions = spark.table(name)
+        if ttl_ms:
+            # idle grace: let pending timeouts fire and sweep expired
+            # buckets so the final state count reflects retention
+            time.sleep(ttl_ms / 1000 + 5)
         n_rows = decisions.count()
-        assert n_rows == 4 * n_docs, (n_rows, 4 * n_docs)
-        verdicts = near_dup_verdicts(decisions)
-        n_dup = verdicts.filter("is_dup").count()
-    finally:
-        q.stop()
-        shutil.rmtree(ckpt, ignore_errors=True)
-        spark.catalog.dropTempView(name)
-    return {
-        "docs_in": n_docs,
-        "mode": mode,
-        "store": store,
-        "verified": verify,
+        assert n_rows == target, (n_rows, target)
+        n_dup = near_dup_verdicts(decisions).filter("is_dup").count()
+        final = state_rows(q.lastProgress)
+    rec = {
+        **cell,
         "elapsed_sec": round(elapsed, 2),
-        "docs_per_sec": round(n_docs / elapsed),
-        "dup_rate": round(n_dup / n_docs, 4),
+        "docs_per_sec": round(n / elapsed),
+        "dup_rate": round(n_dup / n, 4),
     }
+    if mode in ("ttl_study", "event_retention"):
+        rec |= {"state_rows_final": final, "state_rows_peak": peak}
+    return rec
 
 
-def main() -> None:
-    spark = get_spark(
-        "streaming-dedup-throughput",
-        master="local[32]",
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
-    records = []
-    for n in TIERS:
-        src = tempfile.mkdtemp(prefix=f"dtp_src_{n}_")
-        synth_docs(spark, n).repartition(N_FILES).write.mode(
-            "overwrite"
-        ).parquet(src)
-        src_ev = None
-        try:
-            for mode in MODES:
-                if mode == "event":
-                    # ordered arrival: event time = seq ms and the 2 s
-                    # watermark delay only tolerates bounded disorder, so
-                    # the event leg reads a range-partitioned mtime-stamped
-                    # copy (the hash-partitioned shared corpus would feed
-                    # whole files of low seqs AFTER the watermark passed
-                    # them -> dropped as late)
-                    if src_ev is None:
-                        src_ev = tempfile.mkdtemp(prefix=f"dtp_ev_src_{n}_")
-                        synth_docs(spark, n).repartitionByRange(
-                            N_FILES, "doc_id"
-                        ).write.mode("overwrite").parquet(src_ev)
-                        _stamp_mtimes_in_path_order(src_ev)
-                    # micro-batch sizing sweep (SPARK_DEDUP_EVENT_FPT,
-                    # comma-separated maxFilesPerTrigger values): the
-                    # determinism-cost tuning study — default is the
-                    # sustained profile's 2 files/batch only
-                    fpts = [
-                        int(x)
-                        for x in os.environ.get(
-                            "SPARK_DEDUP_EVENT_FPT", str(N_FILES // 10)
-                        ).split(",")
-                        if x.strip()
-                    ]
-                    for fpt in fpts:
-                        for store in ("hdfs", "rocksdb"):
-                            rec = run_event_tier(
-                                spark, n, src_ev, store,
-                                files_per_trigger=fpt,
-                            )
-                            records.append(rec)
-                            print(json.dumps(rec), flush=True)
-                        # the kicker row appended by each run changes the
-                        # source; rebuild it clean for the next knob value
-                        shutil.rmtree(src_ev, ignore_errors=True)
-                        synth_docs(spark, n).repartitionByRange(
-                            N_FILES, "doc_id"
-                        ).write.mode("overwrite").parquet(src_ev)
-                        _stamp_mtimes_in_path_order(src_ev)
-                    continue
-                for store in ("hdfs", "rocksdb"):
-                    rec = run_tier(spark, n, src, mode, store)
-                    records.append(rec)
-                    print(json.dumps(rec), flush=True)
-            if n == TIERS[-1] and RUN_VERIFIED:
-                # verified mode at the top tier: the cost of carrying the
-                # exemplar signature (num_hashes longs) in bucket state
-                # and the per-collision compare
-                for mode in MODES:
-                    for store in ("hdfs", "rocksdb"):
-                        rec = run_tier(
-                            spark, n, src, mode, store, verify=True
-                        )
-                        records.append(rec)
-                        print(json.dumps(rec), flush=True)
-        finally:
-            shutil.rmtree(src, ignore_errors=True)
-            if src_ev:
-                shutil.rmtree(src_ev, ignore_errors=True)
+def run_cells(spark, cells: list[dict]) -> list[dict]:
+    return run_grouped(spark, cells, _source, _stage_corpus, run_cell)
 
-    # TTL retention study (SPARK_DEDUP_TTL=1): sustained hdfs over the
-    # mixed near+far corpus, retention window vs unbounded twin —
-    # state plateau + the recall trade, measured
-    if os.environ.get("SPARK_DEDUP_TTL", "0") == "1":
-        ttl_tier = int(os.environ.get("SPARK_DEDUP_TTL_TIER", "100000"))
-        ttl_ms = int(os.environ.get("SPARK_DEDUP_TTL_MS", "20000"))
-        src = tempfile.mkdtemp(prefix=f"dtp_ttl_src_{ttl_tier}_")
-        # range-partition by doc_id so file CONTENT tracks id order,
-        # then stamp mtimes in path order: FileStreamSource orders by
-        # modification time, and parallel write tasks finish in
-        # scrambled order — without the stamp, batches are scrambled id
-        # ranges and the far-dup gap collapses (measured: the recall
-        # trade shrank ~3x under scrambled arrival)
-        synth_docs_mixed(spark, ttl_tier).repartitionByRange(
-            N_FILES, "doc_id"
-        ).write.mode("overwrite").parquet(src)
-        _stamp_mtimes_in_path_order(src)
-        try:
-            for ttl in (None, ttl_ms):
-                for store in ("hdfs", "rocksdb"):
-                    rec = run_ttl_tier(spark, ttl_tier, src, ttl, store)
-                    rec.update(
-                        {"mode": "ttl_study", "store": store,
-                         "verified": False}
-                    )
-                    records.append(rec)
-                    print(json.dumps(rec), flush=True)
-        finally:
-            shutil.rmtree(src, ignore_errors=True)
 
-    # Event-time retention study (SPARK_DEDUP_EVENT_RETENTION=1): the
-    # event twin's `retention_ms` horizon over the same mixed corpus —
-    # state plateau + the recall trade, mirroring the TTL table. The
-    # event leg needs the range-partitioned mtime-stamped layout (see
-    # the event-mode comment above); each run's kicker dirties the
-    # source, so it is rebuilt per run.
-    if os.environ.get("SPARK_DEDUP_EVENT_RETENTION", "0") == "1":
-        er_tier = int(os.environ.get("SPARK_DEDUP_TTL_TIER", "100000"))
-        er_ms = int(os.environ.get("SPARK_DEDUP_RETENTION_MS", "20000"))
-        for ret in (None, er_ms):
-            for store in ("hdfs", "rocksdb"):
-                src = tempfile.mkdtemp(prefix=f"dtp_evret_src_{er_tier}_")
-                synth_docs_mixed(spark, er_tier).repartitionByRange(
-                    N_FILES, "doc_id"
-                ).write.mode("overwrite").parquet(src)
-                _stamp_mtimes_in_path_order(src)
-                try:
-                    rec = run_event_retention_tier(
-                        spark, er_tier, src, ret, store
-                    )
-                    records.append(rec)
-                    print(json.dumps(rec), flush=True)
-                finally:
-                    shutil.rmtree(src, ignore_errors=True)
+def measure(cells: list[dict]) -> list[dict]:
+    with session("streaming-dedup-throughput") as spark:
+        return run_cells(spark, cells)
 
-    # merge with prior records (tier/mode/store/verified keyed), so a
-    # partial env-selected run extends rather than replaces the report
-    prior_path = _ROOT / "STREAMING_DEDUP.json"
-    if prior_path.exists():
-        key = lambda r: (  # noqa: E731
-            r["docs_in"], r["mode"], r["store"], bool(r.get("verified")),
-            r.get("ttl_ms"), r.get("retention_ms"),
-            # event rows are additionally keyed by micro-batch sizing;
-            # pre-knob records (no field) were measured at the sustained
-            # default
-            r.get("files_per_trigger", N_FILES // 10)
-            if r["mode"] == "event"
-            else None,
-        )
-        fresh = {key(r) for r in records}
-        records = [
-            r for r in json.loads(prior_path.read_text())
-            if key(r) not in fresh
-        ] + records
-        records.sort(key=lambda r: (bool(r.get("verified")), r["docs_in"],
-                                    r["mode"], r["store"]))
-    prior_path.write_text(json.dumps(records, indent=1) + "\n")
+
+def render(records: list[dict], fresh: list[dict]) -> str:
     lines = [
         "# STREAMING_DEDUP — measured streaming near-dup dedup throughput",
         "",
@@ -647,7 +320,7 @@ def main() -> None:
             continue  # separate sections below
         if (
             r["mode"] == "event"
-            and r.get("files_per_trigger", N_FILES // 10) != N_FILES // 10
+            and r.get("files_per_trigger", FILES_PER_TRIGGER) != FILES_PER_TRIGGER
         ):
             continue  # non-default micro-batch sizing: tuning section
         lines.append(
@@ -690,11 +363,11 @@ def main() -> None:
         (r for r in records if r["mode"] == "event"),
         key=lambda r: (
             r["docs_in"],
-            r.get("files_per_trigger", N_FILES // 10),
+            r.get("files_per_trigger", FILES_PER_TRIGGER),
             r["store"],
         ),
     )
-    if len({r.get("files_per_trigger", N_FILES // 10) for r in ev_recs}) > 1:
+    if len({r.get("files_per_trigger", FILES_PER_TRIGGER) for r in ev_recs}) > 1:
         sus = {
             (r["docs_in"], r["store"]): r["docs_per_sec"]
             for r in records
@@ -724,7 +397,7 @@ def main() -> None:
             rel = f"{r['docs_per_sec'] / s:.2f}x" if s else "—"
             lines.append(
                 f"| {r['docs_in']:,} "
-                f"| {r.get('files_per_trigger', N_FILES // 10)} "
+                f"| {r.get('files_per_trigger', FILES_PER_TRIGGER)} "
                 f"| {r['store']} | {r['elapsed_sec']} s "
                 f"| {r['docs_per_sec']:,} | {rel} | {r['dup_rate']:.1%} |"
             )
@@ -825,10 +498,8 @@ def main() -> None:
                 f"| {r['docs_per_sec']:,} | {r['dup_rate']:.1%} "
                 f"| {r['state_rows_final']:,} | {r['state_rows_peak']:,} |"
             )
-    (_ROOT / "STREAMING_DEDUP.md").write_text("\n".join(lines) + "\n")
-    print(f"wrote STREAMING_DEDUP.md with {len(records)} rows")
-    spark.stop()
+    return "\n".join(lines) + "\n"
 
 
 if __name__ == "__main__":
-    main()
+    main("STREAMING_DEDUP", GRID, FIELDS, measure, render)

@@ -35,46 +35,54 @@ delay" is one micro-batch turnaround, so the honest pass bar is the
 same ~6 s envelope with the trigger tick in place of the punctuator
 tick.
 
-Usage:
+Usage (options in stream_harness.py):
     python scripts/streaming_latency.py      # writes LATENCY.md/json
+    python scripts/streaming_latency.py --only variant=hdfs
 """
 
 from __future__ import annotations
 
 import json
-import os
 import shutil
 import statistics as st
-import sys
 import tempfile
 import time
-from pathlib import Path
-
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+from datetime import datetime, timezone
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from kafka_stream_unify_order_messages_spark import get_spark
-from kafka_stream_unify_order_messages_spark.app import UnifyConfig, apply_state_store_config
+from stream_harness import drain, main, publish, running, session
+
+from kafka_stream_unify_order_messages_spark.app import (
+    UnifyConfig,
+    apply_state_store_config,
+)
 from kafka_stream_unify_order_messages_spark.sources.generator import (
     generate_order_events,
 )
 from kafka_stream_unify_order_messages_spark.streaming import unify_stream
-
-_ROOT = Path(__file__).resolve().parent.parent
+from kafka_stream_unify_order_messages_spark.streaming.proto_shim import (
+    tws_available,
+)
+from kafka_stream_unify_order_messages_spark.streaming.unify_tws import (
+    unify_stream_tws,
+)
 
 N_LIFECYCLES = 600
 WAVE = 20  # lifecycles made visible per second
 WARM_WAVES = 2
 BUFFER_MS = 5000  # the reference's BUFFER_DURATION
+N_RUNS = 3  # percentile stability: pool orders across runs per provider
 COLS = ("order_id", "type", "timestamp", "order_details")
+FIELDS = {"variant": None}
+# v1 under both stores, the v2 (transformWithState) topology, and the
+# no-op micro-batch floor
+GRID = [{"variant": v} for v in ("hdfs", "rocksdb", "tws", "noop_floor")]
 
 
 def _iso(ms: int) -> str:
     """Wire form, matching order_events_df: yyyy-MM-dd'T'HH:mm:ss.SSS'Z'."""
-    from datetime import datetime, timezone
-
     dt = datetime.fromtimestamp(ms / 1000, tz=timezone.utc)
     return dt.strftime("%Y-%m-%dT%H:%M:%S.") + f"{ms % 1000:03d}Z"
 
@@ -87,55 +95,32 @@ def _wave_table(events: list[dict]) -> pa.Table:
     return pa.table({c: pa.array(vals[c], type=pa.string()) for c in COLS})
 
 
-def run_variant(rocksdb: bool, tws: bool = False) -> dict:
-    """One full measured latency run under the given state store.
+def pct(lats: list[float], p: float) -> float:
+    """The ``p`` quantile of sorted latencies."""
+    return lats[min(len(lats) - 1, int(p * len(lats)))]
 
-    ``tws=True`` runs the v2 ``transformWithStateInPandas`` topology
-    (streaming/unify_tws.py — real per-key timers instead of the v1
-    single implicit timeout; requires RocksDB, which is forced on).
-    In this sandbox its state-server protocol runs over the pure-stdlib
-    protobuf shim (streaming/proto_shim.py)."""
-    if tws:
-        rocksdb = True  # TWS requires the RocksDB provider
-    # 3 state partitions: exact parity with the reference's 3-partition
-    # topics (streams.properties) — every micro-batch pays one state-
-    # store commit and one Arrow/python round trip per partition, so
-    # sizing partitions to the load is the same deployment decision
-    # Kafka Streams makes with topic partition count. (Throughput runs
-    # keep 32: there the per-batch volume amortizes them.)
-    spark = get_spark(
-        "streaming-latency-"
-        + ("tws" if tws else "rocksdb" if rocksdb else "hdfs"),
-        master="local[32]",
-        shuffle_partitions=3,
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
-    apply_state_store_config(
-        spark, UnifyConfig(rocksdb_state=rocksdb, low_latency=True)
-    )
+
+def run_variant(variant: str) -> list[float]:
+    """One full measured latency run; returns the sorted latencies of the
+    orders that emitted (N_LIFECYCLES minus the missing ones).
+
+    ``variant`` "tws" runs the v2 ``transformWithStateInPandas``
+    topology (streaming/unify_tws.py — real per-key timers instead of
+    the v1 single implicit timeout; RocksDB, which it requires). In this
+    sandbox its state-server protocol runs over the pure-stdlib protobuf
+    shim (streaming/proto_shim.py)."""
     # arrival_seq order preserves the generator's always-on shuffle
     # WITHIN a lifecycle; waves group whole lifecycles so one order's
     # events share a file (reference spacing <= 200 ms << 1 s waves)
     events = generate_order_events(N_LIFECYCLES, seed=11)
     by_lifecycle: dict[str, list[dict]] = {}
-    lifecycle_order: list[str] = []
     for e in sorted(events, key=lambda e: e["arrival_seq"]):
-        if e["order_id"] not in by_lifecycle:
-            lifecycle_order.append(e["order_id"])
-            by_lifecycle[e["order_id"]] = []
-        by_lifecycle[e["order_id"]].append(e)
+        by_lifecycle.setdefault(e["order_id"], []).append(e)
+    lifecycle_order = list(by_lifecycle)
     waves = [
         lifecycle_order[i : i + WAVE]
         for i in range(0, len(lifecycle_order), WAVE)
     ]
-
-    src = tempfile.mkdtemp(prefix="lat_src_")
-    stage = tempfile.mkdtemp(prefix="lat_stage_")
-    ckpt = tempfile.mkdtemp(prefix="lat_ckpt_")
-    stream = spark.readStream.schema(
-        ", ".join(f"{c} string" for c in COLS)
-    ).parquet(src)
-
     arrival: dict[str, float] = {}
     emitted: dict[str, float] = {}
 
@@ -155,95 +140,84 @@ def run_variant(rocksdb: bool, tws: bool = False) -> dict:
         for row in rows:
             emitted.setdefault(row[0], now)
 
-    if tws:
-        from kafka_stream_unify_order_messages_spark.streaming.unify_tws import (
-            unify_stream_tws,
-        )
-
-        unified = unify_stream_tws(stream, buffer_ms=BUFFER_MS)
-    else:
-        unified = unify_stream(stream, buffer_ms=BUFFER_MS)
-    q = (
-        unified
-        .writeStream.foreachBatch(on_batch)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-
+    src = tempfile.mkdtemp(prefix="lat_src_")
+    # 3 state partitions: exact parity with the reference's 3-partition
+    # topics (streams.properties) — every micro-batch pays one state-
+    # store commit and one Arrow/python round trip per partition, so
+    # sizing partitions to the load is the same deployment decision
+    # Kafka Streams makes with topic partition count. (Throughput runs
+    # keep 32: there the per-batch volume amortizes them.)
     try:
-        # WARM-UP: the first micro-batches pay one-off costs (codegen,
-        # python worker spawn, state-store init) measured at ~7 s —
-        # 10x the steady-state batch. Run throwaway waves through to
-        # emission before measuring, exactly like bench.py's warm pass;
-        # their orders are excluded from the stats below.
-        warm_ids: set = set()
-        for w in range(WARM_WAVES):
-            warm = generate_order_events(WAVE, seed=99 + w)
-            warm_ids |= {e["order_id"] for e in warm}
-            tmp = os.path.join(stage, f"warm{w}.parquet")
-            pq.write_table(_wave_table(warm), tmp)
-            os.rename(tmp, os.path.join(src, f"warm{w}.parquet"))
-            warm_deadline = time.time() + 60
-            while (
-                len(set(emitted) & warm_ids) < len(warm_ids)
-                and time.time() < warm_deadline
-            ):
-                if q.exception():
-                    raise q.exception()
-                time.sleep(0.1)
-        for i, wave_ids in enumerate(waves):
-            rows = [e for oid in wave_ids for e in by_lifecycle[oid]]
-            tmp = os.path.join(stage, f"wave_{i}.parquet")
-            pq.write_table(_wave_table(rows), tmp)
-            final = os.path.join(src, f"wave_{i}.parquet")
-            os.rename(tmp, final)  # atomic: readers never see partials
-            t_visible = time.time()
-            for oid in wave_ids:
-                arrival[oid] = t_visible
-            wake = t_visible + 1.0
-            while time.time() < wake:
-                if q.exception():
-                    raise q.exception()
-                time.sleep(0.05)
-        deadline = time.time() + 60
-        while (
-            len(set(emitted) - warm_ids) < N_LIFECYCLES
-            and time.time() < deadline
-        ):
-            if q.exception():
-                raise q.exception()
-            time.sleep(0.1)
+        with session(
+            f"streaming-latency-{variant}", shuffle_partitions=3
+        ) as spark:
+            apply_state_store_config(
+                spark,
+                UnifyConfig(
+                    rocksdb_state=variant != "hdfs",
+                    use_tws=variant == "tws",
+                    low_latency=True,
+                ),
+            )
+            stream = spark.readStream.schema(
+                ", ".join(f"{c} string" for c in COLS)
+            ).parquet(src)
+            if variant == "tws":
+                unified = unify_stream_tws(stream, buffer_ms=BUFFER_MS)
+            else:
+                unified = unify_stream(stream, buffer_ms=BUFFER_MS)
+            with running(unified, "latency", on_batch=on_batch) as q:
+                # WARM-UP: the first micro-batches pay one-off costs
+                # (codegen, python worker spawn, state-store init)
+                # measured at ~7 s — 10x the steady-state batch. Run
+                # throwaway waves through to emission before measuring,
+                # exactly like bench.py's warm pass; their orders are
+                # excluded from the stats below.
+                for w in range(WARM_WAVES):
+                    warm = generate_order_events(WAVE, seed=99 + w)
+                    warm_ids = {e["order_id"] for e in warm}
+                    publish(_wave_table(warm), src, f"warm{w}.parquet")
+                    drain(q, lambda: warm_ids <= emitted.keys(),
+                          timeout_s=60, every_s=0.1)
+                for i, wave_ids in enumerate(waves):
+                    rows = [e for oid in wave_ids for e in by_lifecycle[oid]]
+                    publish(_wave_table(rows), src, f"wave_{i}.parquet")
+                    t_visible = time.time()
+                    for oid in wave_ids:
+                        arrival[oid] = t_visible
+                    drain(q, lambda: time.time() >= t_visible + 1.0,
+                          every_s=0.05)
+                drain(q, lambda: arrival.keys() <= emitted.keys(),
+                      timeout_s=60, every_s=0.1)
     finally:
-        q.stop()
-        spark.stop()
-        for d in (src, stage, ckpt):
-            shutil.rmtree(d, ignore_errors=True)
+        shutil.rmtree(src, ignore_errors=True)
 
-    measured = {oid: t for oid, t in emitted.items() if oid in arrival}
-    missing = len(arrival) - len(measured)
-    lats = sorted(measured[oid] - arrival[oid] for oid in measured)
+    lats = sorted(emitted[oid] - arrival[oid] for oid in arrival if oid in emitted)
     if not lats:
-        raise SystemExit(
-            f"latency run ({'rocksdb' if rocksdb else 'hdfs'}) emitted "
-            f"nothing"
-        )
+        raise SystemExit(f"latency run ({variant}) emitted nothing")
+    return lats
 
-    def pct(p: float) -> float:
-        return lats[min(len(lats) - 1, int(p * len(lats)))]
 
+def run_pooled(variant: str) -> dict:
+    """N_RUNS independent runs per provider, latencies POOLED before the
+    percentiles (1800 orders instead of 600): single-run p95 on this box
+    swings ~0.4 s run-to-run because one slow micro-batch drags a whole
+    20-order wave into the tail; pooling reports the distribution, and
+    per-run p95s are kept alongside so the spread stays visible."""
+    runs = [run_variant(variant) for _ in range(N_RUNS)]
+    lats = sorted(v for run in runs for v in run)
+    n_orders = N_RUNS * N_LIFECYCLES
     return {
-        "_lats": lats,  # raw latencies, pooled by run_pooled
-        "topology": "tws" if tws else "v1",
-        "state_store": "rocksdb" if rocksdb else "hdfs",
-        "n_orders": N_LIFECYCLES,
-        "emitted": len(measured),
-        "missing": missing,
+        "topology": "tws" if variant == "tws" else "v1",
+        "state_store": variant if variant == "hdfs" else "rocksdb",
+        "n_orders": n_orders,
+        "emitted": len(lats),
+        "missing": n_orders - len(lats),
         "buffer_ms": BUFFER_MS,
         "wave_per_sec": WAVE,
-        "p50_sec": round(pct(0.50), 2),
-        "p95_sec": round(pct(0.95), 2),
-        "p99_sec": round(pct(0.99), 2),
+        "p50_sec": round(pct(lats, 0.50), 2),
+        "p95_sec": round(pct(lats, 0.95), 2),
+        "p99_sec": round(pct(lats, 0.99), 2),
         "max_sec": round(lats[-1], 2),
         "min_sec": round(lats[0], 2),
         "envelope_sec": 6.0,
@@ -257,6 +231,8 @@ def run_variant(rocksdb: bool, tws: bool = False) -> dict:
         "within_envelope_plus_tick_pct": round(
             100.0 * sum(1 for v in lats if v <= 7.0) / len(lats), 1
         ),
+        "n_runs": N_RUNS,
+        "per_run_p95": [round(pct(run, 0.95), 2) for run in runs],
     }
 
 
@@ -269,21 +245,6 @@ def floor_probe(seconds: float = 22.0) -> dict:
 
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    spark = get_spark(
-        "streaming-latency-floor",
-        master="local[32]",
-        shuffle_partitions=3,
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
-    apply_state_store_config(spark, UnifyConfig(low_latency=True))
-    src = tempfile.mkdtemp(prefix="floor_src_")
-    ckpt = tempfile.mkdtemp(prefix="floor_ckpt_")
-    pq.write_table(
-        pa.table({"k": pa.array(["a", "b"]), "v": pa.array(["1", "2"])}),
-        os.path.join(src, "f0.parquet"),
-    )
-    stream = spark.readStream.schema("k string, v string").parquet(src)
-
     def fn(key, pdfs, state):
         for _ in pdfs:
             pass
@@ -292,27 +253,29 @@ def floor_probe(seconds: float = 22.0) -> dict:
             state.setTimeoutDuration(1000)
         else:
             state.remove()
-        import pandas as _pd
+        yield pd.DataFrame({"k": [key[0]]})
 
-        yield _pd.DataFrame({"k": [key[0]]})
-
-    out = stream.groupBy("k").applyInPandasWithState(
-        fn, "k string", "cnt int", "append",
-        GroupStateTimeout.ProcessingTimeTimeout,
+    src = tempfile.mkdtemp(prefix="floor_src_")
+    pq.write_table(
+        pa.table({"k": pa.array(["a", "b"]), "v": pa.array(["1", "2"])}),
+        f"{src}/f0.parquet",
     )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("latency_floor")
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    time.sleep(seconds)
-    prog = [json.loads(p.json) for p in q.recentProgress]
-    q.stop()
-    spark.stop()
-    for d in (src, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
+    try:
+        with session("streaming-latency-floor", shuffle_partitions=3) as spark:
+            apply_state_store_config(spark, UnifyConfig(low_latency=True))
+            out = (
+                spark.readStream.schema("k string, v string").parquet(src)
+                .groupBy("k")
+                .applyInPandasWithState(
+                    fn, "k string", "cnt int", "append",
+                    GroupStateTimeout.ProcessingTimeTimeout,
+                )
+            )
+            with running(out, "latency_floor") as q:
+                time.sleep(seconds)
+                prog = [json.loads(p.json) for p in q.recentProgress]
+    finally:
+        shutil.rmtree(src, ignore_errors=True)
     te = sorted(
         p["durationMs"]["triggerExecution"] for p in prog[3:]
     )  # skip startup batches
@@ -324,77 +287,20 @@ def floor_probe(seconds: float = 22.0) -> dict:
     }
 
 
-N_RUNS = 3  # percentile stability: pool orders across runs per provider
+def measure(cells: list[dict]) -> list[dict]:
+    records = []
+    for cell in cells:
+        variant = cell["variant"]
+        if variant == "tws" and not tws_available():
+            print("tws: no protobuf runtime or shim; its row is kept as it was")
+            continue
+        rec = floor_probe() if variant == "noop_floor" else run_pooled(variant)
+        records.append(cell | rec)
+    return records
 
 
-def run_pooled(rocksdb: bool, tws: bool = False) -> dict:
-    """N_RUNS independent runs per provider, latencies POOLED before the
-    percentiles (1800 orders instead of 600): single-run p95 on this box
-    swings ~0.4 s run-to-run because one slow micro-batch drags a whole
-    20-order wave into the tail; pooling reports the distribution, and
-    per-run p95s are kept alongside so the spread stays visible."""
-    runs = [run_variant(rocksdb=rocksdb, tws=tws) for _ in range(N_RUNS)]
-    lats: list[float] = []
-    for r in runs:
-        lats.extend(r.pop("_lats"))
-    lats.sort()
-
-    def pct(p: float) -> float:
-        return lats[min(len(lats) - 1, int(p * len(lats)))]
-
-    out = dict(runs[0])
-    out.update(
-        {
-            "n_runs": N_RUNS,
-            "n_orders": N_RUNS * N_LIFECYCLES,
-            "emitted": sum(r["emitted"] for r in runs),
-            "missing": sum(r["missing"] for r in runs),
-            "p50_sec": round(pct(0.50), 2),
-            "p95_sec": round(pct(0.95), 2),
-            "p99_sec": round(pct(0.99), 2),
-            "max_sec": round(lats[-1], 2),
-            "min_sec": round(lats[0], 2),
-            "per_run_p95": [r["p95_sec"] for r in runs],
-            "within_envelope_pct": round(
-                100.0 * sum(1 for v in lats if v <= 6.0) / len(lats), 1
-            ),
-            "within_envelope_plus_tick_pct": round(
-                100.0 * sum(1 for v in lats if v <= 7.0) / len(lats), 1
-            ),
-        }
-    )
-    return out
-
-
-def _tws_available() -> bool:
-    import sys
-
-    from kafka_stream_unify_order_messages_spark.streaming import (
-        proto_shim,
-        unify_tws,  # noqa: F401  (import installs the shim if needed)
-    )
-
-    return proto_shim.protobuf_available() or getattr(
-        sys.modules.get(proto_shim.GENERATED_MODULE), "__shim__", False
-    )
-
-
-def main() -> None:
-    if "--report-only" in sys.argv:
-        # regenerate LATENCY.md from the recorded LATENCY.json (report
-        # text changes shouldn't force a 25-minute re-measure)
-        out = json.loads((_ROOT / "LATENCY.json").read_text())
-    else:
-        hdfs = run_pooled(rocksdb=False)
-        rocks = run_pooled(rocksdb=True)
-        tws = (
-            run_pooled(rocksdb=True, tws=True) if _tws_available() else None
-        )
-        floor = floor_probe()
-        out = {
-            "hdfs": hdfs, "rocksdb": rocks, "tws": tws, "noop_floor": floor,
-        }
-        (_ROOT / "LATENCY.json").write_text(json.dumps(out, indent=1) + "\n")
+def render(records: list[dict], fresh: list[dict]) -> str:
+    out = {r["variant"]: r for r in records}
     hdfs, rocks, tws, floor = (
         out["hdfs"], out["rocksdb"], out.get("tws"), out["noop_floor"],
     )
@@ -527,9 +433,8 @@ OPT-IN on `UnifyConfig` rather than bundled with `rocksdb_state`:
 turning it on silently changes the checkpoint format for a property
 this deployment size cannot observe — see docs/DEPLOYMENT.md §5.
 """
-    (_ROOT / "LATENCY.md").write_text(md)
-    print(json.dumps(out))
+    return md
 
 
 if __name__ == "__main__":
-    main()
+    main("LATENCY", GRID, FIELDS, measure, render)

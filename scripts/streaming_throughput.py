@@ -35,8 +35,9 @@ the throughput-parity claim with the repo's own scaling evidence: the
 per-event cost must stay flat as N grows 100x (state keys grow with
 concurrent lifecycles, but each key holds <= 3 events).
 
-Usage:
+Usage (options in stream_harness.py):
     python scripts/streaming_throughput.py        # writes STREAMING.md/json
+    python scripts/streaming_throughput.py --only lifecycles=2000,semantics=tws-event
 
 Keep the machine otherwise idle; each tier runs once (streaming wall
 clock is already an average over thousands of per-event costs, so
@@ -45,22 +46,23 @@ best-of-N adds little here).
 
 from __future__ import annotations
 
-import json
-import os
-import shutil
-import sys
-import tempfile
 import time
-from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+import pyspark.sql.functions as F
 
-from pyspark.sql import functions as F
-
-from kafka_stream_unify_order_messages_spark import get_spark
-from kafka_stream_unify_order_messages_spark.sources.files import (
-    pin_file_arrival_order,
+from stream_harness import (
+    ROOT,
+    append_kicker,
+    drain,
+    main,
+    read,
+    run_grouped,
+    running,
+    session,
+    set_state_store,
+    stage,
 )
+
 from kafka_stream_unify_order_messages_spark.sources.generator import (
     generate_order_events_distributed,
 )
@@ -68,153 +70,127 @@ from kafka_stream_unify_order_messages_spark.streaming import (
     unify_stream,
     unify_stream_event_time,
 )
-
-_ROOT = Path(__file__).resolve().parent.parent
+from kafka_stream_unify_order_messages_spark.streaming.unify_tws import (
+    unify_stream_tws,
+    unify_stream_tws_event_time,
+)
 
 TIERS = [2_000, 20_000, 200_000]  # lifecycles; x3 = events in
 N_FILES = 30  # input parquet files per tier; sustained = 3 per trigger
-SCHEMA = (
-    "order_id string, type string, timestamp string, order_details string"
-)
+COLS = ("order_id", "type", "timestamp", "order_details")
+SCHEMA = ", ".join(f"{c} string" for c in COLS)
+# v1 and v2 (transformWithState, RocksDB only) topologies, processing-
+# and event-time, each with the state stores it is measured under
+FAMILIES = {
+    "event": ("hdfs",),
+    "processing": ("hdfs", "rocksdb"),
+    "tws": ("rocksdb",),
+    "tws-event": ("rocksdb",),
+}
+FIELDS = dict.fromkeys(("lifecycles", "mode", "store", "semantics"))
+GRID = [
+    {"lifecycles": n, "mode": mode, "store": store, "semantics": sem}
+    for n in TIERS
+    for sem, stores in FAMILIES.items()
+    for mode in ("bulk", "sustained")
+    for store in stores
+]
+# one lonely far-future event: the event-time topologies close buffers
+# by watermark, so it flushes the final windows; its own incomplete
+# order is dropped by the completeness gate
+KICKER = {
+    "order_id": ["kicker"],
+    "type": ["created"],
+    "timestamp": ["2099-01-01T00:00:00.000Z"],
+    "order_details": ["{}"],
+}
 
 
-def run_tier(
-    spark,
-    n_lifecycles: int,
-    src: str,
-    mode: str,
-    store: str = "hdfs",
-    semantics: str = "processing",
-) -> dict:
-    """One measured streaming run; returns the timing record.
-
-    ``store`` selects the state-store provider (hdfs | rocksdb);
-    ``semantics`` selects the unify variant (processing | event) — the
-    event-time variant closes buffers by WATERMARK, so the harness
-    appends a far-future "kicker" file after the input to flush the
-    final windows (the kicker's own incomplete order is dropped by the
-    completeness gate and excluded from the projection count).
-    """
-    # view names reject '-' (tws-event)
-    name = f"tp_{mode}_{store}_{semantics.replace('-', '_')}_{n_lifecycles}"
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming."
-        "state.RocksDBStateStoreProvider"
-        if store == "rocksdb"
-        else "org.apache.spark.sql.execution.streaming."
-        "state.HDFSBackedStateStoreProvider",
+def stage_orders(spark, n_lifecycles: int, path: str) -> str:
+    """Lifecycle-aligned time slices in arrival order. The generator
+    spaces lifecycles 1 s apart and keeps intra-order gaps <= 200 ms, so
+    the event-time SECOND identifies the lifecycle: range-partitioning on
+    it means no order spans two files. Arrival order is pinned because
+    sustained batches would otherwise arrive in arbitrary listing order,
+    fatal for the event-time topologies (round-11 finding: tws-event
+    sustained froze at 467/2000 until pinned)."""
+    slices = (
+        generate_order_events_distributed(spark, n_lifecycles)
+        .select(*COLS)
+        .withColumn(
+            "slice",
+            (F.unix_millis(F.to_timestamp("timestamp")) / 1000).cast("long"),
+        )
+        .repartitionByRange(N_FILES, "slice")
+        .drop("slice")
     )
-    reader = spark.readStream.schema(SCHEMA)
-    if mode == "sustained":
-        reader = reader.option("maxFilesPerTrigger", N_FILES // 10)
-    stream = reader.parquet(src)
-    ckpt = tempfile.mkdtemp(prefix=f"ckpt_{name}_")
-    t0 = time.time()
+    return stage(slices, path)
+
+
+def _topology(stream, semantics: str):
     # 1 s buffer: emission happens AT expiry (reference punctuator
     # semantics), so buffer_ms is a per-order latency floor, not a
     # throughput knob; lifecycle-aligned input files keep every order's
     # arrival spread at ~0, satisfying the buffer >> spread rule.
     if semantics == "event":
-        unified = unify_stream_event_time(
+        return unify_stream_event_time(
             stream, buffer_ms=1000, watermark_delay="2 seconds"
         )
-    elif semantics == "tws":
-        # v2 topology (requires RocksDB; importing unify_tws installs
-        # the proto shim in protobuf-less sandboxes)
-        from kafka_stream_unify_order_messages_spark.streaming.unify_tws import (
-            unify_stream_tws,
-        )
-
-        unified = unify_stream_tws(stream, buffer_ms=1000)
-    elif semantics == "tws-event":
-        # v2 event-time twin: watermark-closed buffers, needs the same
-        # kicker drain as the v1 event variant
-        from kafka_stream_unify_order_messages_spark.streaming.unify_tws import (
-            unify_stream_tws_event_time,
-        )
-
-        unified = unify_stream_tws_event_time(
+    if semantics == "tws":
+        return unify_stream_tws(stream, buffer_ms=1000)
+    if semantics == "tws-event":
+        return unify_stream_tws_event_time(
             stream, buffer_ms=1000, watermark_delay="2 seconds"
         )
-    else:
-        unified = unify_stream(stream, buffer_ms=1000)
-    q = (
-        unified
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .start()
+    return unify_stream(stream, buffer_ms=1000)
+
+
+def run_cell(spark, cell: dict, src: str) -> dict:
+    """One measured streaming run; returns the record. The event-time
+    semantics get the kicker once all real input is ingested."""
+    n = cell["lifecycles"]
+    semantics = cell["semantics"]
+    # view names reject '-' (tws-event)
+    name = "tp_" + "_".join(str(v) for v in cell.values()).replace("-", "_")
+    set_state_store(spark, cell["store"])
+    stream = read(
+        spark, src, SCHEMA,
+        N_FILES // 10 if cell["mode"] == "sustained" else None,
     )
-    n_events = n_lifecycles * 3
+    n_events = n * 3
+    t_ingested = None  # end of the last real-input micro-batch
+    t0 = time.time()
 
-    def write_kicker() -> None:
-        # watermark kicker: one lonely far-future event, made visible
-        # only AFTER every real input row has been ingested — written
-        # earlier it would jump the watermark to 2099 and every later
-        # real event would be dropped as late
-        import pyarrow as pa
-        import pyarrow.parquet as pq
+    def watch_ingest() -> None:
+        nonlocal t_ingested
+        if t_ingested is None and sum(
+            p.numInputRows for p in q.recentProgress
+        ) >= n_events:
+            # all real input admitted AND processed (progress is
+            # reported at batch completion): steady state ends here;
+            # what remains is the drain — the buffer/watermark-driven
+            # flush of the final windows (plus the kicker batch)
+            t_ingested = time.time()
+            if semantics in ("event", "tws-event"):
+                append_kicker(src, KICKER)
 
-        tbl = pa.table(
-            {
-                "order_id": pa.array(["kicker"]),
-                "type": pa.array(["created"]),
-                "timestamp": pa.array(["2099-01-01T00:00:00.000Z"]),
-                "order_details": pa.array(["{}"]),
-            }
+    with running(_topology(stream, semantics), name, src=src) as q:
+        done = drain(
+            q, lambda: spark.table(name).count() >= n,
+            timeout_s=900, between=watch_ingest,
         )
-        stage = tempfile.mkdtemp(prefix="kick_")
-        tmp = os.path.join(stage, "k.parquet")
-        pq.write_table(tbl, tmp)
-        os.rename(tmp, os.path.join(src, "zz_kicker.parquet"))
-        shutil.rmtree(stage, ignore_errors=True)
-    try:
-        deadline = time.time() + 900
-        done = 0
-        t_ingested = None  # end of the last real-input micro-batch
-        kicked = semantics not in ("event", "tws-event")
-        while time.time() < deadline:
-            if q.exception():
-                raise q.exception()
-            if t_ingested is None:
-                ingested = sum(
-                    p.numInputRows for p in q.recentProgress
-                )
-                if ingested >= n_events:
-                    # all real input admitted AND processed (progress is
-                    # reported at batch completion): steady-state ends
-                    # here; what remains is the drain — the buffer/
-                    # watermark-driven flush of the final windows (plus
-                    # the kicker batch for event-time semantics)
-                    t_ingested = time.time()
-                    if not kicked:
-                        write_kicker()
-                        kicked = True
-            done = spark.table(name).count()
-            if done >= n_lifecycles:
-                break
-            time.sleep(0.25)
         elapsed = time.time() - t0
-        if done < n_lifecycles:
+        if not done:
             raise SystemExit(
-                f"{name}: only {done}/{n_lifecycles} projections "
+                f"{name}: only {spark.table(name).count()}/{n} projections "
                 f"after {elapsed:.0f}s"
             )
-    finally:
-        q.stop()
-        shutil.rmtree(ckpt, ignore_errors=True)
-        spark.catalog.dropTempView(name)
     rec = {
-        "lifecycles": n_lifecycles,
+        **cell,
         "events_in": n_events,
-        "mode": mode,
-        "store": store,
-        "semantics": semantics,
         "elapsed_sec": round(elapsed, 2),
         "events_per_sec": round(n_events / elapsed),
-        "projections_per_sec": round(n_lifecycles / elapsed),
+        "projections_per_sec": round(n / elapsed),
     }
     if t_ingested is not None:
         # split the fixed drain tail out of the rate: at small tiers the
@@ -230,219 +206,28 @@ def run_tier(
     return rec
 
 
-def main() -> None:
-    spark = get_spark(
-        "streaming-throughput",
-        master="local[32]",
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
+def run_cells(spark, cells: list[dict]) -> list[dict]:
+    """Each tier staged once; the warm-up is a bulk run of the first
+    cell's processing-time twin (no kicker residue), same store."""
+    first = cells[0]
+    warm = {
+        **first,
+        "mode": "bulk",
+        "semantics": "tws" if first["semantics"].startswith("tws")
+        else "processing",
+    }
+    return run_grouped(
+        spark, cells, lambda c: c["lifecycles"], stage_orders, run_cell,
+        warm=warm,
     )
-    # SPARK_TP_TWS=1: measure ONLY the v2 transformWithState rows
-    # (bulk + sustained, RocksDB — TWS's required provider) and merge
-    # with the existing STREAMING.json grid instead of re-measuring it.
-    # SPARK_TP_EVENT=1: same, for ONLY the v1 event-time rows (bulk +
-    # sustained, HDFS store like the other v1 rows).
-    tws_only = os.environ.get("SPARK_TP_TWS", "0") == "1"
-    event_only = os.environ.get("SPARK_TP_EVENT", "0") == "1"
-    # SPARK_TP_CELL=lifecycles:mode:semantics[:store] — re-measure ONE
-    # grid cell and merge it (the confirm-or-clear protocol for a cell
-    # that spiked: re-measure on a quiet window; the merged value is the
-    # fresh measurement either way)
-    cell = os.environ.get("SPARK_TP_CELL", "")
-    if sum((tws_only, event_only, bool(cell))) > 1:
-        raise SystemExit(
-            "set at most one of SPARK_TP_TWS / SPARK_TP_EVENT / "
-            "SPARK_TP_CELL"
-        )
-    cell_n = cell_mode = cell_sem = cell_store = None
-    if cell:
-        parts = cell.split(":")
-        cell_n, cell_mode, cell_sem = int(parts[0]), parts[1], parts[2]
-        cell_store = parts[3] if len(parts) > 3 else (
-            "rocksdb" if cell_sem.startswith("tws") else "hdfs"
-        )
-        if cell_n not in TIERS:
-            raise SystemExit(f"SPARK_TP_CELL tier must be one of {TIERS}")
-    records = []
-    for n in TIERS:
-        if cell and n != cell_n:
-            continue
-        src = tempfile.mkdtemp(prefix=f"tp_src_{n}_")
-        (
-            # slice = lifecycle index (the generator spaces lifecycles
-            # 1 s apart and keeps intra-order gaps <= 200 ms, so the
-            # event-time SECOND identifies the lifecycle): range-
-            # partitioning on it guarantees no order spans two files
-            generate_order_events_distributed(spark, n)
-            .select("order_id", "type", "timestamp", "order_details")
-            .withColumn(
-                "slice",
-                (F.unix_millis(F.to_timestamp("timestamp")) / 1000)
-                .cast("long"),
-            )
-            .repartitionByRange(N_FILES, "slice")
-            .drop("slice")
-            .write.mode("overwrite")
-            .parquet(src)
-        )
-        # Enforce in-order ARRIVAL (the contract the doc's
-        # "lifecycle-aligned time-sliced input files" line claims): a
-        # bulk parquet write leaves every part with the same mtime, so
-        # sustained batches would arrive in arbitrary listing order —
-        # fatal for the event-time topologies (round-11 finding:
-        # tws-event sustained froze at 467/2000 until pinned). See
-        # sources/files.py:pin_file_arrival_order.
-        pin_file_arrival_order(src)
-        # warm the streaming machinery once per tier shape so the first
-        # measured run doesn't pay one-off python-worker/codegen startup
-        if n == TIERS[0]:
-            warm_sem = (
-                "tws" if tws_only
-                else ("event" if event_only else "processing")
-            )
-            run_tier(
-                spark, n, src, "bulk",
-                semantics=warm_sem,
-                store="rocksdb" if tws_only else "hdfs",
-            )
-            # an event-semantics warm run leaves its kicker behind
-            kick = Path(src) / "zz_kicker.parquet"
-            if kick.exists():
-                kick.unlink()
-        if cell:
-            # warm the measured family's machinery (processing-time twin:
-            # no kicker residue), then the one selected cell
-            run_tier(
-                spark, n, src, "bulk",
-                semantics="tws" if cell_sem.startswith("tws")
-                else "processing",
-                store=cell_store,
-            )
-            rec = run_tier(
-                spark, n, src, cell_mode, store=cell_store,
-                semantics=cell_sem,
-            )
-            kick = Path(src) / "zz_kicker.parquet"
-            if kick.exists():
-                kick.unlink()
-            records.append(rec)
-            print(
-                f"{n:>8} lifecycles {cell_mode:9s} {cell_store:8s} "
-                f"{cell_sem} {rec['elapsed_sec']:7.2f}s "
-                f"{rec['events_per_sec']:>7} ev/s in "
-                f"{rec['projections_per_sec']:>7} proj/s out "
-                f"(drain {rec.get('drain_sec', float('nan')):.2f}s)",
-                file=sys.stderr,
-            )
-            shutil.rmtree(src, ignore_errors=True)
-            continue
-        if event_only:
-            # v1 event-time rows: bulk re-measured same-session for
-            # comparability, sustained filling the last grid blank
-            # (measurable since pin_file_arrival_order — an event-time
-            # topology fed same-mtime files in arbitrary order drops
-            # batches as late and under-emits, the round-11 finding)
-            for mode in ("bulk", "sustained"):
-                rec = run_tier(
-                    spark, n, src, mode, store="hdfs", semantics="event"
-                )
-                kick = Path(src) / "zz_kicker.parquet"
-                if kick.exists():
-                    kick.unlink()
-                records.append(rec)
-                print(
-                    f"{n:>8} lifecycles {mode:9s} hdfs     event "
-                    f"{rec['elapsed_sec']:7.2f}s "
-                    f"{rec['events_per_sec']:>7} ev/s in "
-                    f"{rec['projections_per_sec']:>7} proj/s out "
-                    f"(drain {rec.get('drain_sec', float('nan')):.2f}s)",
-                    file=sys.stderr,
-                )
-            shutil.rmtree(src, ignore_errors=True)
-            continue
-        if tws_only:
-            # bulk + sustained for BOTH tws semantics. The event-time
-            # sustained cell includes the watermark-kicker drain in its
-            # elapsed (the final window's orders only emit once the
-            # kicker advances the watermark) — a tail cost shared with
-            # the bulk cell, noted in the doc narrative. Each tws-event
-            # run leaves its kicker file behind in src; unlink it before
-            # the next run or the 2099 watermark drops every real event.
-            for mode, semantics in (
-                ("bulk", "tws"),
-                ("sustained", "tws"),
-                ("bulk", "tws-event"),
-                ("sustained", "tws-event"),
-            ):
-                rec = run_tier(
-                    spark, n, src, mode,
-                    store="rocksdb", semantics=semantics,
-                )
-                kick = Path(src) / "zz_kicker.parquet"
-                if kick.exists():
-                    kick.unlink()
-                records.append(rec)
-                print(
-                    f"{n:>8} lifecycles {mode:9s} rocksdb  {semantics} "
-                    f"{rec['elapsed_sec']:7.2f}s "
-                    f"{rec['events_per_sec']:>7} ev/s in "
-                    f"{rec['projections_per_sec']:>7} proj/s out",
-                    file=sys.stderr,
-                )
-            shutil.rmtree(src, ignore_errors=True)
-            continue
-        # full (mode x store) grid per tier — RocksDB is the reference's
-        # store (OrderProjectionTopology.java:48-52) and the 100 TB
-        # configuration, so it gets the same scaling evidence as the
-        # HDFS default; the event-time variant measures at every tier
-        # too (bulk only: its watermark-kicker drain pattern makes
-        # sustained timing mostly measure the drain, not the pipeline)
-        for mode in ("bulk", "sustained"):
-            for store in ("hdfs", "rocksdb"):
-                rec = run_tier(spark, n, src, mode, store=store)
-                records.append(rec)
-                print(
-                    f"{n:>8} lifecycles {mode:9s} {store:8s} proc "
-                    f"{rec['elapsed_sec']:7.2f}s "
-                    f"{rec['events_per_sec']:>7} ev/s in "
-                    f"{rec['projections_per_sec']:>7} proj/s out",
-                    file=sys.stderr,
-                )
-        rec = run_tier(spark, n, src, "bulk", semantics="event")
-        # the kicker file stays behind in src; remove before any reuse
-        kick = Path(src) / "zz_kicker.parquet"
-        if kick.exists():
-            kick.unlink()
-        records.append(rec)
-        print(
-            f"{n:>8} lifecycles bulk      hdfs     event "
-            f"{rec['elapsed_sec']:7.2f}s "
-            f"{rec['events_per_sec']:>7} ev/s in "
-            f"{rec['projections_per_sec']:>7} proj/s out",
-            file=sys.stderr,
-        )
-        shutil.rmtree(src, ignore_errors=True)
-    spark.stop()
 
-    # merge with prior records so an env-selected partial run (tws_only)
-    # extends the grid instead of replacing it
-    prior_path = _ROOT / "STREAMING.json"
-    if prior_path.exists():
-        key = lambda r: (  # noqa: E731
-            r["lifecycles"], r["mode"], r["store"], r["semantics"]
-        )
-        fresh = {key(r) for r in records}
-        records = [
-            r
-            for r in json.loads(prior_path.read_text()).get("records", [])
-            if key(r) not in fresh
-        ] + records
-        records.sort(
-            key=lambda r: (r["lifecycles"], r["semantics"], r["mode"],
-                           r["store"])
-        )
-    (_ROOT / "STREAMING.json").write_text(
-        json.dumps({"records": records}, indent=1) + "\n"
-    )
+
+def measure(cells: list[dict]) -> list[dict]:
+    with session("streaming-throughput") as spark:
+        return run_cells(spark, cells)
+
+
+def render(records: list[dict], fresh: list[dict]) -> str:
     lines = [
         "# STREAMING — measured unify-topology throughput",
         "",
@@ -535,7 +320,7 @@ def main() -> None:
         "builder after reading the table; preserved verbatim by the",
         "next regeneration.)",
     ]
-    md_path = _ROOT / "STREAMING.md"
+    md_path = ROOT / "STREAMING.md"
     if md_path.exists():
         old = md_path.read_text().splitlines()
         # match by prefix: the carried-over heading gains a staleness
@@ -555,14 +340,15 @@ def main() -> None:
                     break
             while kept and kept[-1] == "":
                 kept.pop()
-            # stamp the carried-over analysis so a regeneration with new
-            # numbers can't silently ship last round's prose as if it
-            # were written against the fresh table; the builder removes
-            # the stamp (restores the bare heading) after re-verifying
-            kept[0] = (
-                "## Narrative (carried over from a previous generation"
-                " — re-verify against the regenerated table above)"
-            )
+            # stamp the carried-over analysis when fresh numbers arrive,
+            # so last round's prose can't ship as if it were written
+            # against the new table; the stamp is removed (the bare
+            # heading restored) after re-verifying
+            if fresh:
+                kept[0] = (
+                    "## Narrative (carried over from a previous generation"
+                    " — re-verify against the regenerated table above)"
+                )
             narrative = [""] + kept
     lines += narrative
     lines += [
@@ -573,9 +359,8 @@ def main() -> None:
         "parity).",
     ]
     lines.append("")
-    (_ROOT / "STREAMING.md").write_text("\n".join(lines))
-    print(json.dumps({"written": "STREAMING.md", "tiers": len(records)}))
+    return "\n".join(lines)
 
 
 if __name__ == "__main__":
-    main()
+    main("STREAMING", GRID, FIELDS, measure, render)

@@ -22,43 +22,46 @@ live window state — the steady-state profile). State is O(active
 windows x bins), watermark-dropped, independent of event count — the
 property that makes this sketch the 100 TB streaming-quantile answer.
 
-Usage:
+Usage (options in stream_harness.py):
     python scripts/streaming_windowed_throughput.py  # writes STREAMING_WINDOWED.md/json
-    SPARK_WINDOWED_TIERS=100000 python scripts/streaming_windowed_throughput.py
+    python scripts/streaming_windowed_throughput.py --only events_in=50000
 """
 
 from __future__ import annotations
 
-import json
-import os
-import shutil
-import sys
-import tempfile
 import time
-from pathlib import Path
-
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+from datetime import datetime, timezone
 
 import pyspark.sql.functions as F
 
-from kafka_stream_unify_order_messages_spark import get_spark
+from stream_harness import (
+    append_kicker,
+    main,
+    read,
+    run_grouped,
+    running,
+    session,
+    stage,
+    state_rows,
+)
+
 from kafka_stream_unify_order_messages_spark.streaming.windowed import (
     windowed_value_histogram,
 )
 
-_ROOT = Path(__file__).resolve().parent.parent
-TIERS = [
-    int(t)
-    for t in os.environ.get(
-        "SPARK_WINDOWED_TIERS", "100000,1000000"
-    ).split(",")
-    if t.strip()
-]
+TIERS = [50_000, 100_000, 1_000_000]
 N_FILES = 20
 SPAN_SEC = 7200  # event time spans 2 hours -> 120 one-minute windows
 SCHEMA = "event_id long, ts timestamp, value double"
 BASE_TS = "2026-01-01 00:00:00"
-KICKER_TS = "2026-06-01 00:00:00"  # far future: closes every real window
+KICKER_TS = datetime(2026, 6, 1, tzinfo=timezone.utc)  # closes every real window
+KICKER = {"event_id": [-1], "ts": [KICKER_TS], "value": [0.5]}
+FIELDS = {"events_in": None, "mode": None}
+GRID = [
+    {"events_in": n, "mode": mode}
+    for n in TIERS
+    for mode in ("bulk", "sustained")
+]
 
 
 def synth_events(spark, n: int):
@@ -77,116 +80,67 @@ def synth_events(spark, n: int):
     )
 
 
-def _kicker(spark):
-    return spark.createDataFrame(
-        [(int(-1), KICKER_TS, 0.5)], "event_id long, ts string, value double"
-    ).select(
-        "event_id", F.to_timestamp("ts").alias("ts"), "value"
+def _histogram(frame, **watermark):
+    return windowed_value_histogram(
+        frame, ts_col="ts", value_col="value",
+        lo=0.0, hi=1000.0, n_bins=16, window="1 minute", **watermark,
     )
 
 
-def run_tier(spark, n_events: int, src: str, mode: str) -> dict:
-    name = f"wtp_{mode}_{n_events}"
-    reader = spark.readStream.schema(SCHEMA)
-    if mode == "sustained":
-        reader = reader.option("maxFilesPerTrigger", N_FILES // 10)
-    stream = reader.parquet(src)
-    ckpt = tempfile.mkdtemp(prefix=f"ckpt_{name}_")
-    wh = windowed_value_histogram(
-        stream, ts_col="ts", value_col="value",
-        lo=0.0, hi=1000.0, n_bins=16,
-        window="1 minute", watermark_delay="30 seconds",
-    )
-    q = (
-        wh.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    t0 = time.time()
-    try:
+def _stage_events(spark, n: int, path: str) -> str:
+    # range-partitioned by id, arriving in path order: file content
+    # tracks event time, so the watermark never sees out-of-order
+    # arrival and never drops a row — stream==batch stays exact
+    return stage(synth_events(spark, n).repartitionByRange(N_FILES, "event_id"), path)
+
+
+def run_cell(spark, cell: dict, src: str) -> dict:
+    """One measured run; asserts the emitted sketch rows match the batch
+    twin row for row (the kicker's own window excluded)."""
+    n, mode = cell["events_in"], cell["mode"]
+    name = f"wtp_{mode}_{n}"
+    stream = read(spark, src, SCHEMA, N_FILES // 10 if mode == "sustained" else None)
+    with running(_histogram(stream, watermark_delay="30 seconds"), name, src=src) as q:
+        t0 = time.time()
         q.processAllAvailable()  # drain the real input
         # close remaining windows: the kicker advances the watermark
         # past every real window end
-        _kicker(spark).write.mode("append").parquet(src)
+        append_kicker(src, KICKER)
         q.processAllAvailable()
         elapsed = time.time() - t0
         got = (
             spark.table(name)
-            .filter(F.col("window_start") < F.to_timestamp(F.lit(KICKER_TS)))
+            .filter(F.col("window_start") < F.lit(KICKER_TS))
             .select("window_start", "window_end", "bin", "cnt")
         )
-        want = windowed_value_histogram(
-            synth_events(spark, n_events),
-            ts_col="ts", value_col="value",
-            lo=0.0, hi=1000.0, n_bins=16, window="1 minute",
-        )
+        want = _histogram(synth_events(spark, n))
         n_rows = got.count()
         n_want = want.count()
         n_match = got.join(
             want, ["window_start", "window_end", "bin", "cnt"]
         ).count()
         assert n_rows == n_want == n_match, (n_rows, n_want, n_match)
-        prog = q.lastProgress
-        state_rows = (
-            prog["stateOperators"][0]["numRowsTotal"] if prog else None
-        )
-    finally:
-        q.stop()
-        shutil.rmtree(ckpt, ignore_errors=True)
-        spark.catalog.dropTempView(name)
+        final = state_rows(q.lastProgress)
     return {
-        "events_in": n_events,
-        "mode": mode,
+        **cell,
         "elapsed_sec": round(elapsed, 2),
-        "events_per_sec": round(n_events / elapsed),
+        "events_per_sec": round(n / elapsed),
         "sketch_rows_out": n_rows,
         "batch_twin_match": True,
-        "state_rows_final": state_rows,
+        "state_rows_final": final,
     }
 
 
-def main() -> None:
-    spark = get_spark(
-        "streaming-windowed-throughput",
-        master="local[32]",
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
-    records = []
-    for n in TIERS:
-        src = tempfile.mkdtemp(prefix=f"wtp_src_{n}_")
-        # range-partition by id AND stamp mtimes in path order: file
-        # content tracks event time, and FileStreamSource orders by
-        # modification time (parallel write tasks scramble it), so the
-        # watermark never sees out-of-order arrival and never drops a
-        # row — stream==batch stays exact
-        synth_events(spark, n).repartitionByRange(
-            N_FILES, "event_id"
-        ).write.mode("overwrite").parquet(src)
-        base = time.time() - 10_000
-        for i, p in enumerate(sorted(Path(src).glob("part-*.parquet"))):
-            os.utime(p, (base + i, base + i))
-        try:
-            for mode in ("bulk", "sustained"):
-                rec = run_tier(spark, n, src, mode)
-                records.append(rec)
-                print(json.dumps(rec), flush=True)
-        finally:
-            shutil.rmtree(src, ignore_errors=True)
+def run_cells(spark, cells: list[dict]) -> list[dict]:
+    return run_grouped(spark, cells, lambda c: c["events_in"], _stage_events, run_cell)
 
-    prior_path = _ROOT / "STREAMING_WINDOWED.json"
-    if prior_path.exists():
-        key = lambda r: (r["events_in"], r["mode"])  # noqa: E731
-        fresh = {key(r) for r in records}
-        records = [
-            r
-            for r in json.loads(prior_path.read_text())
-            if key(r) not in fresh
-        ] + records
-        records.sort(key=lambda r: (r["events_in"], r["mode"]))
-    prior_path.write_text(json.dumps(records, indent=1) + "\n")
 
+def measure(cells: list[dict]) -> list[dict]:
+    with session("streaming-windowed-throughput") as spark:
+        return run_cells(spark, cells)
+
+
+def render(records: list[dict], fresh: list[dict]) -> str:
     lines = [
         "# STREAMING_WINDOWED — measured windowed-histogram stream throughput",
         "",
@@ -230,10 +184,8 @@ def main() -> None:
             "overhead amortizes; the aggregation state term is constant "
             "(bins x active windows, both fixed here).",
         ]
-    (_ROOT / "STREAMING_WINDOWED.md").write_text("\n".join(lines) + "\n")
-    print(f"wrote STREAMING_WINDOWED.md with {len(records)} rows")
-    spark.stop()
+    return "\n".join(lines) + "\n"
 
 
 if __name__ == "__main__":
-    main()
+    main("STREAMING_WINDOWED", GRID, FIELDS, measure, render)

@@ -109,54 +109,77 @@ def test_config_env_overrides(monkeypatch):
     assert cfg.output_topic == "order-projection"
 
 
-def test_rocksdb_state_store_end_to_end(spark, tmp_path):
+def test_rocksdb_state_store_end_to_end(spark, tmp_path, state_store):
     # the at-scale state store must work with the stateful unify; run one
-    # complete lifecycle through it, then restore the default provider
+    # complete lifecycle through it (the fixture restores the provider)
     from kafka_stream_unify_order_messages_spark.app import (
         apply_state_store_config,
     )
 
-    prev = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
-    )
     apply_state_store_config(spark, UnifyConfig(rocksdb_state=True))
+    src = tmp_path / "in"
+    src.mkdir()
+    name = f"rdb_{uuid.uuid4().hex[:8]}"
+    raw = spark.readStream.schema("value string, topic string").parquet(
+        str(src)
+    )
+    cfg = UnifyConfig(buffer_ms=5000, event_time_mode=True)
+    q = (
+        unify_topology(raw, cfg)
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
     try:
-        src = tmp_path / "in"
-        src.mkdir()
-        name = f"rdb_{uuid.uuid4().hex[:8]}"
-        raw = spark.readStream.schema("value string, topic string").parquet(
-            str(src)
+        write_batch(
+            src,
+            [
+                (msg("r1", "created", 0), "order-created"),
+                (msg("r1", "placed", 1), "order-placed"),
+                (msg("r1", "cancelled", 2), "order-cancelled"),
+                (msg("hb", "created", 59), "order-created"),
+            ],
+            0,
         )
-        cfg = UnifyConfig(buffer_ms=5000, event_time_mode=True)
-        q = (
-            unify_topology(raw, cfg)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .start()
+        wait_rows(
+            spark, q, name, src, (msg("hb", "created", 59), "order-created")
         )
-        try:
-            write_batch(
-                src,
-                [
-                    (msg("r1", "created", 0), "order-created"),
-                    (msg("r1", "placed", 1), "order-placed"),
-                    (msg("r1", "cancelled", 2), "order-cancelled"),
-                    (msg("hb", "created", 59), "order-created"),
-                ],
-                0,
-            )
-            wait_rows(
-                spark, q, name, src, (msg("hb", "created", 59), "order-created")
-            )
-            out = {r.order_id for r in spark.table(name).collect()}
-            assert "r1" in out
-        finally:
-            q.stop()
+        out = {r.order_id for r in spark.table(name).collect()}
+        assert "r1" in out
     finally:
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
+        q.stop()
+
+
+def test_use_tws_sets_rocksdb_provider(spark, state_store):
+    # transformWithState has no HDFS-backed store (its first batch fails
+    # with STATE_STORE_MULTIPLE_COLUMN_FAMILIES), so use_tws alone must
+    # select RocksDB
+    from kafka_stream_unify_order_messages_spark.app import (
+        apply_state_store_config,
+    )
+
+    state_store("hdfs")
+    apply_state_store_config(spark, UnifyConfig(use_tws=True))
+    assert spark.conf.get(
+        "spark.sql.streaming.stateStore.providerClass"
+    ).endswith(".RocksDBStateStoreProvider")
+
+
+def test_use_tws_with_event_time_builds_the_tws_event_time_plan(
+    spark, tmp_path
+):
+    # both flags together must reach the watermark-closed TWS twin, not
+    # the v1 applyInPandasWithState event-time plan
+    raw = spark.readStream.schema("value string, topic string").parquet(
+        str(tmp_path)
+    )
+    out = unify_topology(raw, UnifyConfig(use_tws=True, event_time_mode=True))
+    plan = out._jdf.queryExecution().logical().toString()
+    assert "TransformWithStateInPySpark" in plan
+    assert "EventTimeWatermark" in plan
+    assert "FlatMapGroupsInPandasWithState" not in plan
 
 
 def test_low_latency_tuning_applies_and_is_opt_in(spark):

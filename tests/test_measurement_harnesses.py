@@ -1,39 +1,47 @@
-"""Unit coverage for the measurement harnesses' load-bearing helpers
-(scripts/streaming_latency.py, scripts/streaming_throughput.py): the
-measured numbers are only meaningful if the harness feeds the stream
-byte-identical wire data and never splits an order across files.
+"""Coverage for the streaming measurement harnesses (scripts/streaming_*.py
+on the shared runner scripts/stream_harness.py): the measured numbers
+are only meaningful if the harness feeds the stream byte-identical wire
+data, never splits an order across files, and its default grid is the
+committed table. The smoke tests run the runner end to end on tiny cells,
+each through the harness's own correctness check.
 """
 
 from __future__ import annotations
 
-import importlib.util
+import json
+import os
 import sys
 from pathlib import Path
 
 import pyspark.sql.functions as F
+import pytest
 
 from kafka_stream_unify_order_messages_spark.sources.generator import (
     generate_order_events,
-    generate_order_events_distributed,
     order_events_df,
 )
 
-_SCRIPTS = Path(__file__).resolve().parent.parent / "scripts"
+_ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(_ROOT / "scripts"))
 
+import stream_harness  # noqa: E402
+import streaming_dedup_throughput as dedup  # noqa: E402
+import streaming_latency as lat  # noqa: E402
+import streaming_throughput as tp  # noqa: E402
+import streaming_windowed_throughput as windowed  # noqa: E402
 
-def _load_module(name: str):
-    spec = importlib.util.spec_from_file_location(name, _SCRIPTS / f"{name}.py")
-    mod = importlib.util.module_from_spec(spec)
-    sys.modules[name] = mod
-    spec.loader.exec_module(mod)
-    return mod
+HARNESSES = {
+    "STREAMING": tp,
+    "STREAMING_DEDUP": dedup,
+    "STREAMING_WINDOWED": windowed,
+    "LATENCY": lat,
+}
 
 
 def test_latency_iso_matches_wire_format(spark):
     """_iso must produce byte-identical timestamps to order_events_df's
     wire form — otherwise the latency harness measures a different
     serde path than the one the reference parity tests pin."""
-    lat = _load_module("streaming_latency")
     events = generate_order_events(20, seed=5)
     wire = {
         (r["order_id"], r["type"]): r["timestamp"]
@@ -46,7 +54,6 @@ def test_latency_iso_matches_wire_format(spark):
 
 
 def test_latency_wave_table_schema_and_grouping():
-    lat = _load_module("streaming_latency")
     events = generate_order_events(5, seed=7)
     t = lat._wave_table(events)
     assert t.column_names == list(lat.COLS)
@@ -55,28 +62,24 @@ def test_latency_wave_table_schema_and_grouping():
     assert all(str(f.type) == "string" for f in t.schema)
 
 
-def test_throughput_slices_never_split_an_order(spark):
+def test_throughput_slices_never_split_an_order(spark, tmp_path):
     """The throughput harness's lifecycle-aligned slicing is load-bearing
     (random order + short buffer drops ~everything — see the script
-    docstring): every order's 3 events must land in ONE slice."""
-    n_files = 10
-    df = (
-        generate_order_events_distributed(spark, 500)
-        .select("order_id", "type", "timestamp", "order_details")
-        .withColumn(
-            "slice",
-            (F.unix_millis(F.to_timestamp("timestamp")) / 1000).cast("long"),
-        )
-        .repartitionByRange(n_files, "slice")
-        .withColumn("pid", F.spark_partition_id())
-    )
+    docstring): every order's 3 events must land in ONE file, and the
+    files must arrive in name order."""
+    src = tp.stage_orders(spark, 500, str(tmp_path / "src"))
+    df = spark.read.parquet(src).withColumn("file", F.input_file_name())
+    assert df.count() == 1500
     split = (
         df.groupBy("order_id")
-        .agg(F.countDistinct("pid").alias("n_parts"))
-        .filter(F.col("n_parts") > 1)
+        .agg(F.countDistinct("file").alias("n_files"))
+        .filter(F.col("n_files") > 1)
         .count()
     )
     assert split == 0
+    parts = sorted(Path(src).glob("part-*"))
+    mtimes = [os.stat(p).st_mtime for p in parts]
+    assert mtimes == sorted(mtimes) and len(set(mtimes)) == len(parts)
 
 
 def test_dedup_throughput_corpus_has_designed_dup_structure(spark):
@@ -84,19 +87,17 @@ def test_dedup_throughput_corpus_has_designed_dup_structure(spark):
     re-sends doc (i-9)'s text VERBATIM (so exactly one of each pair is
     flagged regardless of intra-batch arrival order), non-resend texts
     are distinct, and generation is deterministic."""
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "scripts"))
-    from streaming_dedup_throughput import synth_docs
-
-    rows = {r["doc_id"]: r["text"] for r in synth_docs(spark, 200).collect()}
+    rows = {
+        r["doc_id"]: r["text"] for r in dedup.synth_docs(spark, 200).collect()
+    }
     assert len(rows) == 200
     for i in range(9, 200, 10):
         assert rows[i] == rows[i - 9], i
     originals = [rows[i] for i in range(200) if i % 10 != 9]
     assert len(set(originals)) == len(originals)  # no accidental dups
-    again = {r["doc_id"]: r["text"] for r in synth_docs(spark, 200).collect()}
+    again = {
+        r["doc_id"]: r["text"] for r in dedup.synth_docs(spark, 200).collect()
+    }
     assert again == rows
 
 
@@ -106,18 +107,10 @@ def test_ttl_study_corpus_mixed_near_far_structure(spark):
     (each far target re-sent exactly once — a re-used target's bucket
     would be re-claimed by its first re-send and hide the recall trade),
     and generation is deterministic."""
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(
-        0, str(Path(__file__).resolve().parent.parent / "scripts")
-    )
-    from streaming_dedup_throughput import synth_docs_mixed
-
     n = 400
     rows = {
         r["doc_id"]: r["text"]
-        for r in synth_docs_mixed(spark, n).collect()
+        for r in dedup.synth_docs_mixed(spark, n).collect()
     }
     assert len(rows) == n
     far_targets = []
@@ -136,7 +129,7 @@ def test_ttl_study_corpus_mixed_near_far_structure(spark):
     assert len(set(far_targets)) == len(far_targets)
     again = {
         r["doc_id"]: r["text"]
-        for r in synth_docs_mixed(spark, n).collect()
+        for r in dedup.synth_docs_mixed(spark, n).collect()
     }
     assert again == rows
 
@@ -146,20 +139,11 @@ def test_windowed_throughput_events_monotone_and_kicker_closes(spark):
     (so range-partitioned + mtime-stamped files give in-order arrival
     and the watermark never drops a row) and the kicker's timestamp is
     beyond every real window end."""
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(
-        0, str(Path(__file__).resolve().parent.parent / "scripts")
-    )
-    from streaming_windowed_throughput import _kicker, synth_events
-
-    ev = synth_events(spark, 500).orderBy("event_id").collect()
+    ev = windowed.synth_events(spark, 500).orderBy("event_id").collect()
     ts = [r["ts"] for r in ev]
     assert all(a <= b for a, b in zip(ts, ts[1:]))
     assert all(0.0 <= r["value"] < 1000.0 for r in ev)
-    kick = _kicker(spark).collect()[0]["ts"]
-    assert kick > ts[-1]
+    assert windowed.KICKER["ts"][0].timestamp() > ts[-1].timestamp() + 60
 
 
 def test_bench_diff_classifies_wall_up_cpu_down_as_mixed(tmp_path, capsys, monkeypatch):
@@ -196,3 +180,95 @@ def test_bench_diff_classifies_wall_up_cpu_down_as_mixed(tmp_path, capsys, monke
     assert section["q_mixed"] == "mixed"
     assert section["q_cont"] == "contention"
     assert section["q_reg"] == "REGRESSION?"
+
+
+@pytest.mark.parametrize("name", sorted(HARNESSES))
+def test_default_grid_is_the_committed_table(name):
+    """A full run regenerates every committed row and nothing else: the
+    default grid lists exactly the committed cells, in committed order."""
+    harness = HARNESSES[name]
+    records, _ = stream_harness.load_records(_ROOT / f"{name}.json")
+    assert [stream_harness.cell_key(c, harness.FIELDS) for c in harness.GRID] == [
+        stream_harness.cell_key(r, harness.FIELDS) for r in records
+    ]
+
+
+def test_only_selects_matching_cells():
+    cells = stream_harness.select(
+        tp.GRID, tp.FIELDS, "lifecycles=2000,semantics=tws-event"
+    )
+    assert [(c["mode"], c["store"]) for c in cells] == [
+        ("bulk", "rocksdb"), ("sustained", "rocksdb"),
+    ]
+    # a field older records lack matches its default
+    cells = stream_harness.select(
+        dedup.GRID, dedup.FIELDS, "docs_in=100000,mode=event,files_per_trigger=2"
+    )
+    assert {c["store"] for c in cells} == {"hdfs", "rocksdb"}
+    for bad in ("lifecycles=7", "tier=2000"):
+        with pytest.raises(SystemExit):
+            stream_harness.select(tp.GRID, tp.FIELDS, bad)
+
+
+def test_report_merges_fresh_records_by_cell_key(tmp_path, monkeypatch):
+    """A partial run replaces only the cells it measured, a record that
+    lacks a defaulted field still matches its cell, rows keep grid
+    order, and --report-only writes the MD but leaves the JSON alone."""
+    monkeypatch.setattr(stream_harness, "ROOT", tmp_path)
+    fields = {"n": None, "mode": None, "fpt": 2}
+    grid = [{"n": 1, "mode": "a", "fpt": 2}, {"n": 1, "mode": "b", "fpt": 2}]
+    prior = [{"n": 1, "mode": "b", "v": "old-b"}, {"n": 1, "mode": "a", "v": "old-a"}]
+    (tmp_path / "T.json").write_text(json.dumps(prior))
+
+    def render(records, fresh):
+        return " ".join(r["v"] for r in records) + f" fresh={len(fresh)}"
+
+    def measure(cells):
+        return [c | {"v": "new-" + c["mode"]} for c in cells]
+
+    stream_harness.main("T", grid, fields, measure, render, ["--only", "mode=b"])
+    merged = json.loads((tmp_path / "T.json").read_text())
+    assert [r["v"] for r in merged] == ["old-a", "new-b"]
+    assert (tmp_path / "T.md").read_text() == "old-a new-b fresh=1"
+    stream_harness.main("T", grid, fields, measure, render, ["--report-only"])
+    assert json.loads((tmp_path / "T.json").read_text()) == merged
+    assert (tmp_path / "T.md").read_text() == "old-a new-b fresh=0"
+
+
+def test_throughput_runner_smoke(spark, state_store):
+    """A processing-time cell and an event-time cell (the kicker path);
+    run_cell raises unless every lifecycle's projection reaches the
+    sink."""
+    state_store("hdfs")
+    cells = [
+        {"lifecycles": 60, "mode": "bulk", "store": "hdfs", "semantics": sem}
+        for sem in ("processing", "event")
+    ]
+    records = tp.run_cells(spark, cells)
+    assert [r["semantics"] for r in records] == ["processing", "event"]
+    for r in records:
+        assert r["events_in"] == 180 and r["projections_per_sec"] > 0
+    assert records[1]["drain_sec"] >= 0
+
+
+def test_dedup_runner_smoke(spark, state_store):
+    """A bulk cell and an event-time cell (kicker path); run_cell asserts
+    all 4 band rows of every doc reach the sink, kicker rows excluded."""
+    state_store("hdfs")
+    cells = [
+        {"docs_in": 200, "mode": "bulk", "store": "hdfs", "verified": False},
+        {"docs_in": 200, "mode": "event", "store": "hdfs", "verified": False,
+         "files_per_trigger": dedup.FILES_PER_TRIGGER},
+    ]
+    records = dedup.run_cells(spark, cells)
+    assert [r["mode"] for r in records] == ["bulk", "event"]
+    # every designed verbatim dup (10%) is found; band collisions may add
+    for r in records:
+        assert r["dup_rate"] >= 0.1
+
+
+def test_windowed_runner_smoke(spark):
+    """run_cell asserts the emitted sketch rows match the batch twin row
+    for row."""
+    (rec,) = windowed.run_cells(spark, [{"events_in": 2000, "mode": "bulk"}])
+    assert rec["batch_twin_match"] and rec["sketch_rows_out"] > 0

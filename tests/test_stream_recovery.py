@@ -124,31 +124,16 @@ import pytest
 
 
 @pytest.mark.parametrize("provider", ["hdfs", "rocksdb"])
-def test_checkpoint_recovery_preserves_buffered_state(spark, tmp_path, provider):
+def test_checkpoint_recovery_preserves_buffered_state(
+    spark, tmp_path, provider, state_store
+):
     # memory sink can't recover, so this test writes parquet (the sink a
     # real deployment would use alongside Kafka). Runs under BOTH state
     # store providers: recovery through RocksDB's changelog/snapshot
     # checkpointing is the at-scale path (the reference's store is
     # RocksDB, OrderProjectionTopology.java:48-52)
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prior = spark.conf.get(key, None)
-    if provider == "rocksdb":
-        spark.conf.set(
-            key,
-            "org.apache.spark.sql.execution.streaming."
-            "state.RocksDBStateStoreProvider",
-        )
-    try:
-        _recovery_body(spark, tmp_path)
-    finally:
-        # restore even on mid-test assertion failures — a leaked
-        # provider conf would silently move every later streaming test
-        # onto RocksDB
-        if provider == "rocksdb":
-            if prior is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prior)
+    state_store(provider)
+    _recovery_body(spark, tmp_path)
 
 
 def _recovery_body(spark, tmp_path):

@@ -24,6 +24,9 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from kafka_stream_unify_order_messages_spark.streaming.proto_shim import (
+    tws_available,
+)
 from kafka_stream_unify_order_messages_spark.streaming.unify_tws import (
     OrderUnifyEventProcessor,
     OrderUnifyProcessor,
@@ -326,102 +329,78 @@ def write_batch(src_dir, rows, batch_no):
     pq.write_table(table, f"{src_dir}/batch-{batch_no:04d}.parquet")
 
 
-def _tws_protocol_available() -> bool:
-    # real protobuf runtime, or the repo's pure-stdlib wire shim
-    # (installed at unify_tws import — already imported above)
-    import sys
-
-    from kafka_stream_unify_order_messages_spark.streaming import proto_shim
-
-    return proto_shim.protobuf_available() or getattr(
-        sys.modules.get(proto_shim.GENERATED_MODULE), "__shim__", False
-    )
-
-
 @pytest.mark.skipif(
-    not _tws_protocol_available(),
+    not tws_available(),
     reason="TWS state-server protocol needs the protobuf runtime or the "
     "proto_shim; processor semantics are covered by the deterministic "
     "layer-1 tests above",
 )
-def test_e2e_tws_complete_emits_incomplete_drops(spark, tmp_path):
-    prev = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming."
-        "state.HDFSBackedStateStoreProvider",
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming."
-        "state.RocksDBStateStoreProvider",
+def test_e2e_tws_complete_emits_incomplete_drops(spark, tmp_path, state_store):
+    state_store("rocksdb")
+    src = tmp_path / "in"
+    src.mkdir()
+    name = f"tws_{uuid.uuid4().hex[:8]}"
+    events = spark.readStream.schema(SCHEMA).parquet(str(src))
+    query = (
+        unify_stream_tws(events, buffer_ms=BUFFER_MS)
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
     )
     try:
-        src = tmp_path / "in"
-        src.mkdir()
-        name = f"tws_{uuid.uuid4().hex[:8]}"
-        events = spark.readStream.schema(SCHEMA).parquet(str(src))
-        query = (
-            unify_stream_tws(events, buffer_ms=BUFFER_MS)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .start()
+        first = json.dumps({"which": "first"})
+        late = json.dumps({"which": "late"})
+        write_batch(
+            src,
+            [
+                # w1: complete, shuffled, with duplicate created
+                ev("w1", "cancelled", 2),
+                ev("w1", "created", 0, first),
+                ev("w1", "created", 1, late),
+                ev("w1", "placed", 1),
+                # w2: incomplete — must never emit
+                ev("w2", "created", 0),
+            ],
+            0,
         )
-        try:
-            first = json.dumps({"which": "first"})
-            late = json.dumps({"which": "late"})
-            write_batch(
-                src,
-                [
-                    # w1: complete, shuffled, with duplicate created
-                    ev("w1", "cancelled", 2),
-                    ev("w1", "created", 0, first),
-                    ev("w1", "created", 1, late),
-                    ev("w1", "placed", 1),
-                    # w2: incomplete — must never emit
-                    ev("w2", "created", 0),
-                ],
-                0,
-            )
-            deadline = time.time() + 90
-            while time.time() < deadline:
-                if query.exception():
-                    raise query.exception()
-                if spark.table(name).count() >= 1:
-                    break
-                time.sleep(0.3)
-            out = {
-                r.order_id: json.loads(r.payload)
-                for r in spark.table(name).collect()
-            }
-            assert "w1" in out
-            assert [e["type"] for e in out["w1"]["events"]] == [
-                "created",
-                "placed",
-                "cancelled",
-            ]
-            assert out["w1"]["events"][0]["order_details"] == {
-                "which": "first"
-            }
-            # settle two more buffer windows: w2 stays dropped
-            time.sleep(2 * BUFFER_MS / 1000)
-            assert "w2" not in {
-                r.order_id for r in spark.table(name).collect()
-            }
-        finally:
-            query.stop()
+        deadline = time.time() + 90
+        while time.time() < deadline:
+            if query.exception():
+                raise query.exception()
+            if spark.table(name).count() >= 1:
+                break
+            time.sleep(0.3)
+        out = {
+            r.order_id: json.loads(r.payload)
+            for r in spark.table(name).collect()
+        }
+        assert "w1" in out
+        assert [e["type"] for e in out["w1"]["events"]] == [
+            "created",
+            "placed",
+            "cancelled",
+        ]
+        assert out["w1"]["events"][0]["order_details"] == {
+            "which": "first"
+        }
+        # settle two more buffer windows: w2 stays dropped
+        time.sleep(2 * BUFFER_MS / 1000)
+        assert "w2" not in {
+            r.order_id for r in spark.table(name).collect()
+        }
     finally:
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
+        query.stop()
 
 
 @pytest.mark.skipif(
-    not _tws_protocol_available(),
+    not tws_available(),
     reason="TWS state-server protocol needs the protobuf runtime or the "
     "proto_shim; processor semantics are covered by the deterministic "
     "layer-1 tests above",
 )
-def test_e2e_tws_event_time_emits_on_watermark(spark, tmp_path):
+def test_e2e_tws_event_time_emits_on_watermark(spark, tmp_path, state_store):
     """Event-time TWS twin end-to-end: windows close when the WATERMARK
     passes deadline (a far-future heartbeat advances it), complete
     orders emit in priority order, incomplete ones drop — replay-
@@ -429,207 +408,185 @@ def test_e2e_tws_event_time_emits_on_watermark(spark, tmp_path):
     than the watermark are dropped by the ENGINE before the processor
     (numRowsDroppedByWatermark) — measured identical in the v1 twin, so
     the two event-time implementations agree on late data end-to-end."""
-    prev = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming."
-        "state.HDFSBackedStateStoreProvider",
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming."
-        "state.RocksDBStateStoreProvider",
+    state_store("rocksdb")
+    src = tmp_path / "in"
+    src.mkdir()
+    name = f"twset_{uuid.uuid4().hex[:8]}"
+    events = spark.readStream.schema(SCHEMA).parquet(str(src))
+    query = (
+        unify_stream_tws_event_time(events, buffer_ms=5000)
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
     )
     try:
-        src = tmp_path / "in"
-        src.mkdir()
-        name = f"twset_{uuid.uuid4().hex[:8]}"
-        events = spark.readStream.schema(SCHEMA).parquet(str(src))
-        query = (
-            unify_stream_tws_event_time(events, buffer_ms=5000)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .start()
+        # w1 completes within its 5 s event-time window (duplicate
+        # created is first-wins-suppressed); w2 stays incomplete
+        write_batch(
+            src,
+            [
+                ev("w1", "cancelled", 4),
+                ev("w1", "created", 0, json.dumps({"which": "first"})),
+                ev("w1", "created", 2, json.dumps({"which": "late"})),
+                ev("w1", "placed", 2),
+                ev("w2", "created", 1),
+            ],
+            0,
         )
-        try:
-            # w1 completes within its 5 s event-time window (duplicate
-            # created is first-wins-suppressed); w2 stays incomplete
-            write_batch(
-                src,
-                [
-                    ev("w1", "cancelled", 4),
-                    ev("w1", "created", 0, json.dumps({"which": "first"})),
-                    ev("w1", "created", 2, json.dumps({"which": "late"})),
-                    ev("w1", "placed", 2),
-                    ev("w2", "created", 1),
-                ],
-                0,
-            )
-            # heartbeat at event-time 59 s pushes the watermark past both
-            # deadlines (delay 2 s -> wm 57 s)
-            write_batch(src, [ev("hb", "created", 59)], 1)
-            deadline = time.time() + 120
-            while time.time() < deadline:
-                if query.exception():
-                    raise query.exception()
-                if any(
-                    r.order_id == "w1" for r in spark.table(name).collect()
-                ):
-                    break
-                time.sleep(0.3)
-            out = {
-                r.order_id: json.loads(r.payload)
-                for r in spark.table(name).collect()
-            }
-            assert "w1" in out
-            assert [e["type"] for e in out["w1"]["events"]] == [
-                "created",
-                "placed",
-                "cancelled",
-            ]
-            assert out["w1"]["events"][0]["order_details"] == {
-                "which": "first"
-            }
-            assert "w2" not in out  # incomplete: dropped at expiry
+        # heartbeat at event-time 59 s pushes the watermark past both
+        # deadlines (delay 2 s -> wm 57 s)
+        write_batch(src, [ev("hb", "created", 59)], 1)
+        deadline = time.time() + 120
+        while time.time() < deadline:
+            if query.exception():
+                raise query.exception()
+            if any(
+                r.order_id == "w1" for r in spark.table(name).collect()
+            ):
+                break
+            time.sleep(0.3)
+        out = {
+            r.order_id: json.loads(r.payload)
+            for r in spark.table(name).collect()
+        }
+        assert "w1" in out
+        assert [e["type"] for e in out["w1"]["events"]] == [
+            "created",
+            "placed",
+            "cancelled",
+        ]
+        assert out["w1"]["events"][0]["order_details"] == {
+            "which": "first"
+        }
+        assert "w2" not in out  # incomplete: dropped at expiry
 
-            # sub-watermark lifecycle (complete, but far behind the 57 s
-            # watermark): engine-dropped before the processor, exactly
-            # like the v1 twin — never emits
-            write_batch(
-                src,
-                [
-                    ev("late1", "created", 0),
-                    ev("late1", "placed", 2),
-                    ev("late1", "cancelled", 4),
-                ],
-                2,
-            )
-            deadline = time.time() + 30
-            dropped = 0
-            while time.time() < deadline:
-                if query.exception():
-                    raise query.exception()
-                dropped = sum(
-                    (p.get("stateOperators") or [{}])[0].get(
-                        "numRowsDroppedByWatermark", 0
-                    )
-                    for p in query.recentProgress
+        # sub-watermark lifecycle (complete, but far behind the 57 s
+        # watermark): engine-dropped before the processor, exactly
+        # like the v1 twin — never emits
+        write_batch(
+            src,
+            [
+                ev("late1", "created", 0),
+                ev("late1", "placed", 2),
+                ev("late1", "cancelled", 4),
+            ],
+            2,
+        )
+        deadline = time.time() + 30
+        dropped = 0
+        while time.time() < deadline:
+            if query.exception():
+                raise query.exception()
+            dropped = sum(
+                (p.get("stateOperators") or [{}])[0].get(
+                    "numRowsDroppedByWatermark", 0
                 )
-                if dropped >= 3:
-                    break
-                time.sleep(0.3)
-            assert dropped >= 3
-            assert "late1" not in {
-                r.order_id for r in spark.table(name).collect()
-            }
-        finally:
-            query.stop()
+                for p in query.recentProgress
+            )
+            if dropped >= 3:
+                break
+            time.sleep(0.3)
+        assert dropped >= 3
+        assert "late1" not in {
+            r.order_id for r in spark.table(name).collect()
+        }
     finally:
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
+        query.stop()
 
 
 @pytest.mark.skipif(
-    not _tws_protocol_available(),
+    not tws_available(),
     reason="TWS state-server protocol needs the protobuf runtime or the "
     "proto_shim; processor semantics are covered by the deterministic "
     "layer-1 tests above",
 )
 def test_e2e_tws_event_time_recovers_open_buffer_across_restart(
-    spark, tmp_path
+    spark, tmp_path, state_store
 ):
     """Event-time TWS recovery, mirroring the v1 twin's test: an OPEN
     buffer (2 of 3 events, watermark still low) survives a checkpoint
     restart; the completing event plus a watermark kicker arrive only
     AFTER the restart, so the emission requires the recovered ValueState
     row and the recovered event-time timer."""
-    prev = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming."
-        "state.HDFSBackedStateStoreProvider",
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming."
-        "state.RocksDBStateStoreProvider",
-    )
-    try:
-        src = tmp_path / "in"
-        src.mkdir()
-        out = tmp_path / "out"
-        out.mkdir()
-        ckpt = str(tmp_path / "ckpt")
-        out_schema = "order_id string, n_events int, payload string"
+    state_store("rocksdb")
+    src = tmp_path / "in"
+    src.mkdir()
+    out = tmp_path / "out"
+    out.mkdir()
+    ckpt = str(tmp_path / "ckpt")
+    out_schema = "order_id string, n_events int, payload string"
 
-        def sink_df():
-            return spark.read.schema(out_schema).parquet(str(out))
+    def sink_df():
+        return spark.read.schema(out_schema).parquet(str(out))
 
-        def start():
-            events = spark.readStream.schema(SCHEMA).parquet(str(src))
-            return (
-                unify_stream_tws_event_time(events, buffer_ms=5000)
-                .writeStream.format("parquet")
-                .option("path", str(out))
-                .outputMode("append")
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-
-        write_batch(
-            src, [ev("o9", "created", 0), ev("o9", "placed", 1)], 0
+    def start():
+        events = spark.readStream.schema(SCHEMA).parquet(str(src))
+        return (
+            unify_stream_tws_event_time(events, buffer_ms=5000)
+            .writeStream.format("parquet")
+            .option("path", str(out))
+            .outputMode("append")
+            .option("checkpointLocation", ckpt)
+            .start()
         )
-        query = start()
-        try:
-            deadline = time.time() + 90
-            while time.time() < deadline:
-                if query.exception():
-                    raise query.exception()
-                if sum(
-                    p["numInputRows"] for p in query.recentProgress
-                ) >= 2:
-                    break
-                time.sleep(0.3)
-            else:
-                raise AssertionError("first query never ingested batch 0")
-            assert sink_df().count() == 0  # buffer open, watermark low
-        finally:
-            query.stop()
 
-        query = start()
-        try:
-            write_batch(src, [ev("o9", "cancelled", 2)], 1)
-            write_batch(src, [ev("hb", "created", 59)], 2)  # wm kicker
-            deadline = time.time() + 120
-            while time.time() < deadline:
-                if query.exception():
-                    raise query.exception()
-                if any(r.order_id == "o9" for r in sink_df().collect()):
-                    break
-                time.sleep(0.3)
-            got = {
-                r.order_id: json.loads(r.payload)
-                for r in sink_df().collect()
-            }
-            assert "o9" in got, "open event-time buffer lost across restart"
-            assert [e["type"] for e in got["o9"]["events"]] == [
-                "created",
-                "placed",
-                "cancelled",
-            ]
-            assert "hb" not in got  # kicker's own order: incomplete, drops
-        finally:
-            query.stop()
+    write_batch(
+        src, [ev("o9", "created", 0), ev("o9", "placed", 1)], 0
+    )
+    query = start()
+    try:
+        deadline = time.time() + 90
+        while time.time() < deadline:
+            if query.exception():
+                raise query.exception()
+            if sum(
+                p["numInputRows"] for p in query.recentProgress
+            ) >= 2:
+                break
+            time.sleep(0.3)
+        else:
+            raise AssertionError("first query never ingested batch 0")
+        assert sink_df().count() == 0  # buffer open, watermark low
     finally:
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
+        query.stop()
+
+    query = start()
+    try:
+        write_batch(src, [ev("o9", "cancelled", 2)], 1)
+        write_batch(src, [ev("hb", "created", 59)], 2)  # wm kicker
+        deadline = time.time() + 120
+        while time.time() < deadline:
+            if query.exception():
+                raise query.exception()
+            if any(r.order_id == "o9" for r in sink_df().collect()):
+                break
+            time.sleep(0.3)
+        got = {
+            r.order_id: json.loads(r.payload)
+            for r in sink_df().collect()
+        }
+        assert "o9" in got, "open event-time buffer lost across restart"
+        assert [e["type"] for e in got["o9"]["events"]] == [
+            "created",
+            "placed",
+            "cancelled",
+        ]
+        assert "hb" not in got  # kicker's own order: incomplete, drops
+    finally:
+        query.stop()
 
 
 @pytest.mark.skipif(
-    not _tws_protocol_available(),
+    not tws_available(),
     reason="TWS state-server protocol needs the protobuf runtime or the "
     "proto_shim; processor semantics are covered by the deterministic "
     "layer-1 tests above",
 )
-def test_e2e_tws_recovers_state_and_timer_across_restart(spark, tmp_path):
+def test_e2e_tws_recovers_state_and_timer_across_restart(
+    spark, tmp_path, state_store
+):
     """Kill-and-restart durability, the reference's crash-recovery
     contract (persistent KV state store, SURVEY §2 S5) on the TWS
     runtime: a buffered-but-unexpired order written before the stop must
@@ -649,99 +606,87 @@ def test_e2e_tws_recovers_state_and_timer_across_restart(spark, tmp_path):
     foreign key, so r1's emission can still only come from recovered
     state + a recovered timer."""
     buffer_ms = 30_000  # wide enough that batch 0 commits before expiry
-    prev = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming."
-        "state.HDFSBackedStateStoreProvider",
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming."
-        "state.RocksDBStateStoreProvider",
-    )
-    try:
-        src = tmp_path / "in"
-        src.mkdir()
-        out = tmp_path / "out"
-        out.mkdir()
-        ckpt = str(tmp_path / "ckpt")
-        out_schema = "order_id string, n_events int, payload string"
+    state_store("rocksdb")
+    src = tmp_path / "in"
+    src.mkdir()
+    out = tmp_path / "out"
+    out.mkdir()
+    ckpt = str(tmp_path / "ckpt")
+    out_schema = "order_id string, n_events int, payload string"
 
-        def sink_df():
-            return spark.read.schema(out_schema).parquet(str(out))
+    def sink_df():
+        return spark.read.schema(out_schema).parquet(str(out))
 
-        events = spark.readStream.schema(SCHEMA).parquet(str(src))
-        write_batch(
-            src,
-            [
-                # r1: complete before the stop; must emit after restart
-                ev("r1", "created", 0),
-                ev("r1", "placed", 1),
-                ev("r1", "cancelled", 2),
-                # r2: incomplete; must never emit, restart or not
-                ev("r2", "created", 0),
-            ],
-            0,
+    events = spark.readStream.schema(SCHEMA).parquet(str(src))
+    write_batch(
+        src,
+        [
+            # r1: complete before the stop; must emit after restart
+            ev("r1", "created", 0),
+            ev("r1", "placed", 1),
+            ev("r1", "cancelled", 2),
+            # r2: incomplete; must never emit, restart or not
+            ev("r2", "created", 0),
+        ],
+        0,
+    )
+
+    def start():
+        return (
+            unify_stream_tws(events, buffer_ms=buffer_ms)
+            .writeStream.format("parquet")
+            .option("path", str(out))
+            .outputMode("append")
+            .option("checkpointLocation", ckpt)
+            .start()
         )
 
-        def start():
-            return (
-                unify_stream_tws(events, buffer_ms=buffer_ms)
-                .writeStream.format("parquet")
-                .option("path", str(out))
-                .outputMode("append")
-                .option("checkpointLocation", ckpt)
-                .start()
+    query = start()
+    try:
+        # wait for batch 0 (all 4 rows) to COMMIT, then stop while the
+        # 30 s timers are still pending
+        deadline = time.time() + 90
+        seen = 0
+        while time.time() < deadline:
+            if query.exception():
+                raise query.exception()
+            seen = sum(
+                p["numInputRows"] for p in query.recentProgress
             )
-
-        query = start()
-        try:
-            # wait for batch 0 (all 4 rows) to COMMIT, then stop while the
-            # 30 s timers are still pending
-            deadline = time.time() + 90
-            seen = 0
-            while time.time() < deadline:
-                if query.exception():
-                    raise query.exception()
-                seen = sum(
-                    p["numInputRows"] for p in query.recentProgress
-                )
-                if seen >= 4:
-                    break
-                time.sleep(0.3)
-            assert seen >= 4, "batch 0 never committed"
-            assert sink_df().count() == 0  # nothing expired yet
-        finally:
-            query.stop()
-
-        query = start()
-        try:
-            # one foreign-key event seeds the restarted engine's first
-            # batch (see docstring); r1's own emission can only come
-            # from the recovered ValueState + recovered timer
-            write_batch(src, [ev("nudge", "created", 0)], 1)
-            deadline = time.time() + 240
-            while time.time() < deadline:
-                if query.exception():
-                    raise query.exception()
-                if sink_df().count() >= 1:
-                    break
-                time.sleep(0.5)
-            got = {
-                r.order_id: json.loads(r.payload)
-                for r in sink_df().collect()
-            }
-            assert "r1" in got, "buffered order lost across restart"
-            assert [e["type"] for e in got["r1"]["events"]] == [
-                "created",
-                "placed",
-                "cancelled",
-            ]
-            assert "r2" not in got  # incomplete: dropped at expiry
-        finally:
-            query.stop()
+            if seen >= 4:
+                break
+            time.sleep(0.3)
+        assert seen >= 4, "batch 0 never committed"
+        assert sink_df().count() == 0  # nothing expired yet
     finally:
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
+        query.stop()
+
+    query = start()
+    try:
+        # one foreign-key event seeds the restarted engine's first
+        # batch (see docstring); r1's own emission can only come
+        # from the recovered ValueState + recovered timer
+        write_batch(src, [ev("nudge", "created", 0)], 1)
+        deadline = time.time() + 240
+        while time.time() < deadline:
+            if query.exception():
+                raise query.exception()
+            if sink_df().count() >= 1:
+                break
+            time.sleep(0.5)
+        got = {
+            r.order_id: json.loads(r.payload)
+            for r in sink_df().collect()
+        }
+        assert "r1" in got, "buffered order lost across restart"
+        assert [e["type"] for e in got["r1"]["events"]] == [
+            "created",
+            "placed",
+            "cancelled",
+        ]
+        assert "r2" not in got  # incomplete: dropped at expiry
+    finally:
+        query.stop()
 
 
 def test_topology_builds_with_tws_mode(spark):
