@@ -43,17 +43,23 @@ micro-batch slicing. Its bounded-state option is ``retention_ms``
 watermark-driven event-time horizon are forgotten, so even the
 forgetting replays deterministically.
 
+The dedup rule lives once, in ``decide``: the first decided row claims
+the bucket; with a threshold each later row is a duplicate only when its
+signature estimate against the exemplar clears it. ``make_bucket_fn``
+is the one ``applyInPandasWithState`` adapter around it for both clocks
+and both modes; it only loads and stores the bucket's state row and arms
+the timeout its clock needs.
+
 CHECKPOINT COMPATIBILITY: adding ``last_ts`` (round 9) widened the
-event-time kernels' state row. A stream restarted from a pre-change
-checkpoint is handled defensively in Python (old 5/7-field tuples read
-as ``last_ts=None``; retention re-arms on the bucket's next touch), but
-Spark's JVM-side state deserializer may reject the widened schema
-before Python runs — event-time dedup streams upgraded across that
-change should restart on a FRESH checkpoint.
+event-time state row. ``_load`` reads a pre-change 5/7-field row with
+``last_ts=None`` (retention re-arms on the bucket's next touch), but
+Spark's JVM-side state schema check rejects the widened schema before
+Python runs — the one-run upgrade is docs/DEPLOYMENT.md §5.
 """
 
 from __future__ import annotations
 
+from operator import itemgetter
 from typing import Any, Iterator
 
 import pandas as pd
@@ -73,117 +79,273 @@ BAND_DECISION_VERIFIED_SCHEMA = BAND_DECISION_SCHEMA + ", est double"
 BUCKET_STATE_SCHEMA = "first_seq long, first_id long"
 # verified mode also stores the exemplar's full signature
 BUCKET_STATE_VERIFIED_SCHEMA = BUCKET_STATE_SCHEMA + ", sig array<long>"
+# event-time variant: a pending buffer rides in the bucket state until
+# the watermark passes each document's event time; last_ts records the
+# event time of the bucket's most recent touch (the retention clock)
+BUCKET_STATE_EVENT_SCHEMA = (
+    "first_seq long, first_id long,"
+    " pend_seqs array<long>, pend_ids array<long>, pend_ts array<long>,"
+    " last_ts long"
+)
+# verified event-time: exemplar signature + per-pending-doc signatures
+BUCKET_STATE_EVENT_VERIFIED_SCHEMA = (
+    "first_seq long, first_id long, sig array<long>,"
+    " pend_seqs array<long>, pend_ids array<long>, pend_ts array<long>,"
+    " pend_sigs array<array<long>>, last_ts long"
+)
+
+_EMITTED = ("doc_id", "seq", "is_dup", "dup_of", "est")
+_by_seq = itemgetter(0, 1)  # a row is (seq, doc_id, sig, ts)
 
 
-def make_bucket_first_wins_fn(ttl_ms: int | None = None):
-    """Stateful kernel: per (band, band_key) group, the first-arriving
-    document claims the bucket; every later arrival is flagged against
-    the exemplar. Rows within a micro-batch are processed in (seq,
-    doc_id) order so intra-batch arrivals resolve exactly like
-    cross-batch ones.
-
-    ``ttl_ms`` (requires ProcessingTimeTimeout wiring) bounds state for
-    infinite streams: a bucket untouched for the TTL is forgotten — its
-    next claimant becomes a fresh exemplar, so the dedup horizon is
-    "anything seen within the retention window", the standard trade for
-    unbounded ingest. Every touch re-arms the timer (LRU semantics:
-    frequently re-sent content stays deduped forever).
+def decide(exemplar, rows, threshold=None, num_hashes=None):
+    """The bucket's dedup rule. ``exemplar`` is the claimant ``(seq,
+    doc_id, sig)`` or None; ``rows`` are the decidable ``(seq, doc_id,
+    sig, ts)`` in (seq, doc_id) order. The first decided row claims an
+    empty bucket. Every later row is a duplicate of the claimant — with a
+    ``threshold``, only when est = equal signature components /
+    ``num_hashes`` >= threshold (exact k/num_hashes doubles); a row below
+    it is emitted with its est and never claims the bucket. Returns the
+    new exemplar and one ``(doc_id, seq, is_dup, dup_of, est)`` per row.
     """
-
-    def fn(
-        key: Any,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            # retention expired with no arrivals: forget the exemplar
-            # (empty generator — nothing to emit for a timeout)
-            state.remove()
-            return
-        band = int(key[0])  # key order is (band, band_key)
-        rows = pd.concat(
-            [p[["doc_id", "seq"]] for p in pdfs], ignore_index=True
-        ).sort_values(["seq", "doc_id"])
-        if state.exists:
-            first_seq, first_id = state.get
-        else:
-            first_seq, first_id = None, None
-        out = {"doc_id": [], "seq": [], "band": [], "is_dup": [], "dup_of": []}
-        for doc_id, seq in rows.itertuples(index=False):
-            doc_id, seq = int(doc_id), int(seq)
-            if first_seq is None:
-                first_seq, first_id = seq, doc_id
-                dup, of = False, None
-            else:
-                dup, of = True, first_id
-            out["doc_id"].append(doc_id)
-            out["seq"].append(seq)
-            out["band"].append(band)
-            out["is_dup"].append(dup)
-            out["dup_of"].append(of)
-        state.update((first_seq, first_id))
-        if ttl_ms is not None:
-            state.setTimeoutDuration(ttl_ms)
-        yield pd.DataFrame(out)
-
-    return fn
+    emissions = []
+    for seq, doc_id, sig, _ts in rows:
+        if exemplar is None:
+            exemplar = (seq, doc_id, sig)
+            emissions.append((doc_id, seq, False, None, None))
+            continue
+        est, dup = None, True
+        if threshold is not None:
+            est = sum(a == b for a, b in zip(sig, exemplar[2])) / num_hashes
+            dup = est >= threshold
+        emissions.append((doc_id, seq, dup, exemplar[1] if dup else None, est))
+    return exemplar, emissions
 
 
-def make_bucket_verified_fn(
-    threshold: float, num_hashes: int, ttl_ms: int | None = None
+def _load(state: GroupState, verified: bool, event_time: bool):
+    """Bucket state row -> (exemplar, pending rows, last_ts).
+
+    A pre-retention event-time checkpoint has no trailing ``last_ts``
+    (5 fields, 7 verified): it reads as ``last_ts=None``. Upgrade path
+    (tests/test_dedup_stream.py::test_pre_retention_5field_checkpoint_compat):
+    under the default stateStore.stateSchemaCheck=true a restart on such
+    a checkpoint fails fast with STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE;
+    with the check disabled for ONE upgrade run the old row deserializes
+    under the widened schema (a trailing nullable long is positionally
+    safe), is read here and re-written with ``last_ts``. Runbook:
+    docs/DEPLOYMENT.md §5 "State-schema upgrades on a live checkpoint".
+    """
+    if not state.exists:
+        return None, [], None
+    row = state.get
+    n = 3 if verified else 2
+    exemplar = None
+    if row[0] is not None:
+        exemplar = (row[0], row[1], list(row[2]) if verified else None)
+    if not event_time:
+        return exemplar, [], None
+    seqs, ids, ts = row[n:n + 3]
+    sigs = [list(g) for g in row[n + 3]] if verified else [None] * len(seqs)
+    width = n + (4 if verified else 3)
+    last_ts = row[width] if len(row) > width else None
+    return exemplar, list(zip(seqs, ids, sigs, ts)), last_ts
+
+
+def _row(exemplar, pend, last_ts, verified: bool, event_time: bool):
+    """Inverse of ``_load``: the state row to store."""
+    seq, doc_id, sig = exemplar or (None, None, None)
+    out = (seq, doc_id) + ((sig,) if verified else ())
+    if event_time:
+        out += tuple([r[i] for r in pend] for i in (0, 1, 3))
+        out += (([r[2] for r in pend],) if verified else ()) + (last_ts,)
+    return out
+
+
+def _arrivals(pdfs, verified: bool, event_time: bool):
+    """The arriving rows as (seq, doc_id, sig, ts) tuples."""
+    for pdf in pdfs:
+        none = [None] * len(pdf)
+        yield from zip(
+            map(int, pdf["seq"].tolist()),
+            map(int, pdf["doc_id"].tolist()),
+            [list(map(int, g)) for g in pdf["_sig"]] if verified else none,
+            map(int, pdf["_ts_ms"].tolist()) if event_time else none,
+        )
+
+
+def make_bucket_fn(
+    threshold: float | None,
+    num_hashes: int,
+    event_time: bool = False,
+    horizon_ms: int | None = None,
 ):
-    """Verified variant: the exemplar's FULL minhash signature lives in
-    the bucket state; a collision is a duplicate only when the estimated
-    jaccard (fraction of equal signature components — exact k/num_hashes
-    doubles, no float drift) clears ``threshold``. False-positive
-    colliders are flagged is_dup=false with their est, and do NOT claim
-    the bucket (the exemplar stays first-wins).
+    """The per-(band, band_key) state function: ``decide`` plus the
+    bookkeeping of one clock. ``threshold`` None is first-wins, a value
+    is verified mode (the exemplar's signature rides in state).
+
+    **Processing time** (``event_time=False``): every arrival decides at
+    once, so the first ARRIVAL claims the bucket; rows within a
+    micro-batch resolve in (seq, doc_id) order, exactly like cross-batch
+    ones. ``horizon_ms`` is ``ttl_ms``: a bucket untouched for it is
+    forgotten (its next claimant is fresh) and every touch re-arms the
+    timer (LRU — frequently re-sent content stays deduped).
+
+    **Event time**: arrivals buffer in state and a row decides once the
+    watermark reaches its event time (``ts <= wm``), so the exemplar is
+    the bucket's MINIMUM seq under any arrival order within the
+    watermark delay, and replays give the same verdicts for any
+    micro-batch slicing. Deciding AT equality is safe: Spark's pre-state
+    late filter drops arrivals with event time <= watermark (measured: a
+    ts==0 row vanished against the initial 0 watermark), so once wm
+    reaches a pending ts no lower-seq claimant at or below it can still
+    arrive. Event times must therefore be strictly positive and monotone
+    in seq (pinned by tests/test_dedup_stream.py). The timeout is armed
+    at the earliest pending ts. ``horizon_ms`` is ``retention_ms``: an
+    exemplar whose last touch's event time (``last_ts``) falls
+    ``horizon_ms`` behind the watermark is forgotten — watermark-driven,
+    so the forgetting replays deterministically too. It never races a
+    pending decision: it only forgets once the buffer is empty.
     """
+    verified = threshold is not None
+    columns = ["doc_id", "seq", "band", "is_dup", "dup_of"] + ["est"] * verified
 
     def fn(
         key: Any,
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
+        if state.hasTimedOut and not event_time:
+            # ttl expired with no arrivals: forget the exemplar
             state.remove()
             return
-        band = int(key[0])  # key order is (band, band_key)
-        rows = pd.concat(
-            [p[["doc_id", "seq", "_sig"]] for p in pdfs], ignore_index=True
-        ).sort_values(["seq", "doc_id"])
-        if state.exists:
-            first_seq, first_id, first_sig = state.get
-            first_sig = list(first_sig)
+        exemplar, pend, last_ts = _load(state, verified, event_time)
+        if not state.hasTimedOut:
+            arrivals = list(_arrivals(pdfs, verified, event_time))
+            pend += arrivals
+            if event_time and arrivals:
+                newest = max(r[3] for r in arrivals)
+                last_ts = newest if last_ts is None else max(last_ts, newest)
+        pend.sort(key=_by_seq)
+        if event_time:
+            wm = state.getCurrentWatermarkMs()
+            ready = [r for r in pend if r[3] <= wm]
+            pend = [r for r in pend if r[3] > wm]
         else:
-            first_seq, first_id, first_sig = None, None, None
-        out = {
-            "doc_id": [], "seq": [], "band": [],
-            "is_dup": [], "dup_of": [], "est": [],
-        }
-        for doc_id, seq, sig in rows.itertuples(index=False):
-            doc_id, seq = int(doc_id), int(seq)
-            sig = [int(x) for x in sig]
-            if first_seq is None:
-                first_seq, first_id, first_sig = seq, doc_id, sig
-                dup, of, est = False, None, None
+            ready, pend = pend, []
+        exemplar, emissions = decide(exemplar, ready, threshold, num_hashes)
+        if not event_time:
+            state.update(_row(exemplar, pend, last_ts, verified, False))
+            if horizon_ms is not None:
+                state.setTimeoutDuration(horizon_ms)
+        else:
+            # the retention horizon; a pre-retention row (last_ts None)
+            # has none until the bucket's next touch
+            expires = None
+            if None not in (horizon_ms, exemplar, last_ts):
+                expires = last_ts + horizon_ms
+            if not pend and expires is not None and wm >= expires:
+                # idle past the event-time horizon: forget the exemplar
+                # (rows decided in this call still emit)
+                state.remove()
             else:
-                n_eq = sum(a == b for a, b in zip(sig, first_sig))
-                est = n_eq / num_hashes
-                dup = est >= threshold
-                of = first_id if dup else None
-            out["doc_id"].append(doc_id)
-            out["seq"].append(seq)
-            out["band"].append(band)
-            out["is_dup"].append(dup)
-            out["dup_of"].append(of)
-            out["est"].append(est)
-        state.update((first_seq, first_id, first_sig))
-        if ttl_ms is not None:
-            state.setTimeoutDuration(ttl_ms)
-        yield pd.DataFrame(out)
+                state.update(_row(exemplar, pend, last_ts, verified, True))
+                fire_at = min(r[3] for r in pend) if pend else expires
+                if fire_at is not None:
+                    # EventTimeTimeout needs a timestamp STRICTLY above
+                    # the watermark. Both targets already are (pending
+                    # ts > wm; an unexpired horizon > wm), so the wm+1
+                    # clamp only guards that contract
+                    state.setTimeoutTimestamp(max(fire_at, wm + 1))
+        if emissions:
+            out = dict(zip(_EMITTED, map(list, zip(*emissions))))
+            out["band"] = [int(key[0])] * len(emissions)  # key: (band, band_key)
+            yield pd.DataFrame({c: out[c] for c in columns})
 
     return fn
+
+
+def _band_rows(
+    docs: DataFrame, id_col, seq_col, text_col, num_hashes, bands,
+    shingle_n, verified,
+) -> DataFrame:
+    """One (doc_id, seq, [_sig,] band, band_key) row per document and
+    band. Band keys are pure scan-local expressions (no pre-state
+    aggregation, so the plan stays legal in append mode). Rows with a
+    null id or seq are dropped first: the bucket decides by them."""
+    from kafka_stream_unify_order_messages_spark.operators.dedup import (
+        minhash_band_cols_local,
+        minhash_sig_band_cols_local,
+    )
+
+    base = docs.select(
+        F.col(id_col).cast("long").alias("doc_id"),
+        F.col(seq_col).cast("long").alias("seq"),
+        F.col(text_col).alias("text"),
+    ).filter(F.col("doc_id").isNotNull() & F.col("seq").isNotNull())
+    keyed_fn = (
+        minhash_sig_band_cols_local if verified else minhash_band_cols_local
+    )
+    keyed = keyed_fn(
+        base,
+        text_col="text",
+        num_hashes=num_hashes,
+        bands=bands,
+        shingle_n=shingle_n,
+    )
+    carry = ["_sig"] if verified else []
+    return keyed.select(
+        "doc_id",
+        "seq",
+        *carry,
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).cast("long").alias("band"),
+                        F.col(f"_bk{b}").alias("band_key"),
+                    )
+                    for b in range(bands)
+                ]
+            )
+        ).alias("_bk"),
+    ).select(
+        "doc_id",
+        "seq",
+        *carry,
+        F.col("_bk.band").alias("band"),
+        F.col("_bk.band_key").alias("band_key"),
+    )
+
+
+def _decide_buckets(rows: DataFrame, threshold, num_hashes, event_time,
+                    horizon_ms) -> DataFrame:
+    """The stateful groupBy on (band, band_key) — the only shuffle."""
+    verified = threshold is not None
+    if event_time:
+        state_schema = (
+            BUCKET_STATE_EVENT_VERIFIED_SCHEMA
+            if verified else BUCKET_STATE_EVENT_SCHEMA
+        )
+        timeout = GroupStateTimeout.EventTimeTimeout
+    else:
+        state_schema = (
+            BUCKET_STATE_VERIFIED_SCHEMA if verified else BUCKET_STATE_SCHEMA
+        )
+        # without a ttl the dedup history is permanent by design
+        timeout = (
+            GroupStateTimeout.ProcessingTimeTimeout
+            if horizon_ms is not None
+            else GroupStateTimeout.NoTimeout
+        )
+    return rows.groupBy("band", "band_key").applyInPandasWithState(
+        make_bucket_fn(threshold, num_hashes, event_time, horizon_ms),
+        outputStructType=(
+            BAND_DECISION_VERIFIED_SCHEMA if verified else BAND_DECISION_SCHEMA
+        ),
+        stateStructType=state_schema,
+        outputMode="append",
+        timeoutConf=timeout,
+    )
 
 
 def band_decisions_stream(
@@ -199,85 +361,29 @@ def band_decisions_stream(
 ) -> DataFrame:
     """Per-band first-wins decisions for a STREAM of (id, seq, text).
 
-    Band keys are pure scan-local expressions (minhash_band_cols_local —
-    no pre-state aggregation, so the plan stays legal in append mode);
-    the only shuffle is the stateful groupBy on (band, band_key). `seq`
+    The only shuffle is the stateful groupBy on (band, band_key). `seq`
     is the arrival order (any unique monotone long — an offset, a file
     sequence number, or the id itself when ids are assigned on arrival).
+    Rows with a null id or seq are dropped.
 
     With ``verify_threshold`` set, the full minhash signature rides into
     the bucket state and a collision only counts as a duplicate when the
     estimated jaccard vs the exemplar clears the threshold — the in-stream
     analogue of the batch candidate-verify step, filtering LSH false
     positives at the cost of num_hashes longs per bucket. Batch twin:
-    `near_dup_verified` (strict-oracled).
+    `near_dup_verified` (strict-oracled). ``ttl_ms`` bounds state for
+    infinite streams (see ``make_bucket_fn``).
 
     Returns an append-mode stream with BAND_DECISION_SCHEMA (plus `est`
     in verified mode); reduce to per-document verdicts with
     `near_dup_verdicts` (all of a document's band rows surface in the
     same micro-batch, so a foreachBatch aggregation is exact).
     """
-    from kafka_stream_unify_order_messages_spark.operators.dedup import (
-        minhash_band_cols_local,
-        minhash_sig_band_cols_local,
+    rows = _band_rows(
+        docs, id_col, seq_col, text_col, num_hashes, bands, shingle_n,
+        verify_threshold is not None,
     )
-
-    base = docs.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        F.col(seq_col).cast("long").alias("seq"),
-        F.col(text_col).alias("text"),
-    )
-    verified = verify_threshold is not None
-    keyed_fn = minhash_sig_band_cols_local if verified else minhash_band_cols_local
-    keyed = keyed_fn(
-        base,
-        text_col="text",
-        num_hashes=num_hashes,
-        bands=bands,
-        shingle_n=shingle_n,
-    )
-    carry = [F.col("_sig")] if verified else []
-    long_rows = keyed.select(
-        "doc_id",
-        "seq",
-        *carry,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).cast("long").alias("band"),
-                        F.col(f"_bk{b}").alias("band_key"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("_bk"),
-    ).select("doc_id", "seq", *(["_sig"] if verified else []),
-             F.col("_bk.band").alias("band"),
-             F.col("_bk.band_key").alias("band_key"))
-    if verified:
-        fn = make_bucket_verified_fn(verify_threshold, num_hashes, ttl_ms)
-        out_schema, state_schema = (
-            BAND_DECISION_VERIFIED_SCHEMA, BUCKET_STATE_VERIFIED_SCHEMA,
-        )
-    else:
-        fn = make_bucket_first_wins_fn(ttl_ms)
-        out_schema, state_schema = BAND_DECISION_SCHEMA, BUCKET_STATE_SCHEMA
-    # ttl_ms bounds state for infinite streams (retention-window dedup);
-    # without it the dedup history is permanent by design — see module
-    # docstring
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if ttl_ms is not None
-        else GroupStateTimeout.NoTimeout
-    )
-    return long_rows.groupBy("band", "band_key").applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=timeout,
-    )
+    return _decide_buckets(rows, verify_threshold, num_hashes, False, ttl_ms)
 
 
 def near_dup_verdicts(band_decisions: DataFrame) -> DataFrame:
@@ -300,288 +406,6 @@ def near_dup_verdicts(band_decisions: DataFrame) -> DataFrame:
     if "est" in band_decisions.columns:
         aggs.append(F.max("est").alias("best_est"))
     return band_decisions.groupBy("doc_id", "seq").agg(*aggs)
-
-
-# event-time variant: a pending buffer rides in the bucket state until
-# the watermark passes each document's event time; last_ts records the
-# event time of the bucket's most recent touch (the retention clock)
-BUCKET_STATE_EVENT_SCHEMA = (
-    "first_seq long, first_id long,"
-    " pend_seqs array<long>, pend_ids array<long>, pend_ts array<long>,"
-    " last_ts long"
-)
-# verified event-time: exemplar signature + per-pending-doc signatures
-BUCKET_STATE_EVENT_VERIFIED_SCHEMA = (
-    "first_seq long, first_id long, sig array<long>,"
-    " pend_seqs array<long>, pend_ids array<long>, pend_ts array<long>,"
-    " pend_sigs array<array<long>>, last_ts long"
-)
-
-
-def make_bucket_first_wins_event_fn(retention_ms: int | None = None):
-    """SEQ-DETERMINISTIC first-wins kernel (event-time twin of
-    ``make_bucket_first_wins_fn``): the bucket's exemplar is the MINIMUM
-    ``seq`` among all documents that ever touch it — the batch query
-    ``near_dup_first_wins``'s ``min(doc_id)`` — regardless of arrival
-    order, as long as every document arrives within the watermark delay
-    of its event time.
-
-    Mechanism: arrivals buffer in state; a buffered document is DECIDED
-    only once the watermark reaches its event time (``ts <= wm``),
-    because then no lower-seq claimant can still arrive (Spark's
-    pre-state late filter drops arrivals with event time <= watermark,
-    and event times must be monotone in ``seq`` — derive them from the
-    offset, as ``band_decisions_stream_event_time`` does). Decidable
-    rows resolve in (seq, doc_id) order, so the first decision a bucket
-    ever makes is its global-minimum seq: replaying the same input gives
-    the same verdicts for ANY micro-batch slicing — the determinism the
-    processing-time kernel (and the reference's wall-clock punctuation)
-    only has under seq-ordered arrival.
-
-    By default the exemplar half of the state is permanent (dedup
-    history never expires) and only the pending buffer arms an
-    event-time timeout, at the earliest undecided event time. For
-    INFINITE streams ``retention_ms`` is the event-time twin of the
-    processing-time kernel's ``ttl_ms``: a bucket whose last touch's
-    EVENT TIME (``last_ts``) falls ``retention_ms`` behind the watermark
-    forgets its exemplar — the next claimant is fresh, so the dedup
-    horizon is "anything seen within the retention window of event
-    time". Every touch re-arms (LRU semantics), and the horizon is
-    watermark-driven, so it is as replay-deterministic as the verdicts:
-    the same input forgets the same exemplars at the same watermarks
-    under any micro-batch slicing. Retention can never race a pending
-    decision: while rows pend, ``last_ts >= max(pending ts) > wm``, so
-    the idle horizon is unreachable until the buffer drains.
-    """
-
-    def fn(
-        key: Any,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        band = int(key[0])  # key order is (band, band_key)
-        if state.exists:
-            st = state.get
-            if len(st) == 5:
-                # pre-retention checkpoint layout (no last_ts column):
-                # tolerate it as last_ts=None — retention re-arms on the
-                # bucket's next touch. Upgrade path (verified by
-                # test_pre_retention_5field_checkpoint_compat): under the
-                # default stateStore.stateSchemaCheck=true a restart on a
-                # 5-field checkpoint fails fast with the named
-                # STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE error; with the
-                # check disabled for ONE upgrade run, the old row
-                # deserializes correctly under the widened schema (a
-                # trailing nullable long is positionally safe), this
-                # branch reads it, and re-writes store 6 fields —
-                # re-enable the check afterwards. Operator-facing
-                # runbook: docs/DEPLOYMENT.md §5 "State-schema upgrades
-                # on a live checkpoint".
-                first_seq, first_id, p_seqs, p_ids, p_ts = st
-                last_ts = None
-            else:
-                first_seq, first_id, p_seqs, p_ids, p_ts, last_ts = st
-            pend = sorted(zip(p_seqs, p_ids, p_ts))
-        else:
-            first_seq, first_id, pend, last_ts = None, None, [], None
-        if not state.hasTimedOut:
-            for pdf in pdfs:
-                for doc_id, seq, ts in pdf[
-                    ["doc_id", "seq", "_ts_ms"]
-                ].itertuples(index=False):
-                    ts = int(ts)
-                    pend.append((int(seq), int(doc_id), ts))
-                    if last_ts is None or ts > last_ts:
-                        last_ts = ts
-            pend.sort()
-        wm = state.getCurrentWatermarkMs()
-        out = {
-            "doc_id": [], "seq": [], "band": [], "is_dup": [], "dup_of": []
-        }
-        remaining = []
-        for seq, doc_id, ts in pend:
-            # decidable at ts <= wm: Spark's pre-state late filter drops
-            # arriving rows with event time <= watermark (measured: a
-            # ts==0 row vanished against the initial 0 watermark), so
-            # once wm reaches a pending row's ts no lower-seq claimant
-            # at or below it can ever arrive — deciding AT equality is
-            # safe and keeps latency one timeout-hop lower than a strict
-            # rule would. Event times must therefore be STRICTLY
-            # positive — the initial watermark is 0 and would eat a
-            # ts==0 row. The ts == wm boundary is pinned by
-            # tests/test_dedup_stream.py.
-            if ts <= wm:
-                if first_seq is None:
-                    first_seq, first_id = seq, doc_id
-                    dup, of = False, None
-                else:
-                    dup, of = True, first_id
-                out["doc_id"].append(doc_id)
-                out["seq"].append(seq)
-                out["band"].append(band)
-                out["is_dup"].append(dup)
-                out["dup_of"].append(of)
-            else:
-                remaining.append((seq, doc_id, ts))
-        if (
-            retention_ms is not None
-            and not remaining
-            and first_seq is not None
-            and last_ts is not None
-            and wm >= last_ts + retention_ms
-        ):
-            # idle past the event-time horizon: forget the exemplar (any
-            # rows decided this call still emit below)
-            state.remove()
-            if out["doc_id"]:
-                yield pd.DataFrame(out)
-            return
-        state.update(
-            (
-                first_seq,
-                first_id,
-                [s for s, _d, _t in remaining],
-                [d for _s, d, _t in remaining],
-                [t for _s, _d, t in remaining],
-                last_ts,
-            )
-        )
-        if remaining:
-            fire_at = min(t for _s, _d, t in remaining)
-        elif retention_ms is not None and first_seq is not None:
-            fire_at = last_ts + retention_ms
-        else:
-            fire_at = None
-        if fire_at is not None:
-            # fire when the watermark passes the earliest undecided
-            # event time (or, with retention and an empty buffer, the
-            # idle horizon). The wm+1 clamp is a defensive invariant,
-            # not behavior: EventTimeTimeout requires a timestamp
-            # STRICTLY above the watermark, and under the `ts <= wm`
-            # decide rule every remaining ts already exceeds wm (rows at
-            # ts <= wm just decided), while an un-forgotten horizon
-            # satisfies last_ts + retention_ms > wm (else the branch
-            # above removed the state) — so the max() never alters
-            # fire_at; it only guards the Spark contract if either
-            # invariant is ever broken.
-            state.setTimeoutTimestamp(max(fire_at, wm + 1))
-        if out["doc_id"]:
-            yield pd.DataFrame(out)
-
-    return fn
-
-
-def make_bucket_verified_event_fn(
-    threshold: float, num_hashes: int, retention_ms: int | None = None
-):
-    """Verified + seq-deterministic: the event-time kernel carrying the
-    exemplar's full minhash signature (make_bucket_verified_fn's rule:
-    a collision is a duplicate only when the estimated jaccard clears
-    ``threshold``; sub-threshold colliders never claim the bucket) on
-    the watermark-decided pending buffer (make_bucket_first_wins_event_fn's
-    mechanism — see its docstring for the decide rule and for
-    ``retention_ms``, the watermark-driven event-time exemplar horizon)."""
-
-    def fn(
-        key: Any,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        band = int(key[0])  # key order is (band, band_key)
-        if state.exists:
-            st = state.get
-            if len(st) == 7:
-                # pre-retention checkpoint layout (no last_ts) — see the
-                # first-wins kernel's note on JVM-side schema acceptance
-                first_seq, first_id, first_sig, p_seqs, p_ids, p_ts, p_sigs = st
-                last_ts = None
-            else:
-                (
-                    first_seq, first_id, first_sig,
-                    p_seqs, p_ids, p_ts, p_sigs, last_ts,
-                ) = st
-            first_sig = list(first_sig) if first_sig is not None else None
-            pend = sorted(
-                zip(p_seqs, p_ids, p_ts, [list(g) for g in p_sigs])
-            )
-        else:
-            first_seq, first_id, first_sig, pend, last_ts = (
-                None, None, None, [], None,
-            )
-        if not state.hasTimedOut:
-            for pdf in pdfs:
-                for doc_id, seq, ts, sig in pdf[
-                    ["doc_id", "seq", "_ts_ms", "_sig"]
-                ].itertuples(index=False):
-                    ts = int(ts)
-                    pend.append(
-                        (int(seq), int(doc_id), ts,
-                         [int(x) for x in sig])
-                    )
-                    if last_ts is None or ts > last_ts:
-                        last_ts = ts
-            pend.sort()
-        wm = state.getCurrentWatermarkMs()
-        out = {
-            "doc_id": [], "seq": [], "band": [],
-            "is_dup": [], "dup_of": [], "est": [],
-        }
-        remaining = []
-        for seq, doc_id, ts, sig in pend:
-            if ts <= wm:  # decide rule: see make_bucket_first_wins_event_fn
-                if first_seq is None:
-                    first_seq, first_id, first_sig = seq, doc_id, sig
-                    dup, of, est = False, None, None
-                else:
-                    n_eq = sum(a == b for a, b in zip(sig, first_sig))
-                    est = n_eq / num_hashes
-                    dup = est >= threshold
-                    of = first_id if dup else None
-                out["doc_id"].append(doc_id)
-                out["seq"].append(seq)
-                out["band"].append(band)
-                out["is_dup"].append(dup)
-                out["dup_of"].append(of)
-                out["est"].append(est)
-            else:
-                remaining.append((seq, doc_id, ts, sig))
-        if (
-            retention_ms is not None
-            and not remaining
-            and first_seq is not None
-            and last_ts is not None
-            and wm >= last_ts + retention_ms
-        ):
-            state.remove()
-            if out["doc_id"]:
-                yield pd.DataFrame(out)
-            return
-        state.update(
-            (
-                first_seq,
-                first_id,
-                first_sig,
-                [s for s, _d, _t, _g in remaining],
-                [d for _s, d, _t, _g in remaining],
-                [t for _s, _d, t, _g in remaining],
-                [g for _s, _d, _t, g in remaining],
-                last_ts,
-            )
-        )
-        if remaining:
-            fire_at = min(t for _s, _d, t, _g in remaining)
-        elif retention_ms is not None and first_seq is not None:
-            fire_at = last_ts + retention_ms
-        else:
-            fire_at = None
-        if fire_at is not None:
-            # wm+1 clamp: defensive invariant only — see
-            # make_bucket_first_wins_event_fn
-            state.setTimeoutTimestamp(max(fire_at, wm + 1))
-        if out["doc_id"]:
-            yield pd.DataFrame(out)
-
-    return fn
 
 
 def band_decisions_stream_event_time(
@@ -640,73 +464,15 @@ def band_decisions_stream_event_time(
     timeout fires independently), so aggregate verdicts over the drained
     frame or with a downstream stateful aggregation, not per-batch.
     """
-    from kafka_stream_unify_order_messages_spark.operators.dedup import (
-        minhash_band_cols_local,
-        minhash_sig_band_cols_local,
-    )
-
-    base = docs.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        F.col(seq_col).cast("long").alias("seq"),
-        F.col(text_col).alias("text"),
-    )
-    verified = verify_threshold is not None
-    keyed_fn = (
-        minhash_sig_band_cols_local if verified else minhash_band_cols_local
-    )
-    keyed = keyed_fn(
-        base,
-        text_col="text",
-        num_hashes=num_hashes,
-        bands=bands,
-        shingle_n=shingle_n,
-    )
-    carry = ["_sig"] if verified else []
-    long_rows = (
-        keyed.select(
-            "doc_id",
-            "seq",
-            *carry,
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).cast("long").alias("band"),
-                            F.col(f"_bk{b}").alias("band_key"),
-                        )
-                        for b in range(bands)
-                    ]
-                )
-            ).alias("_bk"),
-        )
-        .select(
-            "doc_id",
-            "seq",
-            *carry,
-            F.col("_bk.band").alias("band"),
-            F.col("_bk.band_key").alias("band_key"),
+    rows = (
+        _band_rows(
+            docs, id_col, seq_col, text_col, num_hashes, bands, shingle_n,
+            verify_threshold is not None,
         )
         .withColumn("_ts_ms", F.col("seq"))
         .withColumn("_event_time", F.timestamp_millis(F.col("seq")))
         .withWatermark("_event_time", watermark_delay)
     )
-    if verified:
-        fn = make_bucket_verified_event_fn(
-            verify_threshold, num_hashes, retention_ms
-        )
-        out_schema, state_schema = (
-            BAND_DECISION_VERIFIED_SCHEMA,
-            BUCKET_STATE_EVENT_VERIFIED_SCHEMA,
-        )
-    else:
-        fn = make_bucket_first_wins_event_fn(retention_ms)
-        out_schema, state_schema = (
-            BAND_DECISION_SCHEMA, BUCKET_STATE_EVENT_SCHEMA,
-        )
-    return long_rows.groupBy("band", "band_key").applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return _decide_buckets(
+        rows, verify_threshold, num_hashes, True, retention_ms
     )

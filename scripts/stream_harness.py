@@ -10,9 +10,10 @@ source staging, the watermark kicker, the query lifecycle (start, drain,
 clean-up) and the report step.
 
 A cell is a dict naming one measurement (say lifecycles, mode, store,
-semantics); a record is ``cell | measurements``. The cell's fields are
-the merge key: a run replaces the committed records of the cells it
-measured and keeps every other row. The default grid is exactly the set
+semantics); a record is ``cell | measurements``, stamped with the
+``host`` that measured it. The cell's fields are the merge key: a run
+replaces the committed records of the cells it measured and keeps every
+other row. The default grid is exactly the set
 of cells in the committed JSON, so a full run regenerates every row.
 Every harness takes the same two options:
 
@@ -26,6 +27,7 @@ from __future__ import annotations
 import argparse
 import contextlib
 import json
+import os
 import shutil
 import sys
 import tempfile
@@ -190,6 +192,12 @@ def run_grouped(spark, cells, source_of, stage_source, run_cell,
     return records
 
 
+def host() -> dict:
+    """The measuring machine: logical cores and total memory in GB."""
+    mem = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return {"cores": os.cpu_count(), "mem_gb": round(mem / 2**30)}
+
+
 def cell_key(record: dict, fields: dict) -> tuple:
     """The merge key: the record's value for each cell field, or the
     field's default where an older record lacks it."""
@@ -248,8 +256,9 @@ def dump_records(records: list[dict], like) -> str:
 def main(name: str, grid: list[dict], fields: dict, measure, render,
          argv=None) -> None:
     """Measure the selected cells of ``grid`` with ``measure(cells)``,
-    merge the fresh records into ``{name}.json`` by cell key (records in
-    grid order) and write ``render(records, fresh)`` to ``{name}.md``."""
+    stamp each fresh record with ``host()``, merge them into
+    ``{name}.json`` by cell key (records in grid order) and write
+    ``render(records, fresh)`` to ``{name}.md``."""
     ap = argparse.ArgumentParser(
         description=f"Measure the {name} grid; write {name}.json and .md."
     )
@@ -259,6 +268,7 @@ def main(name: str, grid: list[dict], fields: dict, measure, render,
                     help="re-render the MD from the committed JSON")
     args = ap.parse_args(argv)
     fresh = [] if args.report_only else measure(select(grid, fields, args.only))
+    fresh = [r | {"host": host()} for r in fresh]
 
     json_path, md_path = ROOT / f"{name}.json", ROOT / f"{name}.md"
     prior, like = load_records(json_path)

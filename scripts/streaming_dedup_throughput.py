@@ -287,6 +287,13 @@ def measure(cells: list[dict]) -> list[dict]:
         return run_cells(spark, cells)
 
 
+def _host(r: dict) -> str:
+    """The machine a record was measured on; "—" for records committed
+    before the harness stamped it."""
+    h = r.get("host")
+    return f"{h['cores']} cores, {h['mem_gb']} GB" if h else "—"
+
+
 def render(records: list[dict], fresh: list[dict]) -> str:
     lines = [
         "# STREAMING_DEDUP — measured streaming near-dup dedup throughput",
@@ -310,10 +317,13 @@ def render(records: list[dict], fresh: list[dict]) -> str:
         "unify leg trades the same way, STREAMING.md). State = 4 buckets",
         "per UNIQUE doc — duplicates add no state, so state grows with",
         "the novelty rate; the event twin adds a pending buffer bounded",
-        "by arrival rate x watermark delay.",
+        "by arrival rate x watermark delay. Host = the measuring",
+        "machine's logical cores and memory (— where a record predates",
+        "the stamp).",
         "",
-        "| docs | mode | state store | verified | elapsed | docs/s | dup rate found |",
-        "|---|---|---|---|---|---|---|",
+        "| docs | mode | state store | verified | elapsed | docs/s "
+        "| dup rate found | host |",
+        "|---|---|---|---|---|---|---|---|",
     ]
     for r in records:
         if r["mode"] in ("ttl_study", "event_retention"):
@@ -327,7 +337,7 @@ def render(records: list[dict], fresh: list[dict]) -> str:
             f"| {r['docs_in']:,} | {r['mode']} | {r['store']} "
             f"| {'sig>=0.5' if r.get('verified') else 'no'} "
             f"| {r['elapsed_sec']} s | {r['docs_per_sec']:,} "
-            f"| {r['dup_rate']:.1%} |"
+            f"| {r['dup_rate']:.1%} | {_host(r)} |"
         )
     bulk = {
         (r["docs_in"], r["store"]): r["docs_per_sec"]
@@ -389,8 +399,8 @@ def render(records: list[dict], fresh: list[dict]) -> str:
             "irreducible cost of buffering + watermark bookkeeping.",
             "",
             "| docs | files/batch | state store | elapsed | docs/s "
-            "| vs sustained | dup rate |",
-            "|---|---|---|---|---|---|---|",
+            "| vs sustained | dup rate | host |",
+            "|---|---|---|---|---|---|---|---|",
         ]
         for r in ev_recs:
             s = sus.get((r["docs_in"], r["store"]))
@@ -399,7 +409,8 @@ def render(records: list[dict], fresh: list[dict]) -> str:
                 f"| {r['docs_in']:,} "
                 f"| {r.get('files_per_trigger', FILES_PER_TRIGGER)} "
                 f"| {r['store']} | {r['elapsed_sec']} s "
-                f"| {r['docs_per_sec']:,} | {rel} | {r['dup_rate']:.1%} |"
+                f"| {r['docs_per_sec']:,} | {rel} | {r['dup_rate']:.1%} "
+                f"| {_host(r)} |"
             )
     ttl_recs = sorted(
         (r for r in records if r["mode"] == "ttl_study"),
@@ -443,8 +454,8 @@ def render(records: list[dict], fresh: list[dict]) -> str:
             "ingest.",
             "",
             "| docs | ttl | state store | elapsed | docs/s "
-            "| dup rate found | state rows final | state rows peak |",
-            "|---|---|---|---|---|---|---|---|",
+            "| dup rate found | state rows final | state rows peak | host |",
+            "|---|---|---|---|---|---|---|---|---|",
         ]
         for r in ttl_recs:
             ttl_lbl = (
@@ -454,7 +465,8 @@ def render(records: list[dict], fresh: list[dict]) -> str:
                 f"| {r['docs_in']:,} | {ttl_lbl} | {r['store']} "
                 f"| {r['elapsed_sec']} s "
                 f"| {r['docs_per_sec']:,} | {r['dup_rate']:.1%} "
-                f"| {r['state_rows_final']:,} | {r['state_rows_peak']:,} |"
+                f"| {r['state_rows_final']:,} | {r['state_rows_peak']:,} "
+                f"| {_host(r)} |"
             )
     er_recs = sorted(
         (r for r in records if r["mode"] == "event_retention"),
@@ -483,8 +495,8 @@ def render(records: list[dict], fresh: list[dict]) -> str:
             "the unbounded run keeps all its exemplars.",
             "",
             "| docs | retention | state store | elapsed | docs/s "
-            "| dup rate found | state rows final | state rows peak |",
-            "|---|---|---|---|---|---|---|---|",
+            "| dup rate found | state rows final | state rows peak | host |",
+            "|---|---|---|---|---|---|---|---|---|",
         ]
         for r in er_recs:
             ret_lbl = (
@@ -496,7 +508,8 @@ def render(records: list[dict], fresh: list[dict]) -> str:
                 f"| {r['docs_in']:,} | {ret_lbl} | {r['store']} "
                 f"| {r['elapsed_sec']} s "
                 f"| {r['docs_per_sec']:,} | {r['dup_rate']:.1%} "
-                f"| {r['state_rows_final']:,} | {r['state_rows_peak']:,} |"
+                f"| {r['state_rows_final']:,} | {r['state_rows_peak']:,} "
+                f"| {_host(r)} |"
             )
     return "\n".join(lines) + "\n"
 

@@ -8,17 +8,24 @@ from __future__ import annotations
 
 import uuid
 
+import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pyspark.sql.functions as F
+import pytest
 
 from kafka_stream_unify_order_messages_spark.operators import dedup as D
 from kafka_stream_unify_order_messages_spark.streaming.dedup_stream import (
+    BUCKET_STATE_EVENT_SCHEMA,
+    BUCKET_STATE_EVENT_VERIFIED_SCHEMA,
     band_decisions_stream,
+    band_decisions_stream_event_time,
+    make_bucket_fn,
     near_dup_verdicts,
 )
 
 from conftest import SF_DIR
+from tests.test_unify_stream import FakeState, armed_timeout, group_state
 
 SCHEMA = "doc_id long, seq long, text string"
 
@@ -138,6 +145,49 @@ def test_intra_batch_order_resolves_by_seq(spark, tmp_path):
     assert got == {3: (False, None), 7: (True, 3)}
 
 
+@pytest.mark.parametrize("event_time", [False, True])
+def test_null_id_or_seq_rows_are_dropped(spark, tmp_path, event_time):
+    """A batch holding rows with a null doc_id or a null seq (same text
+    as a valid row): both dedup streams drop them before the stateful groupBy
+    instead of failing the query on int(NaN) in the state function."""
+    text = (
+        "the quick brown fox jumps over the lazy dog while the morning "
+        "light slowly fills the open sky with warm color and shape"
+    )
+    src = tmp_path / "in"
+    src.mkdir()
+    name = f"nulldedup_{uuid.uuid4().hex[:8]}"
+    stream = spark.readStream.schema(SCHEMA).parquet(str(src))
+    frame = (
+        band_decisions_stream_event_time(stream, watermark_delay="1 second")
+        if event_time
+        else band_decisions_stream(stream)
+    )
+    query = (
+        frame.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    try:
+        _write_chunk(src, [(1, 1000, text), (None, 2000, text), (3, None, text)], 0)
+        query.processAllAvailable()
+        if event_time:  # the watermark kicker decides the pending row
+            _write_chunk(src, [(99999, 60_000, "watermark kicker text")], 1)
+            query.processAllAvailable()
+            query.processAllAvailable()
+        got = {
+            r["doc_id"]: (bool(r["is_dup"]), r["dup_of"])
+            for r in near_dup_verdicts(
+                spark.table(name).filter(F.col("doc_id") < 99999)
+            ).collect()
+        }
+    finally:
+        query.stop()
+    assert got == {1: (False, None)}
+
+
 def test_verified_stream_matches_batch_and_filters_false_positives(
     spark, tmp_path
 ):
@@ -235,14 +285,7 @@ def test_verified_stream_matches_batch_and_filters_false_positives(
 def test_ttl_kernel_semantics():
     """Kernel-level TTL: a timed-out bucket forgets its exemplar (next
     claimant is fresh), and every update re-arms the timer."""
-    import pandas as pd
-
-    from kafka_stream_unify_order_messages_spark.streaming.dedup_stream import (
-        make_bucket_first_wins_fn,
-    )
-    from tests.test_unify_stream import FakeState
-
-    fn = make_bucket_first_wins_fn(ttl_ms=60_000)
+    fn = make_bucket_fn(None, 16, horizon_ms=60_000)
     state = FakeState()
     batch = lambda rows: iter(  # noqa: E731
         [pd.DataFrame({"doc_id": [r[0] for r in rows],
@@ -311,13 +354,7 @@ def test_event_kernel_min_seq_wins_under_out_of_order_arrival():
     arriving AFTER a higher-seq one still claims the bucket once the
     watermark decides them — the verdict the processing-time kernel
     (first ARRIVAL wins) cannot produce."""
-    import pandas as pd
-
-    from kafka_stream_unify_order_messages_spark.streaming.dedup_stream import (
-        make_bucket_first_wins_event_fn,
-    )
-
-    fn = make_bucket_first_wins_event_fn()
+    fn = make_bucket_fn(None, 16, event_time=True)
     batch = lambda rows: iter(  # noqa: E731
         [pd.DataFrame({
             "doc_id": [r[0] for r in rows],
@@ -353,13 +390,7 @@ def test_event_kernel_ts_equals_watermark_decides():
     no lower-seq claimant at that timestamp can ever arrive. This is the
     case an earlier stale comment claimed stayed pending; the comment
     now matches the code and this test keeps it that way."""
-    import pandas as pd
-
-    from kafka_stream_unify_order_messages_spark.streaming.dedup_stream import (
-        make_bucket_first_wins_event_fn,
-    )
-
-    fn = make_bucket_first_wins_event_fn()
+    fn = make_bucket_fn(None, 16, event_time=True)
     batch = lambda rows: iter(  # noqa: E731
         [pd.DataFrame({
             "doc_id": [r[0] for r in rows],
@@ -393,13 +424,7 @@ def test_event_kernel_retention_forgets_idle_exemplar():
     past `retention_ms` of EVENT time (watermark-driven) is forgotten —
     the next claimant is fresh; touches re-arm the horizon; retention
     never races a pending decision."""
-    import pandas as pd
-
-    from kafka_stream_unify_order_messages_spark.streaming.dedup_stream import (
-        make_bucket_first_wins_event_fn,
-    )
-
-    fn = make_bucket_first_wins_event_fn(retention_ms=2000)
+    fn = make_bucket_fn(None, 16, event_time=True, horizon_ms=2000)
     batch = lambda rows: iter(  # noqa: E731
         [pd.DataFrame({
             "doc_id": [r[0] for r in rows],
@@ -451,10 +476,6 @@ def test_event_time_stream_matches_batch_under_scrambled_arrival(
     micro-batch BEFORE its lower-seq original) still yields verdicts
     bit-equal to the seq-ordered batch twin — the replay-deterministic
     contract of band_decisions_stream_event_time."""
-    from kafka_stream_unify_order_messages_spark.streaming.dedup_stream import (
-        band_decisions_stream_event_time,
-    )
-
     base = [
         (int(r["doc_id"]), str(r["text"]))
         for r in spark.read.parquet(f"{SF_DIR}/documents.parquet")
@@ -523,10 +544,6 @@ def test_event_time_retention_e2e(spark, tmp_path):
     forgotten, so a re-send of the SAME text OUTSIDE the horizon is
     fresh — the retention-window recall trade, replay-deterministic
     because the horizon is watermark-driven."""
-    from kafka_stream_unify_order_messages_spark.streaming.dedup_stream import (
-        band_decisions_stream_event_time,
-    )
-
     text = (
         "the quick brown fox jumps over the lazy dog while the morning "
         "light slowly fills the open sky with warm color and shape"
@@ -586,10 +603,6 @@ def test_verified_event_time_stream_under_scrambled_arrival(
     watermark-decided, seq-deterministic exemplars — an exact re-send
     arriving BEFORE its lower-seq original still loses to it with
     est 1.0, and a sub-threshold band collider stays non-dup."""
-    from kafka_stream_unify_order_messages_spark.streaming.dedup_stream import (
-        band_decisions_stream_event_time,
-    )
-
     base = [
         (int(r["doc_id"]), str(r["text"]))
         for r in spark.read.parquet(f"{SF_DIR}/documents.parquet")
@@ -689,7 +702,7 @@ def test_verified_event_time_stream_under_scrambled_arrival(
 def test_pre_retention_5field_checkpoint_compat(spark, tmp_path, monkeypatch):
     """Upgrade path for checkpoints written BEFORE the retention work
     widened the event-time bucket state with a trailing `last_ts` column
-    (see the compat branch in make_bucket_first_wins_event_fn).
+    (see the compat read in dedup_stream._load).
 
     Empirically verified, both halves:
 
@@ -701,12 +714,10 @@ def test_pre_retention_5field_checkpoint_compat(spark, tmp_path, monkeypatch):
     2. With the check explicitly disabled for one upgrade run, the old
        5-field state row DOES deserialize under the widened schema (a
        trailing nullable long widening is positionally safe), the
-       kernel's len(st)==5 branch tolerates it as last_ts=None, and
+       compat read tolerates it as last_ts=None, and
        decisions against legacy-buffered exemplars come out correct;
        state re-writes store the 6-field layout thereafter.
     """
-    import pytest
-
     import kafka_stream_unify_order_messages_spark.streaming.dedup_stream as DS
 
     OLD_SCHEMA = (
@@ -714,7 +725,7 @@ def test_pre_retention_5field_checkpoint_compat(spark, tmp_path, monkeypatch):
         " pend_seqs array<long>, pend_ids array<long>, pend_ts array<long>"
     )
 
-    def legacy_factory(retention_ms=None):
+    def legacy_factory(*_args, **_kwargs):
         # minimal pre-retention writer: buffer arrivals in 5-field state,
         # decide nothing (decisions happen post-upgrade, exercising the
         # compat read), arm a far timeout so state persists
@@ -759,9 +770,7 @@ def test_pre_retention_5field_checkpoint_compat(spark, tmp_path, monkeypatch):
 
     # --- run 1: the legacy 5-field topology commits buffered state ---
     monkeypatch.setattr(DS, "BUCKET_STATE_EVENT_SCHEMA", OLD_SCHEMA)
-    monkeypatch.setattr(
-        DS, "make_bucket_first_wins_event_fn", legacy_factory
-    )
+    monkeypatch.setattr(DS, "make_bucket_fn", legacy_factory)
     q1 = start_query()
     try:
         _write_chunk(
@@ -823,3 +832,56 @@ def test_pre_retention_5field_checkpoint_compat(spark, tmp_path, monkeypatch):
     assert got[1] == (False, None)
     assert got[2] == (False, None)
     assert got[4] == (True, 1)
+
+
+SIG = list(range(16))
+
+
+@pytest.mark.parametrize(
+    "schema, legacy, widened",
+    [
+        (
+            BUCKET_STATE_EVENT_SCHEMA,
+            (1000, 10, [2000], [20], [2000]),
+            lambda last_ts: (1000, 10, [], [], [], last_ts),
+        ),
+        (
+            BUCKET_STATE_EVENT_VERIFIED_SCHEMA,
+            (1000, 10, SIG, [2000], [20], [2000], [SIG]),
+            lambda last_ts: (1000, 10, SIG, [], [], [], [], last_ts),
+        ),
+    ],
+    ids=["5-field", "7-field"],
+)
+def test_pre_retention_layouts_read_on_real_group_state(schema, legacy, widened):
+    """Both pre-retention event-time layouts (5 fields first-wins, 7
+    verified) read through the one compat read on a real GroupState:
+    no last_ts means no retention horizon yet, the stored claimant and
+    pending row decide as if never stored narrow, the row is re-written
+    widened, and the bucket's next touch arms the horizon."""
+    verified = len(legacy) == 7
+    fn = make_bucket_fn(
+        0.5 if verified else None, 16, event_time=True, horizon_ms=1000
+    )
+    est = [1.0] if verified else []
+
+    # the armed timeout fires: pending seq 2000 decides against 1000
+    state = group_state(legacy, 2500, True, True, schema)
+    (out,) = fn((0, "bk"), iter([]), state)
+    assert [tuple(r) for r in out.itertuples(index=False)] == [
+        (20, 2000, 0, True, 10, *est)
+    ]
+    assert state.get == widened(None)
+    assert armed_timeout(state) == -1  # no last_ts, no horizon
+
+    # the next touch records last_ts and arms its horizon
+    state = group_state(state.get, 2700, False, True, schema)
+    pdf = pd.DataFrame({"doc_id": [30], "seq": [2600], "_ts_ms": [2600]})
+    if verified:
+        pdf["_sig"] = [SIG]
+    (out,) = fn((0, "bk"), iter([pdf]), state)
+    assert [tuple(r) for r in out.itertuples(index=False)] == [
+        (30, 2600, 0, True, 10, *est)
+    ]
+    assert state.get == widened(2600)
+    assert armed_timeout(state) == 3600

@@ -211,9 +211,10 @@ def test_only_selects_matching_cells():
 
 
 def test_report_merges_fresh_records_by_cell_key(tmp_path, monkeypatch):
-    """A partial run replaces only the cells it measured, a record that
-    lacks a defaulted field still matches its cell, rows keep grid
-    order, and --report-only writes the MD but leaves the JSON alone."""
+    """A partial run replaces only the cells it measured and stamps them
+    with the host, a record that lacks a defaulted field still matches
+    its cell, rows keep grid order, and --report-only writes the MD but
+    leaves the JSON alone."""
     monkeypatch.setattr(stream_harness, "ROOT", tmp_path)
     fields = {"n": None, "mode": None, "fpt": 2}
     grid = [{"n": 1, "mode": "a", "fpt": 2}, {"n": 1, "mode": "b", "fpt": 2}]
@@ -229,6 +230,10 @@ def test_report_merges_fresh_records_by_cell_key(tmp_path, monkeypatch):
     stream_harness.main("T", grid, fields, measure, render, ["--only", "mode=b"])
     merged = json.loads((tmp_path / "T.json").read_text())
     assert [r["v"] for r in merged] == ["old-a", "new-b"]
+    # only the fresh record carries the host stamp; it is no cell field
+    assert "host" not in merged[0]
+    assert merged[1]["host"]["cores"] == os.cpu_count()
+    assert merged[1]["host"]["mem_gb"] > 0
     assert (tmp_path / "T.md").read_text() == "old-a new-b fresh=1"
     stream_harness.main("T", grid, fields, measure, render, ["--report-only"])
     assert json.loads((tmp_path / "T.json").read_text()) == merged

@@ -17,7 +17,7 @@ from __future__ import annotations
 import json
 
 import pandas as pd
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from kafka_stream_unify_order_messages_spark.operators.unify import unify_events
 from kafka_stream_unify_order_messages_spark.sources.generator import (
@@ -364,17 +364,273 @@ def test_kmv_exact_below_k_and_bounded_above(spark, pair):
 
 
 # ---------------------------------------------------------------------------
-# 4. hypothesis on the streaming dedup bucket kernels: for ANY batching
-# and ANY within-batch arrival shuffle, the bucket's exemplar is the
-# min-seq row of the earliest batch that touched it, everyone else is
-# flagged against exactly that exemplar, and re-processing order inside
-# a batch never matters (the kernel sorts by seq).
+# 4. the dedup spec: one plan, every bucket mode, one model. The four
+# kernels — {first-wins, verified} x {processing, event time}, each with
+# and without its ttl / retention horizon — run the same delivery plan
+# through make_bucket_fn on a real GroupState; the emitted rows, the
+# stored state row and the armed timeout after every batch must equal an
+# independent model's. Event-time runs may start from a pre-retention
+# checkpoint (no trailing last_ts).
 # ---------------------------------------------------------------------------
 
-from kafka_stream_unify_order_messages_spark.streaming.dedup_stream import (  # noqa: E402
-    make_bucket_first_wins_fn,
-    make_bucket_verified_fn,
+from kafka_stream_unify_order_messages_spark.streaming import (  # noqa: E402
+    dedup_stream as DS,
 )
+
+H = 4  # num_hashes: estimates are quarters, so est == THRESHOLD occurs
+THRESHOLD = 0.5
+HORIZON = 10  # ttl_ms / retention_ms
+BAND = 3
+NO_TIMEOUT = -1
+SEQS = st.integers(1, 30)  # seq == event time in ms, strictly positive
+# each step: the gap before it (0 keeps the current micro-batch, a
+# positive gap opens a new batch that much later on the clock or
+# watermark) and the seqs arriving; no seqs is an empty batch
+dedup_plans = st.lists(
+    st.tuples(st.sampled_from((0, 1, 5, 10, 11, 25)), st.lists(SEQS, max_size=3)),
+    min_size=1,
+    max_size=10,
+)
+signatures = st.dictionaries(
+    SEQS, st.lists(st.integers(0, 1), min_size=H, max_size=H)
+)
+# a pre-retention event-time checkpoint: claimant seq (or none) and the
+# pending seqs, stored without last_ts
+legacy_states = st.none() | st.tuples(
+    st.none() | SEQS, st.lists(SEQS, max_size=3, unique=True)
+)
+MODES = [
+    (verified, event_time, horizon)
+    for verified in (False, True)
+    for event_time in (False, True)
+    for horizon in (None, HORIZON)
+]
+
+
+def doc_of(seq):
+    return 100 - seq  # id order opposite to seq order
+
+
+def state_schema(verified, event_time):
+    return {
+        (False, False): DS.BUCKET_STATE_SCHEMA,
+        (True, False): DS.BUCKET_STATE_VERIFIED_SCHEMA,
+        (False, True): DS.BUCKET_STATE_EVENT_SCHEMA,
+        (True, True): DS.BUCKET_STATE_EVENT_VERIFIED_SCHEMA,
+    }[verified, event_time]
+
+
+def field_names(ddl):
+    return [f.split()[0] for f in ddl.split(",")]
+
+
+def stored(schema, claim, pending, last_ts, sig_of):
+    """The state row of ``schema`` for a claimant seq (or None), the
+    pending seqs and ``last_ts``, built by field name."""
+    fields = {
+        "first_seq": claim,
+        "first_id": None if claim is None else doc_of(claim),
+        "sig": None if claim is None else sig_of(claim),
+        "pend_seqs": pending,
+        "pend_ids": [doc_of(s) for s in pending],
+        "pend_ts": pending,
+        "pend_sigs": [sig_of(s) for s in pending],
+        "last_ts": last_ts,
+    }
+    return tuple(fields[n] for n in field_names(schema))
+
+
+def dedup_batches(plan, event_time, seen=()):
+    """Plan -> [(now, seqs)]: ``now`` is the batch time or the watermark.
+    Each seq arrives once; in event time an arrival at or below the
+    previous batch's watermark is dropped, as Spark's pre-state late
+    filter does. A final empty batch far past every horizon drains."""
+    seen, now, prev, batches = set(seen), 0, 0, []
+    for gap, seqs in plan:
+        if gap or not batches:
+            prev, now = now, now + gap
+            batches.append((now, []))
+        for s in seqs:
+            if s not in seen and not (event_time and s <= prev):
+                seen.add(s)
+                batches[-1][1].append(s)
+    return batches + [(now + 100, [])]
+
+
+def dedup_model(batches, sig_of, mode, legacy=None):
+    """The bucket semantics, independent of ``decide``: per batch None
+    when the key is not called, else (emitted rows, stored state row or
+    None, armed timeout or None)."""
+    verified, event_time, horizon = mode
+    claim, pending, last_ts, armed = None, [], None, NO_TIMEOUT
+    if legacy is not None:
+        claim, pending = legacy[0], sorted(legacy[1])
+        armed = pending[0] if pending else NO_TIMEOUT
+    exists = legacy is not None
+    schema = state_schema(verified, event_time)
+    out = []
+    for now, arrivals in batches:
+        timed_out = exists and armed != NO_TIMEOUT and armed < now
+        if not arrivals and not timed_out:
+            out.append(None)
+            continue
+        rows = []
+        if not arrivals and not event_time:  # ttl expired: forget
+            claim, exists = None, False
+        else:
+            pending = sorted(pending + arrivals)
+            if event_time and arrivals:
+                last_ts = max(arrivals + [last_ts or 0])
+            ready = [s for s in pending if not event_time or s <= now]
+            pending = [s for s in pending if s not in ready]
+            for s in ready:
+                if claim is None:
+                    claim = s
+                    rows.append((doc_of(s), s, BAND, False, None, None))
+                    continue
+                est = None
+                if verified:
+                    same = [a == b for a, b in zip(sig_of(s), sig_of(claim))]
+                    est = sum(same) / H
+                dup = not verified or est >= THRESHOLD
+                rows.append(
+                    (doc_of(s), s, BAND, dup, doc_of(claim) if dup else None, est)
+                )
+            exists = True
+            if not event_time:
+                armed = now + horizon if horizon else NO_TIMEOUT
+            else:
+                expires = None
+                if horizon and claim is not None and last_ts is not None:
+                    expires = last_ts + horizon
+                if not pending and expires is not None and now >= expires:
+                    claim, last_ts, exists = None, None, False
+                elif pending:  # every pending ts is above the watermark
+                    armed = pending[0]
+                else:
+                    armed = NO_TIMEOUT if expires is None else expires
+        if not verified:
+            rows = [r[:5] for r in rows]
+        state = stored(schema, claim, pending, last_ts, sig_of)
+        out.append((rows, state, armed) if exists else (rows, None, None))
+    return out
+
+
+class Bucket:
+    """The ``applyInPandasWithState`` engine loop around one bucket key:
+    a fresh real ``GroupState`` per call. The key is called with its
+    rows, or times out in a batch without them once its armed timeout is
+    behind the batch time or watermark; otherwise it is not called."""
+
+    def __init__(self, mode, sig_of):
+        verified, self.event_time, horizon = mode
+        self.fn = DS.make_bucket_fn(
+            THRESHOLD if verified else None, H, self.event_time, horizon
+        )
+        self.verified, self.sig_of = verified, sig_of
+        self.schema = state_schema(verified, self.event_time)
+        self.value, self.timeout = None, NO_TIMEOUT
+
+    def frame(self, seqs):
+        pdf = pd.DataFrame({"doc_id": [doc_of(s) for s in seqs], "seq": seqs})
+        if self.verified:
+            pdf["_sig"] = [self.sig_of(s) for s in seqs]
+        if self.event_time:
+            pdf["_ts_ms"] = seqs
+        return pdf
+
+    def batch(self, now, seqs):
+        timed_out = not seqs
+        if timed_out and (
+            self.value is None
+            or self.timeout == NO_TIMEOUT
+            or self.timeout >= now
+        ):
+            return None
+        state = group_state(
+            self.value, now, timed_out, self.event_time, self.schema
+        )
+        pdfs = iter([] if timed_out else [self.frame(seqs)])
+        frames = list(self.fn((BAND, "bk"), pdfs, state))
+        self.value, self.timeout = state.getOption, armed_timeout(state)
+        names = field_names(
+            DS.BAND_DECISION_VERIFIED_SCHEMA
+            if self.verified
+            else DS.BAND_DECISION_SCHEMA
+        )
+        assert all(list(f.columns) == names for f in frames)
+        rows = [
+            tuple(None if _isnull(v) else v for v in r)
+            for f in frames
+            for r in f.itertuples(index=False, name=None)
+        ]
+        armed = self.timeout if self.value is not None else None
+        return rows, self.value, armed
+
+
+def _isnull(x):
+    return x is None or (isinstance(x, float) and pd.isna(x))
+
+
+def check_dedup(plan, sigs, legacy):
+    """Run the plan through every mode; each must match the model after
+    every batch. Returns {mode: the model's emitted rows}."""
+    sig_of = lambda s: sigs.get(s, [0] * H)  # noqa: E731
+    if legacy is not None:
+        claim, pending = legacy[0], sorted(set(legacy[1]) - {legacy[0]})
+        legacy = claim, pending
+    emitted = {}
+    for mode in MODES:
+        verified, event_time, _ = mode
+        bucket, start, seen = Bucket(mode, sig_of), None, ()
+        if event_time and legacy is not None:
+            # the pre-retention writer stored no last_ts and armed the
+            # earliest pending event time
+            claim, pending = start = legacy
+            seen = {claim, *pending} - {None}
+            bucket.value = stored(bucket.schema, claim, pending, None, sig_of)[:-1]
+            bucket.timeout = pending[0] if pending else NO_TIMEOUT
+        batches = dedup_batches(plan, event_time, seen)
+        want = dedup_model(batches, sig_of, mode, start)
+        for (now, seqs), expect in zip(batches, want):
+            assert bucket.batch(now, seqs) == expect, (mode, now)
+        emitted[mode] = [r for b in want if b for r in b[0]]
+    return emitted
+
+
+@settings(max_examples=150, deadline=None)
+@given(dedup_plans, signatures, legacy_states)
+# a pre-retention row pending seq 25 meets a later, lower arrival: its
+# retention horizon (3 + 10) passes while 25 still pends
+@example([(1, [3]), (15, [])], {}, (None, [25]))
+def test_dedup_bucket_modes_match_one_model(plan, sigs, legacy):
+    """All four kernels against one model. From a fresh bucket the model
+    decides every delivered doc exactly once; without a horizon the
+    first-wins claimant is the first batch's min seq (processing time)
+    or the global min seq (event time) and every other doc is a dup of
+    it; verification never changes who claims the bucket."""
+    emitted = check_dedup(plan, sigs, legacy)
+    for (verified, event_time, horizon), rows in emitted.items():
+        if event_time and legacy is not None:
+            continue
+        batches = [b for b in dedup_batches(plan, event_time) if b[1]]
+        delivered = sorted(s for _now, seqs in batches for s in seqs)
+        assert sorted(r[1] for r in rows) == delivered
+        if verified:
+            twin = emitted[False, event_time, horizon]
+            assert [r[1] for r in rows if r[5] is None] == [
+                r[1] for r in twin if not r[3]
+            ]
+        elif horizon is None and batches:
+            claim = min(delivered if event_time else batches[0][1])
+            for _doc, seq, _band, is_dup, dup_of in rows:
+                assert is_dup == (seq != claim)
+                assert dup_of == (doc_of(claim) if is_dup else None)
+
+
+# the processing-time kernels driven directly, one GroupState per
+# micro-batch carrying the stored row forward: the exemplar claims, who
+# it is and that it is never replaced, stated without the model
 
 bucket_plans = st.lists(
     st.lists(st.integers(0, 999), min_size=1, max_size=6, unique=True),
@@ -383,33 +639,28 @@ bucket_plans = st.lists(
 ).filter(lambda bs: len({s for b in bs for s in b}) == sum(len(b) for b in bs))
 
 
-def _isnull(x):
-    return x is None or (isinstance(x, float) and pd.isna(x))
-
-
-def _run_bucket(fn, batches, sig_of=None):
-    state = FakeState()
-    out = []
-    for batch in batches:
-        cols = {
-            "doc_id": [7000 + s for s in batch],
-            "seq": batch,
-        }
+def _run_bucket(threshold, batches, sig_of=None):
+    fn = DS.make_bucket_fn(threshold, 16)
+    schema = state_schema(threshold is not None, False)
+    value, out = None, []
+    for now, batch in enumerate(batches):
+        cols = {"doc_id": [7000 + s for s in batch], "seq": batch}
         if sig_of is not None:
             cols["_sig"] = [sig_of(s) for s in batch]
-        pdf = pd.DataFrame(cols)
-        for res in fn((3, "bk"), iter([pdf]), state):
+        state = group_state(value, now, False, False, schema)
+        for res in fn((3, "bk"), iter([pd.DataFrame(cols)]), state):
             out.extend(res.to_dict("records"))
-    return out, state
+        value = state.getOption
+    return out, value
 
 
 @settings(max_examples=60, deadline=None)
 @given(bucket_plans)
 def test_bucket_first_wins_exemplar_is_earliest_batch_min_seq(batches):
-    out, state = _run_bucket(make_bucket_first_wins_fn(), batches)
+    out, state = _run_bucket(None, batches)
     exemplar_seq = min(batches[0])
     exemplar_id = 7000 + exemplar_seq
-    assert state.get == (exemplar_seq, exemplar_id)
+    assert tuple(state) == (exemplar_seq, exemplar_id)
     by_id = {r["doc_id"]: r for r in out}
     assert len(out) == len(by_id) == sum(len(b) for b in batches)
     for r in out:
@@ -438,10 +689,8 @@ def test_bucket_verified_threshold_gates_and_exemplar_is_stable(
             return [0] * 16
         return [0] * n_match + [1000 + seq] * (16 - n_match)
 
-    out, state = _run_bucket(
-        make_bucket_verified_fn(0.5, 16), batches, sig_of=sig_of
-    )
-    first_seq, first_id, first_sig = state.get
+    out, state = _run_bucket(0.5, batches, sig_of=sig_of)
+    first_seq, first_id, first_sig = state
     assert (first_seq, first_id) == (exemplar_seq, 7000 + exemplar_seq)
     assert list(first_sig) == [0] * 16  # exemplar NEVER replaced
     should_dup = (n_match / 16) >= 0.5

@@ -101,11 +101,19 @@ class Clock:
         return self.ms
 
 
-def group_state(value=None, now_ms=0, timed_out=False, event_time=True):
+def group_state(
+    value=None,
+    now_ms=0,
+    timed_out=False,
+    event_time=True,
+    value_schema=PENDING_ORDER_STATE_SCHEMA,
+):
     """A real pyspark ``GroupState`` as the engine hands it to one call:
-    state row ``value`` (or none), and ``now_ms`` as the watermark
-    (EventTimeTimeout) or the batch time (ProcessingTimeTimeout). The
-    timeout the call armed is ``armed_timeout(state)``."""
+    state row ``value`` (or none) of ``value_schema`` (the operator's
+    stateStructType; GroupState only carries it, so a DDL string will
+    do), and ``now_ms`` as the watermark (EventTimeTimeout) or the batch
+    time (ProcessingTimeTimeout). The timeout the call armed is
+    ``armed_timeout(state)``."""
     return GroupState(
         optionalValue=Row(*value) if value is not None else None,
         batchProcessingTimeMs=now_ms,
@@ -120,7 +128,7 @@ def group_state(value=None, now_ms=0, timed_out=False, event_time=True):
         removed=False,
         timeoutTimestamp=GroupState.NO_TIMESTAMP,
         keyAsUnsafe=b"",
-        valueSchema=PENDING_ORDER_STATE_SCHEMA,
+        valueSchema=value_schema,
     )
 
 
