@@ -157,6 +157,87 @@ def calibration_cpu() -> dict[str, float]:
     return {"cpu_bound": round(best_cpu, 3), "mem_bound": round(best_mem, 3)}
 
 
+WARM_TABLES = ("events", "documents", "embeddings", "lineitem", "orders")
+
+
+def warm_up(spark, sf_dir: str, tables, head: str | None = None) -> None:
+    """Warm the JVM, executor pool and parquet footers: noop-scan each
+    of ``tables``, then make one sacrificial run of the registry query
+    ``head`` if given, then drop cached blocks.
+
+    The table scans do not cover everything the FIRST real query pays:
+    measured (round 12), the first registry execution burns ~4 s wall /
+    ~14 CPU-s at sf0.001 against a ~0.8 s / 2 CPU-s steady state —
+    whole-stage-codegen JIT of the query-shaped pipeline, first
+    exchange machinery, session-tail settling — and best-of-2 does NOT
+    absorb it (the first five queries of the first round-12 sweep
+    measured 4-6x high). One unmeasured run of the head query warms that
+    path; its family-mates then measure at steady state from run 1.
+    """
+    from kafka_stream_unify_order_messages_spark import drop_cached_blocks
+    from kafka_stream_unify_order_messages_spark.sources.files import load_table
+
+    for table in tables:
+        load_table(spark, sf_dir, table).write.format("noop").mode(
+            "overwrite"
+        ).save()
+    if head is not None:
+        try:
+            registry.QUERIES[head](spark, sf_dir).write.format("noop").mode(
+                "overwrite"
+            ).save()
+        except Exception as e:  # noqa: BLE001 — the warm-up is an
+            # optimization, not a correctness prerequisite: a broken head
+            # query fails (and is recorded) in the caller's measured loop
+            print(f"warm run of {head} failed ({e}); continuing — "
+                  "head-family timings may carry the one-off JIT cost",
+                  file=sys.stderr)
+    drop_cached_blocks(spark)
+
+
+def timed_run(
+    spark, clock: EngineCpuClock, fn, sf_dir: str, label: str
+) -> tuple[float, float | None]:
+    """One measured execution: build ``fn(spark, sf_dir)`` and write it
+    to the noop sink (JVM-side, no driver collect), bracketed by wall
+    time and ``clock``. Returns raw ``(wall_s, cpu_s)``; ``cpu_s`` is
+    None when the clock cannot read the engine tree, or when its delta
+    is negative, which ``label`` reports on stderr.
+
+    Cached blocks are dropped after every run, not just between queries:
+    (a) localCheckpoint blocks are not evictable and accumulate into a
+    JVM OOM across ~200 queries (observed on the x100 ramp), and (b)
+    CacheManager rewrites a repeat run's canonically-identical plan to
+    read the previous run's InMemoryRelation, so without this a repeat
+    timing of a persist()-using query measures a warm cache, not the
+    plan.
+    """
+    from kafka_stream_unify_order_messages_spark import drop_cached_blocks
+
+    try:
+        c0 = clock.read()
+        t0 = time.time()
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        wall = time.time() - t0
+        c1 = clock.read()
+    finally:
+        drop_cached_blocks(spark)
+    if c0 is None or c1 is None:
+        return wall, None
+    if c1 - c0 < 0:
+        # EngineCpuClock is monotone by construction (retirement
+        # arithmetic, cpuclock.py); a negative delta therefore means the
+        # instrument itself broke — exclude the sample and say so loudly
+        # rather than minting a fake-cheap run (the naive clock's dips
+        # minted 0.0-CPU rows for multi-second queries in the r12/r13
+        # sweeps).
+        print(f"{label}: cpu delta negative ({c1 - c0:.2f}s) — monotone "
+              "clock violation?! run excluded from the cpu min",
+              file=sys.stderr)
+        return wall, None
+    return wall, c1 - c0
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -165,17 +246,13 @@ def main() -> None:
 
     spark = get_spark("bench", master=f"local[{cpus}]")
 
-    # warm up the JVM + executor pool + parquet footers + join/window/agg
-    # codegen paths once, so per-query timings measure the queries, not
-    # first-job session initialization and JIT
-    from kafka_stream_unify_order_messages_spark.sources.files import load_table
-
-    for table in ("events", "documents", "embeddings", "lineitem", "orders"):
-        load_table(spark, sf_dir, table).write.format("noop").mode(
-            "overwrite"
-        ).save()
+    # warm the join/window/agg codegen paths once too, so per-query
+    # timings measure the queries, not first-job session initialization
+    # and JIT
     import pyspark.sql.functions as _F
     from pyspark.sql import Window as _W
+
+    from kafka_stream_unify_order_messages_spark.sources.files import load_table
 
     ev = load_table(spark, sf_dir, "events")
     warm = (
@@ -185,32 +262,7 @@ def main() -> None:
         .withColumn("r", _F.row_number().over(_W.orderBy("n")))
     )
     warm.write.format("noop").mode("overwrite").save()
-    # The JVM-side warm above does not cover everything the FIRST real
-    # query pays: measured (round 12), the first registry execution
-    # burns ~4 s wall / ~14 CPU-s at sf0.001 against a ~0.8 s / 2 CPU-s
-    # steady state — whole-stage-codegen JIT of the query-shaped
-    # pipeline, first exchange machinery, session-tail settling — and
-    # best-of-2 does NOT absorb it (the tail spans the head family's
-    # runs: the first five queries measured 4-6x high in the first
-    # round-12 sweep). One sacrificial unmeasured run of the first
-    # benchmark-order query warms that path; its family-mates then
-    # measure at steady state from run 1.
-    first = registry.benchmark_order()[0]
-    try:
-        registry.QUERIES[first](spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-    except Exception as e:  # noqa: BLE001 — the warm-up is an
-        # optimization, not a correctness prerequisite: if the head query
-        # is broken it will fail (and be recorded) in the measured loop
-        # below, which is designed so one bad query never wipes the
-        # whole artifact. Crashing HERE would.
-        print(f"bench: warm run of {first} failed ({e}); continuing — "
-              "head-family timings may carry the one-off JIT cost",
-              file=sys.stderr)
-    from kafka_stream_unify_order_messages_spark import drop_cached_blocks
-
-    drop_cached_blocks(spark)
+    warm_up(spark, sf_dir, WARM_TABLES, registry.benchmark_order()[0])
 
     # best-of-N (default 2): a single-shot timing is hostage to transient
     # machine load / GC pauses; the minimum is the reproducible cost of
@@ -235,43 +287,13 @@ def main() -> None:
         best = float("inf")
         best_cpu = float("inf")
         try:
-            n = runs
-            done = 0
-            while done < n:
-                c0 = clock.read()
-                t0 = time.time()
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                best = min(best, time.time() - t0)
-                c1 = clock.read()
-                if c0 is not None and c1 is not None:
-                    if c1 - c0 >= 0:
-                        best_cpu = min(best_cpu, c1 - c0)
-                    else:
-                        # EngineCpuClock is monotone by construction
-                        # (retirement arithmetic, cpuclock.py); a
-                        # negative delta therefore means the instrument
-                        # itself broke — exclude the sample and say so
-                        # loudly rather than minting a fake-cheap run
-                        # (the naive clock's dips minted 0.0-CPU rows
-                        # for multi-second queries in the r12/r13
-                        # sweeps).
-                        print(
-                            f"bench: {name} cpu delta negative "
-                            f"({c1 - c0:.2f}s) — monotone clock "
-                            "violation?! run excluded from the cpu min",
-                            file=sys.stderr)
-                done += 1
-                if done == n and n == runs and best < 1.0:
-                    n += 1
-                # drop cached blocks between RUNS, not just queries:
-                # (a) localCheckpoint blocks are not evictable and
-                # accumulate into a JVM OOM across ~200 queries
-                # (observed on the x100 ramp), and (b) CacheManager
-                # rewrites run 2's canonically-identical plan to read
-                # run 1's InMemoryRelation, so without this a repeat
-                # timing of a persist()-using query measures a warm
-                # cache, not the plan
-                drop_cached_blocks(spark)
+            for run in range(runs + 1):
+                if run == runs and best >= 1.0:
+                    break
+                wall, cpu = timed_run(spark, clock, fn, sf_dir, f"bench: {name}")
+                best = min(best, wall)
+                if cpu is not None:
+                    best_cpu = min(best_cpu, cpu)
         except Exception as e:  # noqa: BLE001 — one bad query must not
             # wipe the whole benchmark artifact; surface it instead
             if best == float("inf"):
@@ -282,8 +304,6 @@ def main() -> None:
                 continue
             print(f"bench: {name} extra run failed (kept best): {e}",
                   file=sys.stderr)
-        finally:
-            drop_cached_blocks(spark)
         timings[name] = round(best, 3)
         if best_cpu != float("inf"):
             # min-of-runs, like wall: the reproducible cost of the plan.

@@ -51,39 +51,26 @@ def _rss_bytes() -> int:
 class _ThrottledGc:
     """Stand-in for the ``gc`` module inside pyspark.daemon's loop.
 
-    Tunables (env, because the daemon process sees the driver env but no
-    SQL confs): ``SPARK_GRAFT_GC_FULL_EVERY`` — tasks between full
-    collections (default 16); ``SPARK_GRAFT_GC_RSS_MB`` — worker RSS
-    above which every task runs the full collection regardless of the
-    cadence (default 1024), the memory-pressure escape hatch so cyclic
-    garbage from large Arrow batches cannot pile up 16 tasks deep. The
-    hatch stays open only while the last full collection found garbage:
-    Arrow buffers count toward RSS but gc cannot free them, so a full
-    collection that finds nothing waits for the next cadence one.
+    Every ``FULL_EVERY``-th task runs the full collection, and so does
+    every task while the worker's RSS exceeds ``RSS_LIMIT`` — the
+    memory-pressure escape hatch, so cyclic garbage from large Arrow
+    batches cannot pile up 16 tasks deep. The hatch stays open only
+    while the last full collection found garbage: Arrow buffers count
+    toward RSS but gc cannot free them, so a full collection that finds
+    nothing waits for the next cadence one.
     """
 
     FULL_EVERY = 16
+    RSS_LIMIT = 1024 << 20
 
     def __init__(self) -> None:
         self._since_full = 0
         self._full_found = True
-        try:
-            self.FULL_EVERY = max(
-                1, int(_os.environ.get("SPARK_GRAFT_GC_FULL_EVERY", "16"))
-            )
-        except ValueError:
-            pass
-        try:
-            self._rss_limit = (
-                int(_os.environ.get("SPARK_GRAFT_GC_RSS_MB", "1024")) << 20
-            )
-        except ValueError:
-            self._rss_limit = 1024 << 20
 
     def collect(self, *args):  # signature-compatible with gc.collect
         self._since_full += 1
         if self._since_full >= self.FULL_EVERY or (
-            self._full_found and _rss_bytes() > self._rss_limit
+            self._full_found and _rss_bytes() > self.RSS_LIMIT
         ):
             self._since_full = 0
             found = _gc.collect()

@@ -1,8 +1,8 @@
 """Per-query optimization profiler (round 13).
 
 For each named registry query (default: the top CPU burners from the
-committed BENCH_DETAIL.json), runs the query through the bench's noop
-sink and reports where the cost lives:
+committed BENCH_DETAIL.json), runs the query through bench.py's warm-up
+and timed run and reports where the cost lives:
 
 - wall seconds (best and per-run),
 - engine CPU split three ways: JVM own ticks (driver + executor
@@ -21,13 +21,14 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from bench import WARM_TABLES, timed_run, warm_up
 from kafka_stream_unify_order_messages_spark import get_spark, registry
 from kafka_stream_unify_order_messages_spark.cpuclock import (
+    EngineCpuClock,
     _jvm_root,
     _scan_proc,
     _tree_of,
@@ -71,24 +72,10 @@ def main() -> None:
     spark = get_spark("profile", master=f"local[{cpus}]")
     sc = spark.sparkContext
     root = _jvm_root(spark)
-
-    # bench-identical warm-up so run 1 is steady state
-    from kafka_stream_unify_order_messages_spark import drop_cached_blocks
-    from kafka_stream_unify_order_messages_spark.sources.files import (
-        load_table,
-    )
-
-    for table in ("events", "documents", "embeddings", "lineitem", "orders"):
-        load_table(spark, sf_dir, table).write.format("noop").mode(
-            "overwrite"
-        ).save()
-    try:
-        registry.QUERIES[names[0]](spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-    except Exception as e:  # noqa: BLE001
-        print(f"warm run failed: {e}", file=sys.stderr)
-    drop_cached_blocks(spark)
+    clock = EngineCpuClock(spark)
+    # bench's warm-up, headed by the first named query, so run 1 is
+    # steady state
+    warm_up(spark, sf_dir, WARM_TABLES, names[0])
 
     hdr = (
         f"{'query':32s} {'run':>3s} {'wall':>7s} {'jvm':>7s} "
@@ -102,9 +89,7 @@ def main() -> None:
             sc.setJobGroup(group, name)
             sc.setJobDescription(f"{name} run {r}")
             j0, c0, p0 = cpu_split(root)
-            t0 = time.time()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            wall = time.time() - t0
+            wall, _cpu = timed_run(spark, clock, fn, sf_dir, name)
             j1, c1, p1 = cpu_split(root)
             tracker = sc.statusTracker()
             job_ids = tracker.getJobIdsForGroup(group)
@@ -118,7 +103,6 @@ def main() -> None:
                 f"{c1 - c0:7.2f} {p1 - p0:7.2f} {len(job_ids):5d} "
                 f"{n_stages:6d}"
             )
-            drop_cached_blocks(spark)
         sc.setJobGroup("idle", "idle")
     spark.stop()
 

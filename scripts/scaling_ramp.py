@@ -20,26 +20,32 @@ top data-bound step flags super-linear growth worth explaining.
 Usage:
     python scripts/gen_ramp_data.py           # once, builds .ramp_data/
     python scripts/scaling_ramp.py            # writes SCALING.md + json
-    RAMP_RUNS=3 python scripts/scaling_ramp.py
-    RAMP_ONLY=q1,q2 python scripts/scaling_ramp.py   # re-measure a
-        # subset; other queries keep their timings from the existing
-        # SCALING.json and the report is regenerated over the union
+    python scripts/scaling_ramp.py --only q1,q2   # re-measure a subset;
+        # other queries keep their cells from the existing SCALING.json
+        # and the report is regenerated over the union
+    python scripts/scaling_ramp.py --report-only  # re-render SCALING.md
+        # (and SCALING.json's derived maps) from the recorded cells
 
-Keep the machine otherwise idle; timings are best-of-N wall clock.
+Each cell is best-of-2 (``RUNS``) wall clock and engine CPU, measured
+with bench.py's shared warm-up and timed run. Keep the machine
+otherwise idle.
 """
 
 from __future__ import annotations
 
+import argparse
+import functools
 import json
 import math
 import os
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from bench import timed_run, warm_up
 from kafka_stream_unify_order_messages_spark import get_spark, registry
+from kafka_stream_unify_order_messages_spark.cpuclock import EngineCpuClock
 
 _ROOT = Path(__file__).resolve().parent.parent
 SF_DIRS = [
@@ -156,10 +162,10 @@ RAMP_QUERIES = [
     # no shuffle beyond the small-table repartition, so the codec
     # family's scale claim is plain row-linearity
     ("multimodal_real_decode", "linear", "x300"),
-    # not registry surface — see _ivf_trained_serve below.
+    # not registry surface — see _trained_serve below.
     ("ivf_trained_serve", "sublinear-serve", "x100"),
     # the compressed-index sibling (round-10): serve-only IVFPQ against
-    # the persisted codes-only index — see _ivfpq_trained_serve below.
+    # the persisted codes-only index — see _trained_serve below.
     ("ivfpq_trained_serve", "sublinear-serve", "x100"),
 ]
 
@@ -178,7 +184,7 @@ RAMP_QUERIES = [
 # nprobe = 4 — the probed union is <= 80 cells, so the fraction of the index
 # read shrinks as sqrt(n) grows (18% of cells at x100 vs 100% at sf0.1) and
 # per-query GEMM work is ~4·n/sqrt(n) rows. Build runs once per tier inside
-# the FIRST timed run and is memoized; with best-of-2 the reported number is
+# the FIRST timed run and is cached; with best-of-2 the reported number is
 # therefore the serve-only cost (run 2), matching the build-once/serve-many
 # contract the persisted-index operator exists for.
 # ---------------------------------------------------------------------------
@@ -186,66 +192,42 @@ _EMB_ROWS = {
     "sf0.01": 500, "sf0.1": 2000, "x3": 6000, "x10": 20000, "x100": 200000,
     "x300": 600000,
 }
-_IVF_BUILT: set[str] = set()
 
 
-def _ivf_trained_serve(spark, sf_dir: str):
-    import pyspark.sql.functions as F
-
-    from kafka_stream_unify_order_messages_spark.operators import (
-        similarity as S,
-    )
-    from kafka_stream_unify_order_messages_spark.sources.files import (
-        load_table,
-    )
-
-    label = next(lbl for lbl, d, _s in SF_DIRS if d == sf_dir)
-    k_c = max(16, math.isqrt(_EMB_ROWS[label]))
-    path = str(_ROOT / ".ramp_data" / f"ivf_index_{label}")
-    if sf_dir not in _IVF_BUILT:
-        S.save_ivf_index(
-            load_table(spark, sf_dir, "embeddings"), path, n_centroids=k_c
-        )
-        _IVF_BUILT.add(sf_dir)
-    queries = load_table(spark, sf_dir, "embeddings").filter(
-        F.col("vec_id") < 20
-    )
-    return S.search_ivf_index(spark, path, queries, k=5, nprobe=4)
-
-
-_IVFPQ_BUILT: set[str] = set()
-
-
-def _ivfpq_trained_serve(spark, sf_dir: str):
-    """The compressed-index sibling of _ivf_trained_serve: IVFPQ serve
-    at production geometry against the PERSISTED codes-only index
-    (save_ivfpq_index / search_ivfpq_index) — fixed 20-query batch,
-    n_centroids = sqrt(n), nprobe = 4. Serving reads <= 80 pruned cell
+def _trained_serve(kind: str, spark, sf_dir: str):
+    """IVF (``kind`` "ivf") or IVFPQ ("ivfpq") serve at production
+    geometry against the persisted ``save_<kind>_index`` index: fixed
+    20-query batch, n_centroids = sqrt(n), nprobe = 4. IVFPQ persists
+    codes-only inverted lists, so its serving reads <= 80 pruned cell
     directories of 8-byte codes (never a raw vector) and scores ADC LUT
-    gathers on the PRE-COMPUTED codes; build (train + assign + encode +
-    partitioned write) runs once per tier inside the first timed run and
-    is memoized, so best-of-2 reports serve-only cost."""
+    gathers on the pre-computed codes. The build goes through the
+    session cache, so it runs once per tier inside the first timed run
+    and best-of-2 reports serve-only cost."""
     import pyspark.sql.functions as F
 
     from kafka_stream_unify_order_messages_spark.operators import (
         similarity as S,
     )
     from kafka_stream_unify_order_messages_spark.sources.files import (
+        cached,
         load_table,
     )
 
     label = next(lbl for lbl, d, _s in SF_DIRS if d == sf_dir)
     k_c = max(16, math.isqrt(_EMB_ROWS[label]))
-    path = str(_ROOT / ".ramp_data" / f"ivfpq_index_{label}")
-    if sf_dir not in _IVFPQ_BUILT:
-        S.save_ivfpq_index(
-            load_table(spark, sf_dir, "embeddings"), path, n_centroids=k_c
-        )
-        _IVFPQ_BUILT.add(sf_dir)
-    queries = load_table(spark, sf_dir, "embeddings").filter(
-        F.col("vec_id") < 20
+    path = str(_ROOT / ".ramp_data" / f"{kind}_index_{label}")
+    emb = load_table(spark, sf_dir, "embeddings")
+    save = getattr(S, f"save_{kind}_index")
+    cached(
+        spark,
+        [f"{sf_dir}/embeddings.parquet"],
+        (f"{kind}_trained_serve", path, k_c),
+        lambda: save(emb, path, n_centroids=k_c),
     )
-    return S.search_ivfpq_index(spark, path, queries, k=5, nprobe=4)
+    queries = emb.filter(F.col("vec_id") < 20)
+    return getattr(S, f"search_{kind}_index")(
+        spark, path, queries, k=5, nprobe=4
+    )
 
 
 def _semantic_dedup_auto(spark, sf_dir: str):
@@ -281,8 +263,8 @@ def _semantic_dedup_auto(spark, sf_dir: str):
 
 
 RAMP_EXTRA = {
-    "ivf_trained_serve": _ivf_trained_serve,
-    "ivfpq_trained_serve": _ivfpq_trained_serve,
+    "ivf_trained_serve": functools.partial(_trained_serve, "ivf"),
+    "ivfpq_trained_serve": functools.partial(_trained_serve, "ivfpq"),
     "semantic_dedup_auto": _semantic_dedup_auto,
 }
 
@@ -301,76 +283,44 @@ assert _EMB_ROWS[_pq_cap] // 20 <= _PQ_GUARD_CEILING, (
 )
 
 
-# release cached blocks between RUNS (see session.drop_cached_blocks):
-# localCheckpoint blocks accumulate into an OOM across a 170-execution
-# ramp, and CacheManager would otherwise rewrite run 2's identical plan
-# to read run 1's InMemoryRelation — a warm-cache timing, not the plan
-from kafka_stream_unify_order_messages_spark import drop_cached_blocks
+# best-of-2: every committed SCALING.json cell was measured so
+RUNS = 2
 
 
-_CPU_CLOCKS: dict[int, object] = {}
-
-
-def _jvm_cpu_seconds(spark) -> float | None:
-    """Engine-tree CPU clock — the SAME instrument bench.py anchors on
-    (kafka_stream_unify_order_messages_spark/cpuclock.py).
-
-    Round-9 finding: wall-clock cells at the x300 tier swing up to 2x
-    with background host load (the dup_ngram_spans investigation), so
-    the ramp also records a CPU-based exponent — far more robust to
-    co-running processes (inflated only by memory-stall cycles, not by
-    losing the core entirely). Rounds 9-12 this clock was JVM-only;
-    round 13 widened it to the whole engine process tree (gateway JVM +
-    pyspark.daemon/Arrow-worker descendants, incl. cutime/cstime of
-    reaped children) so MapInPandas-heavy ramp cells no longer
-    under-count Python-worker CPU and the two instruments agree — and
-    then upgraded it to the stateful dip-proof `EngineCpuClock` (one
-    per session, cached here), after orphaned worker pools were caught
-    taking their accumulated ticks out of the naive live-tree sum
-    mid-measure (cpuclock.py "THE DIP PROBLEM"). The name is kept —
-    every SCALING.json cpu cell was measured through this symbol.
-    Returns None when the JVM pid is not discoverable (connect/cluster
-    session); the report degrades to wall-only."""
-    from kafka_stream_unify_order_messages_spark.cpuclock import (
-        EngineCpuClock,
+def main(argv=None) -> None:
+    ap = argparse.ArgumentParser(
+        description="Measure the scale ramp; write SCALING.json and .md."
     )
-
-    key = id(spark)
-    if key not in _CPU_CLOCKS:
-        _CPU_CLOCKS[key] = EngineCpuClock(spark)
-    return _CPU_CLOCKS[key].read()
-
-
-def main() -> None:
-    if os.environ.get("RAMP_RENDER_ONLY"):
+    ap.add_argument("--only", metavar="NAME[,NAME]",
+                    help="re-measure only these queries; the others keep "
+                    "their cells from SCALING.json")
+    ap.add_argument("--report-only", action="store_true",
+                    help="re-render the report from SCALING.json")
+    args = ap.parse_args(argv)
+    if args.report_only:
         # re-render SCALING.md (and the derived exponent maps in
         # SCALING.json) from the recorded measurements WITHOUT touching
         # a single cell — the report narrative lives in this script, so
-        # editing it (e.g. the round-13 clock-unification note) must not
-        # force a multi-hour re-measure or, worse, a hand-edit of the
-        # generated file that the next real ramp run silently reverts.
+        # editing it must not force a multi-hour re-measure or, worse, a
+        # hand-edit of the generated file that the next real ramp run
+        # silently reverts.
         prior = json.loads((_ROOT / "SCALING.json").read_text())
         _write_report(
-            prior.get("runs", 2),
+            prior.get("runs", RUNS),
             prior["results"],
             prior.get("cpu_results", {}),
             prior.get("noise", {}),
         )
         return
-    runs = max(1, int(os.environ.get("RAMP_RUNS", "2")))
-    only = {
-        q.strip()
-        for q in os.environ.get("RAMP_ONLY", "").split(",")
-        if q.strip()
-    }
+    only = {q.strip() for q in (args.only or "").split(",") if q.strip()}
     if only:
         unknown = only - {n for n, _, _ in RAMP_QUERIES}
         if unknown:
-            raise SystemExit(f"RAMP_ONLY names not in RAMP_QUERIES: {unknown}")
+            raise SystemExit(f"--only: names not in RAMP_QUERIES: {unknown}")
     to_run = [
         q for q in RAMP_QUERIES if not only or q[0] in only
     ]
-    # only the dirs this (possibly RAMP_ONLY-filtered) run reads: the
+    # only the dirs this (possibly --only-filtered) run reads: the
     # x300 tier is required — and warmed — only when some selected query
     # is capped there
     top_needed = max(_LABELS.index(ml) for _, _sh, ml in to_run)
@@ -387,46 +337,31 @@ def main() -> None:
     )
 
     # warm the JVM/codegen once per scale with a throwaway pass
-    from kafka_stream_unify_order_messages_spark.sources.files import load_table
-
     for _, sf_dir, _s in needed_dirs:
-        for t in ("documents", "embeddings", "events"):
-            load_table(spark, sf_dir, t).write.format("noop").mode(
-                "overwrite"
-            ).save()
+        warm_up(spark, sf_dir, ("documents", "embeddings", "events"))
+    # Besides wall, every cell records engine-tree CPU on bench.py's
+    # instrument: wall cells at the x300 tier swing up to 2x with host
+    # load (round 9, the dup_ngram_spans investigation), while /proc CPU
+    # is inflated only by memory-stall cycles, not by losing the core.
+    clock = EngineCpuClock(spark)
 
     results: dict[str, dict[str, float]] = {}
     cpu_results: dict[str, dict[str, float]] = {}
     # per-cell noise evidence (round-9 protocol, now recorded
     # automatically instead of living only in SCALING.md prose): every
-    # run logs its wall, JVM CPU delta, and the host 1-min load average
+    # run logs its wall, CPU delta, and the host 1-min load average
     # before/after — so a future flagged exponent carries its own
     # quiet-vs-co-loaded context and the "a flag is only CONFIRMED when
     # a quiet re-measure reproduces it" rule is checkable from the JSON
     noise: dict[str, dict[str, list[dict]]] = {}
     if only and (_ROOT / "SCALING.json").exists():
         prior = json.loads((_ROOT / "SCALING.json").read_text())
-        results.update(
-            {
-                n: t
-                for n, t in prior.get("results", {}).items()
-                if n not in only
-            }
-        )
-        cpu_results.update(
-            {
-                n: t
-                for n, t in prior.get("cpu_results", {}).items()
-                if n not in only
-            }
-        )
-        noise.update(
-            {
-                n: t
-                for n, t in prior.get("noise", {}).items()
-                if n not in only
-            }
-        )
+        for table, key in (
+            (results, "results"), (cpu_results, "cpu_results"), (noise, "noise")
+        ):
+            table.update(
+                {n: t for n, t in prior.get(key, {}).items() if n not in only}
+            )
 
     def _load1() -> float | None:
         try:
@@ -444,42 +379,22 @@ def main() -> None:
             best = float("inf")
             best_cpu = float("inf")
             cell_runs: list[dict] = []
-            for _ in range(runs):
+            for _ in range(RUNS):
                 load0 = _load1()
-                c0 = _jvm_cpu_seconds(spark)
-                t0 = time.time()
-                fn(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                wall = time.time() - t0
-                best = min(best, wall)
-                c1 = _jvm_cpu_seconds(spark)
-                cpu = (
-                    round(c1 - c0, 1)
-                    if c0 is not None and c1 is not None
-                    else None
+                wall, cpu = timed_run(
+                    spark, clock, fn, sf_dir, f"{name} {sf_name}"
                 )
-                if cpu is not None and cpu < 0:
-                    # tree-CPU dip: a dying pyspark.daemon reparents its
-                    # live workers to init, dropping their accumulated
-                    # CPU from the tree sum — a glitched sample, not a
-                    # cheap run (same guard as bench.py's measured loop)
-                    print(
-                        f"{name} {sf_name}: negative cpu delta {cpu}s "
-                        "— sample excluded from the cpu min",
-                        file=sys.stderr,
-                    )
-                if cpu is not None and cpu >= 0:
+                best = min(best, wall)
+                if cpu is not None:
                     best_cpu = min(best_cpu, cpu)
                 cell_runs.append(
                     {
                         "wall_s": round(wall, 3),
-                        "cpu_s": cpu,
+                        "cpu_s": None if cpu is None else round(cpu, 1),
                         "load1_before": load0,
                         "load1_after": _load1(),
                     }
                 )
-                drop_cached_blocks(spark)
             noise[name][sf_name] = cell_runs
             results[name][sf_name] = round(best, 3)
             if best_cpu != float("inf"):
@@ -494,7 +409,7 @@ def main() -> None:
                 file=sys.stderr,
             )
     spark.stop()
-    _write_report(runs, results, cpu_results, noise)
+    _write_report(RUNS, results, cpu_results, noise)
 
 
 def _write_report(
@@ -504,12 +419,12 @@ def _write_report(
     noise: dict[str, dict[str, list[dict]]],
 ) -> None:
     """Derive exponents and write SCALING.json + SCALING.md. Split from
-    main() so RAMP_RENDER_ONLY can re-render the report from recorded
+    main() so --report-only can re-render the report from recorded
     measurements when only the narrative changes."""
     sizes = {lbl: s for lbl, _, s in SF_DIRS}
     rows = []
     for name, shape, _max_label in RAMP_QUERIES:
-        if name not in results:  # RAMP_ONLY run with no prior timings
+        if name not in results:  # --only run with no prior timings
             continue
         r = results[name]
         es: list[float | None] = []
@@ -524,8 +439,8 @@ def _write_report(
                 )
             else:
                 es.append(None)
-        # CPU-based exponent for the row's TOP measured step (see
-        # _jvm_cpu_seconds: robust to host-load swings that distort wall
+        # CPU-based exponent for the row's TOP measured step (see the
+        # clock in main(): robust to host-load swings that distort wall
         # cells) — None for rows not re-measured since the cpu column
         # was added. cpu_step records WHICH step the exponent covers:
         # clearing a wall flag with a cpu pair from a LOWER tier would
@@ -702,7 +617,14 @@ def _write_report(
         "values for MapInPandas-heavy rows (multimodal, phash, semantic",
         "families) are only cross-comparable within the same clock era,",
         "and any future flag investigation on such a row should start by",
-        "re-measuring its cpu pair under the unified clock.",
+        "re-measuring its cpu pair under the unified clock. Later in",
+        "round 13 the shared instrument became the stateful dip-proof",
+        "`EngineCpuClock` (cpuclock.py \"THE DIP PROBLEM\": the naive",
+        "live-tree sum loses a worker pool's accumulated ticks when its",
+        "daemon dies without reaping — per-cell deltas could read low or",
+        "negative); readings are >= the naive clock's by exactly the",
+        "retired ticks, which is a no-op for cells whose pools survive",
+        "the measurement window — exponents are unaffected.",
         "",
         "**bm25_topk workup (round 10):** the r9 watch item (top-step",
         "exponent climbing 0.30 -> 0.78 -> 1.12 on both clocks) was a real",
@@ -746,7 +668,7 @@ def _write_report(
         wall_step = len(es) - 1
         # a wall-clock flag with a linear CPU exponent is host-load noise
         # in a wall cell, not a scale defect (see the measurement-noise
-        # note above and _jvm_cpu_seconds) — but ONLY a cpu pair covering
+        # note above and the clock in main()) — but ONLY a cpu pair covering
         # the SAME step can vouch for it: CPU-linear/wall-superlinear on
         # the same step is noise, while a lower-tier cpu cell says
         # nothing about the flagged step (and a genuinely IO/spill-bound

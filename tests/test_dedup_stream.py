@@ -74,7 +74,13 @@ def test_stream_matches_batch_first_wins(spark, tmp_path):
     for i, (doc_id, text) in enumerate(base):
         fed.append((doc_id, i, text))
     resend = [(9000 + k, 90 + k, base[k][1]) for k in range(5)]
-    chunks = [fed[0:30], fed[30:60], fed[60:90] + resend]
+    # null, empty and blank texts share one MinHash signature in the
+    # batch twin and in the stream alike; feeding them across chunks
+    # pins that agreement, so neither twin can change it alone
+    blank = [(8000 + k, 1000 + k, t) for k, t in enumerate([None, None, "", "   "])]
+    chunks = [
+        fed[0:30] + blank[:1], fed[30:60] + blank[1:3], fed[60:90] + resend + blank[3:]
+    ]
     all_rows = [r for c in chunks for r in c]
 
     src = tmp_path / "in"
@@ -112,6 +118,7 @@ def test_stream_matches_batch_first_wins(spark, tmp_path):
         assert is_dup and dup_of == base[k][0]
     # the first arrival can collide with nothing earlier
     assert got[base[0][0]] == (False, None)
+    assert [got[8000 + k] for k in range(4)] == [(False, None)] + [(True, 8000)] * 3
 
 
 def test_intra_batch_order_resolves_by_seq(spark, tmp_path):
@@ -313,40 +320,18 @@ def test_ttl_kernel_semantics():
     assert fresh.get == (3, 13)
 
 
-class FakeEventState:
-    """FakeState plus the event-time surface (watermark + timestamp
-    timeout) the event-time kernel uses."""
-
-    def __init__(self, value=None, timed_out=False, watermark_ms=0):
-        self._value = value
-        self.hasTimedOut = timed_out
-        self.watermark_ms = watermark_ms
-        self.timeout_ts = None
-        self.removed = False
-
-    @property
-    def exists(self):
-        return self._value is not None
-
-    @property
-    def get(self):
-        if self._value is None:
-            raise ValueError("state does not exist")
-        return self._value
-
-    def update(self, v):
-        self._value = tuple(v)
-        self.removed = False
-
-    def remove(self):
-        self._value = None
-        self.removed = True
-
-    def getCurrentWatermarkMs(self):
-        return self.watermark_ms
-
-    def setTimeoutTimestamp(self, ts):
-        self.timeout_ts = ts
+def _event_call(fn, value, wm, rows=(), timed_out=False):
+    """One event-time kernel call, as the engine makes it: a fresh real
+    ``GroupState`` holding the stored row ``value`` at watermark ``wm``,
+    fed ``rows`` of (doc_id, seq) with event time = seq millis. Returns
+    the emitted frames and the state after the call."""
+    state = group_state(value, wm, timed_out, True, BUCKET_STATE_EVENT_SCHEMA)
+    pdfs = iter([pd.DataFrame({
+        "doc_id": [r[0] for r in rows],
+        "seq": [r[1] for r in rows],
+        "_ts_ms": [r[1] for r in rows],
+    })] if rows else [])
+    return list(fn((0, "bk"), pdfs, state)), state
 
 
 def test_event_kernel_min_seq_wins_under_out_of_order_arrival():
@@ -355,27 +340,17 @@ def test_event_kernel_min_seq_wins_under_out_of_order_arrival():
     watermark decides them — the verdict the processing-time kernel
     (first ARRIVAL wins) cannot produce."""
     fn = make_bucket_fn(None, 16, event_time=True)
-    batch = lambda rows: iter(  # noqa: E731
-        [pd.DataFrame({
-            "doc_id": [r[0] for r in rows],
-            "seq": [r[1] for r in rows],
-            "_ts_ms": [r[1] for r in rows],  # event time = seq millis
-        })]
-    )
     # doc 20 (seq 2000) arrives FIRST, watermark still behind both
-    state = FakeEventState(watermark_ms=500)
-    assert list(fn((0, "bk"), batch([(20, 2000)]), state)) == []
-    assert state.timeout_ts == 2000  # armed at earliest undecided
+    out, state = _event_call(fn, None, 500, [(20, 2000)])
+    assert out == []
+    assert armed_timeout(state) == 2000  # armed at earliest undecided
     # doc 10 (seq 1000) arrives SECOND; watermark passes 1000 only
-    state.watermark_ms = 1500
-    out1 = list(fn((0, "bk"), batch([(10, 1000)]), state))[0]
+    (out1,), state = _event_call(fn, state.get, 1500, [(10, 1000)])
     assert list(out1["doc_id"]) == [10]
     assert not out1["is_dup"].iloc[0]  # min seq claims despite late arrival
-    assert state.timeout_ts == 2000
+    assert armed_timeout(state) == 2000
     # timeout fires once the watermark passes seq 2000
-    state.hasTimedOut = True
-    state.watermark_ms = 2500
-    out2 = list(fn((0, "bk"), iter([]), state))[0]
+    (out2,), state = _event_call(fn, state.get, 2500, timed_out=True)
     assert list(out2["doc_id"]) == [20]
     assert bool(out2["is_dup"].iloc[0]) and out2["dup_of"].iloc[0] == 10
     # exemplar state is permanent; pending buffer drained
@@ -391,31 +366,20 @@ def test_event_kernel_ts_equals_watermark_decides():
     case an earlier stale comment claimed stayed pending; the comment
     now matches the code and this test keeps it that way."""
     fn = make_bucket_fn(None, 16, event_time=True)
-    batch = lambda rows: iter(  # noqa: E731
-        [pd.DataFrame({
-            "doc_id": [r[0] for r in rows],
-            "seq": [r[1] for r in rows],
-            "_ts_ms": [r[1] for r in rows],
-        })]
-    )
     # arrival at ts 2000 while wm < 2000: pends, timer at its ts
-    state = FakeEventState(watermark_ms=1999)
-    assert list(fn((0, "bk"), batch([(42, 2000)]), state)) == []
-    assert state.timeout_ts == 2000
+    out, state = _event_call(fn, None, 1999, [(42, 2000)])
+    assert out == [] and armed_timeout(state) == 2000
     # watermark reaches EXACTLY 2000: the row decides
-    state.hasTimedOut = True
-    state.watermark_ms = 2000
-    out = list(fn((0, "bk"), iter([]), state))[0]
+    (out,), state = _event_call(fn, state.get, 2000, timed_out=True)
     assert list(out["doc_id"]) == [42]
     assert not out["is_dup"].iloc[0]
     assert state.get[:2] == (2000, 42) and state.get[2] == []
     # no pending rows and no retention -> no timer re-armed (exemplar
     # state is permanent by default)
-    state.timeout_ts = None
-    state.hasTimedOut = False
-    out2 = list(fn((0, "bk"), batch([(43, 2500)]), state))
+    assert armed_timeout(state) == -1
+    out2, state = _event_call(fn, state.get, 2000, [(43, 2500)])
     # ts 2500 > wm 2000: pends, timer at 2500 (> wm, clamp inert)
-    assert out2 == [] and state.timeout_ts == 2500
+    assert out2 == [] and armed_timeout(state) == 2500
 
 
 def test_event_kernel_retention_forgets_idle_exemplar():
@@ -425,48 +389,34 @@ def test_event_kernel_retention_forgets_idle_exemplar():
     the next claimant is fresh; touches re-arm the horizon; retention
     never races a pending decision."""
     fn = make_bucket_fn(None, 16, event_time=True, horizon_ms=2000)
-    batch = lambda rows: iter(  # noqa: E731
-        [pd.DataFrame({
-            "doc_id": [r[0] for r in rows],
-            "seq": [r[1] for r in rows],
-            "_ts_ms": [r[1] for r in rows],
-        })]
-    )
     # doc 10 @ ts 1000 arrives with wm already past it: decides, claims
-    state = FakeEventState(watermark_ms=1500)
-    out1 = list(fn((0, "bk"), batch([(10, 1000)]), state))[0]
+    (out1,), state = _event_call(fn, None, 1500, [(10, 1000)])
     assert not out1["is_dup"].iloc[0]
     # empty pending buffer + retention -> timer armed at the idle
     # horizon last_ts + retention = 3000
     assert state.get[:2] == (1000, 10) and state.get[5] == 1000
-    assert state.timeout_ts == 3000
+    assert armed_timeout(state) == 3000
 
     # a touch INSIDE the window dups against the exemplar and re-arms
-    state.hasTimedOut = False
-    state.watermark_ms = 2900
-    out2 = list(fn((0, "bk"), batch([(12, 2800)]), state))[0]
+    (out2,), state = _event_call(fn, state.get, 2900, [(12, 2800)])
     assert bool(out2["is_dup"].iloc[0]) and out2["dup_of"].iloc[0] == 10
-    assert state.get[5] == 2800 and state.timeout_ts == 4800
+    assert state.get[5] == 2800 and armed_timeout(state) == 4800
 
     # horizon timeout fires with the bucket idle: exemplar forgotten
-    state.hasTimedOut = True
-    state.watermark_ms = 4800
-    assert list(fn((0, "bk"), iter([]), state)) == []
-    assert state.removed
+    out, state = _event_call(fn, state.get, 4800, timed_out=True)
+    assert out == [] and not state.exists
 
     # post-forget claimant is FRESH (the retention recall trade)
-    fresh = FakeEventState(watermark_ms=6000)
-    out3 = list(fn((0, "bk"), batch([(20, 5500)]), fresh))[0]
+    (out3,), fresh = _event_call(fn, None, 6000, [(20, 5500)])
     assert not out3["is_dup"].iloc[0]
     assert fresh.get[:2] == (5500, 20)
 
     # retention cannot race a pending decision: while rows pend, the
     # timer targets the earliest undecided ts, not the horizon, and the
     # idle branch is unreachable (last_ts >= pending ts > wm)
-    pend_state = FakeEventState(watermark_ms=1000)
-    assert list(fn((0, "bk"), batch([(30, 5000)]), pend_state)) == []
-    assert pend_state.timeout_ts == 5000
-    assert not pend_state.removed and pend_state.get[2] == [5000]
+    out, pend_state = _event_call(fn, None, 1000, [(30, 5000)])
+    assert out == [] and armed_timeout(pend_state) == 5000
+    assert pend_state.exists and pend_state.get[2] == [5000]
 
 
 def test_event_time_stream_matches_batch_under_scrambled_arrival(

@@ -144,12 +144,6 @@ class TestThrottledGc:
         g = pyspark_fastdaemon._ThrottledGc()
         assert g.get_count is gc.get_count
 
-    def test_full_every_env_tunable(self, monkeypatch):
-        monkeypatch.setenv("SPARK_GRAFT_GC_FULL_EVERY", "4")
-        assert pyspark_fastdaemon._ThrottledGc().FULL_EVERY == 4
-        monkeypatch.setenv("SPARK_GRAFT_GC_FULL_EVERY", "bogus")
-        assert pyspark_fastdaemon._ThrottledGc().FULL_EVERY == 16
-
     @staticmethod
     def _fake_gc(monkeypatch, seen, found):
         # records each collection's generation; a full one "finds" the
@@ -171,7 +165,7 @@ class TestThrottledGc:
         seen = []
         self._fake_gc(monkeypatch, seen, [5, 5])
         monkeypatch.setattr(
-            pyspark_fastdaemon, "_rss_bytes", lambda: g._rss_limit + 1
+            pyspark_fastdaemon, "_rss_bytes", lambda: g.RSS_LIMIT + 1
         )
         g.collect()
         g.collect()
@@ -183,12 +177,12 @@ class TestThrottledGc:
         # RSS held up by memory gc cannot free (Arrow buffers): once a full
         # collection finds nothing, tasks go back to gen-1 until the next
         # cadence collection, whose finding re-opens the hatch
-        monkeypatch.setenv("SPARK_GRAFT_GC_FULL_EVERY", "4")
+        monkeypatch.setattr(pyspark_fastdaemon._ThrottledGc, "FULL_EVERY", 4)
         g = pyspark_fastdaemon._ThrottledGc()
         seen = []
         self._fake_gc(monkeypatch, seen, [0, 3, 0])
         monkeypatch.setattr(
-            pyspark_fastdaemon, "_rss_bytes", lambda: g._rss_limit + 1
+            pyspark_fastdaemon, "_rss_bytes", lambda: g.RSS_LIMIT + 1
         )
         for _ in range(6):
             g.collect()

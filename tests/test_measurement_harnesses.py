@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
 from pathlib import Path
 
@@ -24,6 +25,7 @@ from kafka_stream_unify_order_messages_spark.sources.generator import (
 _ROOT = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(_ROOT / "scripts"))
 
+import scaling_ramp  # noqa: E402
 import stream_harness  # noqa: E402
 import streaming_dedup_throughput as dedup  # noqa: E402
 import streaming_latency as lat  # noqa: E402
@@ -238,6 +240,55 @@ def test_report_merges_fresh_records_by_cell_key(tmp_path, monkeypatch):
     stream_harness.main("T", grid, fields, measure, render, ["--report-only"])
     assert json.loads((tmp_path / "T.json").read_text()) == merged
     assert (tmp_path / "T.md").read_text() == "old-a new-b fresh=0"
+
+
+@pytest.mark.parametrize("name", [*sorted(HARNESSES), "SCALING"])
+def test_report_only_reproduces_committed_report(name, tmp_path, monkeypatch):
+    """--report-only renders each committed MD byte for byte from the
+    committed JSON and leaves that JSON byte for byte as it was: the
+    report text lives in its script, never in a hand edit of the
+    generated file that the next real run would revert."""
+    shutil.copy(_ROOT / f"{name}.json", tmp_path)
+    if name == "SCALING":
+        monkeypatch.setattr(scaling_ramp, "_ROOT", tmp_path)
+        scaling_ramp.main(["--report-only"])
+    else:
+        monkeypatch.setattr(stream_harness, "ROOT", tmp_path)
+        h = HARNESSES[name]
+        stream_harness.main(
+            name, h.GRID, h.FIELDS, h.measure, h.render, ["--report-only"]
+        )
+    for suffix in (".md", ".json"):
+        got = (tmp_path / f"{name}{suffix}").read_bytes()
+        assert got == (_ROOT / f"{name}{suffix}").read_bytes(), suffix
+
+
+@pytest.mark.parametrize("kind", ["ivf", "ivfpq"])
+def test_ramp_trained_serve_builds_once(spark, tmp_path, monkeypatch, kind):
+    """The ramp's trained-serve rows build their index through the
+    session cache: once across two calls, so best-of-2 times serving
+    alone, and the second call serves the rows of the fresh build."""
+    from kafka_stream_unify_order_messages_spark.operators import (
+        similarity as S,
+    )
+
+    sf_dir = scaling_ramp.SF_DIRS[0][1]
+    if not Path(sf_dir).exists():
+        pytest.skip(f"{sf_dir} not present")
+    monkeypatch.setattr(scaling_ramp, "_ROOT", tmp_path)
+    builds = []
+    save = getattr(S, f"save_{kind}_index")
+
+    def counted(*args, **kwargs):
+        builds.append(kwargs["n_centroids"])
+        return save(*args, **kwargs)
+
+    monkeypatch.setattr(S, f"save_{kind}_index", counted)
+    serve = scaling_ramp.RAMP_EXTRA[f"{kind}_trained_serve"]
+    fresh = sorted(serve(spark, sf_dir).collect())
+    again = sorted(serve(spark, sf_dir).collect())
+    assert builds == [22]  # sqrt(500 vectors) centroids, built once
+    assert fresh and again == fresh
 
 
 def test_throughput_runner_smoke(spark, state_store):
