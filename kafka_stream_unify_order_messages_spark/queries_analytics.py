@@ -295,7 +295,7 @@ def _aug_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         sh = D._exploded_shingles(
             docs.select("doc_id", "text"), "doc_id", "text", 3
         )
-        hashed = sh.select("doc_id", D._shingle_hash().alias("h"))
+        hashed = sh.select("doc_id", D.shingle_hash(F.col("shingle")).alias("h"))
         offsets = F.when(
             F.col("doc_id") % 5 == 0,
             F.array(F.lit(0), F.lit(1000000), F.lit(2000000)),

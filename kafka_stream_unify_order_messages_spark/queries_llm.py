@@ -627,23 +627,7 @@ WHERE a.doc_id < b.doc_id
 """
 
 
-@query(
-    "minhash_dedup_pairs",
-    f"""
-WITH sig AS ({_SIGNATURE_SQL}),
-bands AS (
-    SELECT doc_id, seed // 4 AS band,
-           md5(string_agg(CAST(minhash AS VARCHAR), ',' ORDER BY seed))
-               AS band_key
-    FROM sig
-    GROUP BY doc_id, seed // 4
-)
-SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-FROM bands a
-JOIN bands b ON a.band = b.band AND a.band_key = b.band_key
-WHERE a.doc_id < b.doc_id
-""",
-)
+@query("minhash_dedup_pairs", _PAIRS_SQL)
 def minhash_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _load(spark, sf_dir, "documents")
     return D.minhash_candidate_pairs(docs, num_hashes=16, bands=4, shingle_n=3)

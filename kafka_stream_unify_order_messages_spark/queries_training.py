@@ -451,8 +451,7 @@ def near_dup_first_wins(spark: SparkSession, sf_dir: str) -> DataFrame:
     # expensive half, and both the bucket-firsts agg and the probe join
     # read it (without the persist the plan runs the scan twice)
     bands = D.minhash_band_keys(
-        D.minhash_signatures_wide(docs, "doc_id", "text", 16, 3),
-        "doc_id", 4, 16,
+        D.minhash_signatures_wide(docs, "doc_id", "text", 16, 3), "doc_id", 4
     ).persist(StorageLevel.MEMORY_AND_DISK)
     firsts = bands.groupBy("band", "band_key").agg(
         F.min("doc_id").alias("first_id")
@@ -474,8 +473,8 @@ def near_dup_first_wins(spark: SparkSession, sf_dir: str) -> DataFrame:
 # LSH false positives the unverified query admits. best_est reports the
 # max estimate vs ANY earlier exemplar, qualifying or not. Scale shape:
 # candidates are (doc, bucket-first) pairs — bounded by band rows, never
-# all pairs — and the verify is a 16-term expression over the persisted
-# wide signatures, not a shingle re-scan.
+# all pairs — and the verify is one signature_agreement over the
+# persisted signature arrays, not a shingle re-scan.
 # ---------------------------------------------------------------------------
 
 
@@ -531,7 +530,7 @@ def near_dup_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     wide = D.minhash_signatures_wide(docs, "doc_id", "text", 16, 3).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    bands = D.minhash_band_keys(wide, "doc_id", 4, 16)
+    bands = D.minhash_band_keys(wide, "doc_id", 4)
     firsts = bands.groupBy("band", "band_key").agg(
         F.min("doc_id").alias("first_id")
     )
@@ -541,21 +540,16 @@ def near_dup_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "first_id")
         .distinct()
     )
-    a = wide.select(
-        F.col("doc_id"), *[F.col(f"mh_{j}").alias(f"a_{j}") for j in range(16)]
-    )
-    b = wide.select(
-        F.col("doc_id").alias("first_id"),
-        *[F.col(f"mh_{j}").alias(f"b_{j}") for j in range(16)],
-    )
-    n_eq = sum(
-        F.when(F.col(f"a_{j}") == F.col(f"b_{j}"), 1).otherwise(0)
-        for j in range(16)
-    )
+    a = wide.select("doc_id", F.col("sig").alias("sig_a"))
+    b = wide.select(F.col("doc_id").alias("first_id"), F.col("sig").alias("sig_b"))
     sim = (
         cand.join(a, "doc_id")
         .join(b, "first_id")
-        .select("doc_id", "first_id", (n_eq / F.lit(16.0)).alias("est"))
+        .select(
+            "doc_id",
+            "first_id",
+            D.signature_agreement(F.col("sig_a"), F.col("sig_b")).alias("est"),
+        )
     )
     agg = sim.groupBy("doc_id").agg(
         F.max("est").alias("best_est"),

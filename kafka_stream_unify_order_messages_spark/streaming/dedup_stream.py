@@ -273,8 +273,8 @@ def _band_rows(
     aggregation, so the plan stays legal in append mode). Rows with a
     null id or seq are dropped first: the bucket decides by them."""
     from kafka_stream_unify_order_messages_spark.operators.dedup import (
-        minhash_band_cols_local,
-        minhash_sig_band_cols_local,
+        band_keys,
+        minhash_signature_local,
     )
 
     base = docs.select(
@@ -282,38 +282,12 @@ def _band_rows(
         F.col(seq_col).cast("long").alias("seq"),
         F.col(text_col).alias("text"),
     ).filter(F.col("doc_id").isNotNull() & F.col("seq").isNotNull())
-    keyed_fn = (
-        minhash_sig_band_cols_local if verified else minhash_band_cols_local
-    )
-    keyed = keyed_fn(
-        base,
-        text_col="text",
-        num_hashes=num_hashes,
-        bands=bands,
-        shingle_n=shingle_n,
+    keyed = minhash_signature_local(
+        base, text_col="text", num_hashes=num_hashes, shingle_n=shingle_n
     )
     carry = ["_sig"] if verified else []
     return keyed.select(
-        "doc_id",
-        "seq",
-        *carry,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).cast("long").alias("band"),
-                        F.col(f"_bk{b}").alias("band_key"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("_bk"),
-    ).select(
-        "doc_id",
-        "seq",
-        *carry,
-        F.col("_bk.band").alias("band"),
-        F.col("_bk.band_key").alias("band_key"),
+        "doc_id", "seq", *carry, F.inline(band_keys(F.col("_sig"), bands))
     )
 
 

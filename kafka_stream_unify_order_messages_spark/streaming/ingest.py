@@ -87,24 +87,24 @@ def screen_stream_near_dups(
     cycle — and each arriving document carries its own keys.
 
     Shape: per-document band keys are pure scan-local expressions
-    (minhash_band_cols_local: no groupBy, legal in append mode), then one
-    stream-static LEFT join per band against that band's distinct bucket
-    set, keeping rows where every probe missed. No streaming aggregation,
-    no watermark requirement, state-free.
+    (``band_keys`` over minhash_signature_local's ``_sig``: no groupBy,
+    legal in append mode), then one stream-static LEFT join per band
+    against that band's distinct bucket set, keeping rows where every
+    probe missed. No streaming aggregation, no watermark requirement,
+    state-free.
 
     ``corpus_band_keys`` must be a static DataFrame with (band, band_key)
     — e.g. minhash_band_keys(minhash_signatures_wide(corpus)) or a
     persisted snapshot table.
     """
     from kafka_stream_unify_order_messages_spark.operators.dedup import (
-        minhash_band_cols_local,
+        band_keys,
+        minhash_signature_local,
     )
 
-    keyed = minhash_band_cols_local(
-        docs, text_col=text_col, num_hashes=num_hashes,
-        bands=bands, shingle_n=shingle_n,
-    )
-    out = keyed
+    out = minhash_signature_local(
+        docs, text_col=text_col, num_hashes=num_hashes, shingle_n=shingle_n
+    ).select(*docs.columns, band_keys(F.col("_sig"), bands).alias("_bks"))
     for b in range(bands):
         bucket = (
             corpus_band_keys.filter(F.col("band") == b)
@@ -112,7 +112,7 @@ def screen_stream_near_dups(
             .distinct()  # static side: safe, and prevents row fan-out
         )
         out = out.join(
-            bucket, on=out[f"_bk{b}"] == bucket[f"_cbk{b}"], how="left"
+            bucket, on=out["_bks"][b]["band_key"] == bucket[f"_cbk{b}"], how="left"
         )
     miss_all = None
     for b in range(bands):

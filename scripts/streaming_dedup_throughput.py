@@ -299,7 +299,9 @@ def render(records: list[dict], fresh: list[dict]) -> str:
         "# STREAMING_DEDUP — measured streaming near-dup dedup throughput",
         "",
         "End-to-end through the real streaming path (file source ->",
-        "scan-local MinHash band keys -> stateful shuffle ->",
+        "scan-local MinHash signature and band keys,",
+        "`operators/dedup.py:minhash_signature_local` + `band_keys` ->",
+        "stateful shuffle ->",
         "`applyInPandasWithState` first-wins bucket state -> memory sink),",
         "local[32], 16 hashes x 4 bands, 60-word synthetic documents with a",
         "designed 10% duplicate rate (streaming/dedup_stream.py; semantics",

@@ -142,21 +142,42 @@ def test_near_dup_incremental_screens_by_band_collision(spark):
 
 
 def test_scan_local_band_keys_match_aggregated_path(spark):
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    wide = {
-        (r["doc_id"], r["band"], r["band_key"])
-        for r in D.minhash_band_keys(D.minhash_signatures_wide(docs)).collect()
-    }
-    local = {
-        (r["doc_id"], r["band"], r["band_key"])
-        for r in D.minhash_band_keys_local(docs).collect()
-    }
-    assert wide == local
-    cols = D.minhash_band_cols_local(docs)
-    got = {
-        (r["doc_id"], b, r[f"_bk{b}"]) for r in cols.collect() for b in range(4)
-    }
-    assert got == wide
+    """The batch aggregate signature and the scan-local one are the same
+    array, and so give the same band keys — on sf0.001 and on a frame of
+    degenerate texts (null, empty, whitespace-only, 1- and 2-token docs,
+    repeated shingles) that the shingler maps to one "" shingle or to
+    duplicate shingles."""
+    import pyspark.sql.functions as F
+
+    edge = spark.createDataFrame(
+        [
+            (1, None),
+            (2, ""),
+            (3, "  \t \n "),
+            (4, "solo"),
+            (5, "two words"),
+            (6, "a b c a b c a b c"),
+            (7, "x " * 50),
+        ],
+        "doc_id long, text string",
+    )
+    sf = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    for docs in (sf, edge):
+        wide = D.minhash_signatures_wide(docs)
+        local = D.minhash_signature_local(docs).select("doc_id", "_sig")
+        sigs = {r["doc_id"]: list(r["sig"]) for r in wide.collect()}
+        assert sigs == {r["doc_id"]: list(r["_sig"]) for r in local.collect()}
+        assert len(sigs) == docs.count()
+        batch_keys = set(map(tuple, D.minhash_band_keys(wide).collect()))
+        local_bands = local.select(
+            "doc_id", F.inline(D.band_keys(F.col("_sig"), 4))
+        )
+        # verified-mode stream checkpoints hold a non-nullable band_key
+        # state key; Spark rejects a nullable one on restart
+        assert not local_bands.schema["band_key"].nullable
+        local_keys = set(map(tuple, local_bands.collect()))
+        assert batch_keys == local_keys
+        assert len(batch_keys) == 4 * len(sigs)
 
 
 def test_blocked_fuzzy_pairs_semantics(spark):

@@ -36,8 +36,7 @@ def _expected_verdicts(spark, fed_rows):
     dup_of = the smallest such exemplar id."""
     df = spark.createDataFrame(fed_rows, SCHEMA)
     bands = D.minhash_band_keys(
-        D.minhash_signatures_wide(df, "doc_id", "text", 16, 3),
-        "doc_id", 4, 16,
+        D.minhash_signatures_wide(df, "doc_id", "text", 16, 3), "doc_id", 4
     ).join(df.select("doc_id", "seq"), "doc_id")
     firsts = bands.groupBy("band", "band_key").agg(
         F.min(F.struct("seq", "doc_id")).alias("first")
@@ -246,7 +245,7 @@ def test_verified_stream_matches_batch_and_filters_false_positives(
     # batch re-derivation: bucket firsts by seq, est vs exemplar, >= 0.5
     df = spark.createDataFrame(fed, SCHEMA)
     wide = D.minhash_signatures_wide(df, "doc_id", "text", 16, 3)
-    bands = D.minhash_band_keys(wide, "doc_id", 4, 16).join(
+    bands = D.minhash_band_keys(wide, "doc_id", 4).join(
         df.select("doc_id", "seq"), "doc_id"
     )
     firsts = bands.groupBy("band", "band_key").agg(
@@ -258,17 +257,11 @@ def test_verified_stream_matches_batch_and_filters_false_positives(
         .select("doc_id", "seq", F.col("first.doc_id").alias("first_id"))
         .distinct()
     )
-    a = wide.select("doc_id", *[F.col(f"mh_{j}").alias(f"a_{j}") for j in range(16)])
-    b = wide.select(
-        F.col("doc_id").alias("first_id"),
-        *[F.col(f"mh_{j}").alias(f"b_{j}") for j in range(16)],
-    )
-    n_eq = sum(
-        F.when(F.col(f"a_{j}") == F.col(f"b_{j}"), 1).otherwise(0)
-        for j in range(16)
-    )
+    a = wide.select("doc_id", F.col("sig").alias("sig_a"))
+    b = wide.select(F.col("doc_id").alias("first_id"), F.col("sig").alias("sig_b"))
+    est = D.signature_agreement(F.col("sig_a"), F.col("sig_b"))
     sim = cand.join(a, "doc_id").join(b, "first_id").select(
-        "doc_id", "seq", "first_id", (n_eq / F.lit(16.0)).alias("est")
+        "doc_id", "seq", "first_id", est.alias("est")
     )
     agg = sim.groupBy("doc_id", "seq").agg(
         F.max("est").alias("best_est"),
@@ -606,7 +599,7 @@ def test_verified_event_time_stream_under_scrambled_arrival(
     # ALL rows (arrival-independent), est vs exemplar, dup iff >= 0.5
     df = spark.createDataFrame(all_rows, SCHEMA)
     wide = D.minhash_signatures_wide(df, "doc_id", "text", 16, 3)
-    bands = D.minhash_band_keys(wide, "doc_id", 4, 16).join(
+    bands = D.minhash_band_keys(wide, "doc_id", 4).join(
         df.select("doc_id", "seq"), "doc_id"
     )
     firsts = bands.groupBy("band", "band_key").agg(
@@ -618,19 +611,11 @@ def test_verified_event_time_stream_under_scrambled_arrival(
         .select("doc_id", "seq", F.col("first.doc_id").alias("first_id"))
         .distinct()
     )
-    a = wide.select(
-        "doc_id", *[F.col(f"mh_{j}").alias(f"a_{j}") for j in range(16)]
-    )
-    b = wide.select(
-        F.col("doc_id").alias("first_id"),
-        *[F.col(f"mh_{j}").alias(f"b_{j}") for j in range(16)],
-    )
-    n_eq = sum(
-        F.when(F.col(f"a_{j}") == F.col(f"b_{j}"), 1).otherwise(0)
-        for j in range(16)
-    )
+    a = wide.select("doc_id", F.col("sig").alias("sig_a"))
+    b = wide.select(F.col("doc_id").alias("first_id"), F.col("sig").alias("sig_b"))
+    est = D.signature_agreement(F.col("sig_a"), F.col("sig_b"))
     sim = cand.join(a, "doc_id").join(b, "first_id").select(
-        "doc_id", "seq", "first_id", (n_eq / F.lit(16.0)).alias("est")
+        "doc_id", "seq", "first_id", est.alias("est")
     )
     agg = sim.groupBy("doc_id", "seq").agg(
         F.max("est").alias("best_est"),

@@ -88,7 +88,7 @@ def test_screen_stream_near_dups_vs_static_history(spark, tmp_path):
     )
     corpus_bands = D.minhash_band_keys(
         D.minhash_signatures_wide(history, num_hashes=16, shingle_n=2),
-        bands=8, num_hashes=16,
+        bands=8,
     )
 
     src = tmp_path / "in"
